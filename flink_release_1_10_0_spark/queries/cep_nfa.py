@@ -531,8 +531,7 @@ def flink_sql_match_recognize(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # SQL-text variant of ALL ROWS PER MATCH: CLASSIFIER()/MATCH_NUMBER()
@@ -562,8 +561,7 @@ def flink_sql_match_recognize_all_rows(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_ALL_TEXT,
-        batch_df=t(spark, sf_dir, "events").select("event_id", "value"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -631,8 +629,7 @@ def flink_sql_mr_define_last_nav(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_NAV_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -695,8 +692,7 @@ def flink_sql_mr_prev_ascending(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_PREV_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -751,8 +747,7 @@ def flink_sql_mr_tumble_outer(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_TUMBLE_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -816,8 +811,7 @@ def flink_sql_mr_nav_all_rows(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_NAV_ALL_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -903,8 +897,7 @@ def flink_sql_mr_vshape_canonical(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_VSHAPE_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -960,8 +953,7 @@ def flink_sql_mr_composite_partition(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_COMPOSITE_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1087,8 +1079,7 @@ def flink_sql_mr_measures_expression(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_MEASURE_EXPR_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1150,8 +1141,7 @@ def flink_sql_mr_nav_offset_measures(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_NAV_OFFSET_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1211,8 +1201,7 @@ def flink_sql_mr_within_interval(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_WITHIN_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1275,8 +1264,7 @@ def flink_sql_mr_skip_past_last(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_SKIP_PAST_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1577,8 +1565,7 @@ def flink_sql_mr_subset_union(spark, sf_dir):
 
     return execute_match_recognize_sql(
         spark, _SQL_MR_SUBSET_TEXT,
-        batch_df=t(spark, sf_dir, "events"),
-        stream_df=read_stream_table(spark, sf_dir, "events"))
+        batch_df=t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------

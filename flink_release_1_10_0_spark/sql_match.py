@@ -73,7 +73,6 @@ from __future__ import annotations
 
 import itertools
 import re
-import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -468,39 +467,6 @@ def _compile_define(spec: MatchSpec) -> tuple[dict[str, str], dict]:
     return sql_define, nav
 
 
-def _bounded_stream(df: DataFrame, keys: list[str] | None = None,
-                    ts_col: str = "ts",
-                    id_col: str = "event_id") -> DataFrame:
-    """Replay a bounded table as a micro-stream (one ordered part file —
-    the NFA's event-time-ordered arrival contract).
-
-    When ``keys`` is given, one end-of-stream sentinel row per key is
-    appended (``nfa.with_eos_sentinels``) — the final +inf watermark of
-    a bounded reference job, which flushes pending runs so a satisfied
-    trailing-greedy match at the end of the replay emits instead of
-    being silently dropped (SQL:2016 batch semantics).
-
-    SCALE CONTRACT: this is the bounded VERIFY harness only — the
-    ``coalesce(1)`` funnels the whole input through one task to
-    guarantee globally ordered arrival, which is exactly right for
-    oracle replays and exactly wrong for large inputs.  Production
-    callers must pass ``stream_df`` to
-    :func:`execute_match_recognize_sql` (a real keyed stream — Kafka,
-    file-monitor, rate source); the NFA itself partitions by key and
-    scales, only this replay helper is single-task.  A user-supplied
-    ``stream_df`` gets NO sentinel (a continuous stream has no end):
-    tail matches still pending when such a replay ends follow the NFA's
-    unbounded contract (see ``streaming/nfa.py`` scope notes)."""
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
-
-    spark = df.sparkSession
-    if keys:
-        df = with_eos_sentinels(df, keys, ts_col=ts_col, id_col=id_col)
-    src = tempfile.mkdtemp(prefix=f"sqlmatch_src_{next(_counter)}_")
-    df.coalesce(1).write.mode("append").parquet(src)
-    return spark.readStream.schema(df.schema).parquet(src)
-
-
 def execute_match_recognize_sql(spark: SparkSession, query: str,
                                 batch_df: DataFrame | None = None,
                                 stream_df: DataFrame | None = None,
@@ -508,9 +474,14 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     """Parse + run a statement containing MATCH_RECOGNIZE; returns the
     result of the FULL statement (outer projection included).
 
-    ``batch_df`` overrides the FROM-table resolution (otherwise
-    ``spark.table(name)``); ``stream_df`` overrides the micro-stream
-    replay (callers that already have a streaming frame)."""
+    The clause runs over ``batch_df`` (otherwise ``spark.table(name)``)
+    as ONE keyed batch query: ``match_nfa`` takes its batch route and
+    flushes every partition at the end of its rows, the final +inf
+    watermark of a bounded reference job.  ``stream_df`` is for real
+    streams (Kafka, file-monitor, rate source): the NFA then runs as a
+    streaming query to completion, and a stream has no end, so tail
+    runs still pending when it stops stay unflushed.  MEASURES always
+    read ``batch_df``."""
     from flink_release_1_10_0_spark.streaming.cep import (
         compile_match_pattern, match_recognize_measures)
     from flink_release_1_10_0_spark.streaming.core import run_to_completion
@@ -543,7 +514,7 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
                 "second occurrence")
     # ANCHORS ^ / $ (SQL:2016 partition start/end; the reference calls
     # them streaming-meaningless and refuses, match_recognize.md:1113 —
-    # a BOUNDED replay has a well-defined partition start/end, so they
+    # a BOUNDED input has a well-defined partition start/end, so they
     # are supported HERE for the batch path only): parsed off the
     # pattern ends now, enforced as a post-filter on the match log
     # (match start == the partition's first event / match end == its
@@ -561,7 +532,7 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     spec.pattern = p
     if (anchor_start or anchor_end) and stream_df is not None:
         raise NotImplementedError(
-            "anchors (^/$) need a BOUNDED replay: partition start/end "
+            "anchors (^/$) need a BOUNDED input: partition start/end "
             "is undecidable on a user-supplied stream (the reference "
             "refuses anchors entirely for the same reason)")
     if anchor_end and spec.after_match != "skip_to_next_row":
@@ -606,7 +577,7 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     # LAST row mapped to the match, usable as the rowtime of subsequent
     # windows/joins.  Compiled with zero new grammar: MAX(ts) over a
     # synthetic SUBSET spanning every pattern variable (= all mapped
-    # rows).  MATCH_PROCTIME() refuses: a replayed batch has no
+    # rows).  MATCH_PROCTIME() refuses: a bounded batch has no
     # processing-time attribute to return.
     _mrt_vars = None
     for name, expr in list(spec.measures.items()):
@@ -620,27 +591,9 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
                 spec.subsets[_mrt_vars] = list(spec.define)
             spec.measures[name] = f"MAX({_mrt_vars}.{spec.order_by[0]})"
     batch = batch_df if batch_df is not None else spark.table(spec.table)
-    if stream_df is not None:
-        stream = stream_df
-    else:
-        # project the replay write down to the columns the NFA can
-        # reference (guide §2.3 "project before the exchange", here
-        # before the coalesce(1) replay write): keys, order columns,
-        # the id, and any input column whose name appears in a DEFINE
-        # condition or ORDER BY expression (a word-match superset —
-        # never drops a referenced column; an unreferenced payload
-        # column like a document body never pays the write+stream
-        # round trip).  MEASURES read the BATCH side, not the stream.
-        needed = {*spec.partition_by, spec.order_by[0], id_col}
-        texts = list(spec.define.values()) + list(spec.order_by[1:])
-        for c in batch.columns:
-            if c not in needed and any(
-                    re.search(rf"\b{re.escape(c)}\b", t) for t in texts):
-                needed.add(c)
-        stream = _bounded_stream(
-            batch.select([c for c in batch.columns if c in needed]),
-            keys=spec.partition_by, ts_col=spec.order_by[0],
-            id_col=id_col)
+    # match_nfa projects to the columns it reads before the keyed
+    # shuffle, so the payload never crosses into the NFA
+    stream = stream_df if stream_df is not None else batch
     define, nav = _compile_define(spec)
     alternation = _expand_alternation(spec.pattern)
     stages = (None if alternation
@@ -665,13 +618,14 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     from flink_release_1_10_0_spark.streaming.cep import _parse_after_match
 
     def _run_one(branch_stages, measure_vars=None, drop_match_no=False):
-        log = run_to_completion(
-            match_nfa(stream, branch_stages,
-                      within_minutes=spec.within_minutes,
-                      key=spec.partition_by,
-                      after_match=_parse_after_match(spec.after_match),
-                      ts_col=spec.order_by[0], id_col=id_col,
-                      order_tiebreakers=tiebreakers), "append")
+        log = match_nfa(stream, branch_stages,
+                        within_minutes=spec.within_minutes,
+                        key=spec.partition_by,
+                        after_match=_parse_after_match(spec.after_match),
+                        ts_col=spec.order_by[0], id_col=id_col,
+                        order_tiebreakers=tiebreakers)
+        if log.isStreaming:
+            log = run_to_completion(log, "append")
         if anchor_start or anchor_end:
             # anchor filter on the match LOG, before measures: the
             # per-key partition bounds frame is tiny — broadcast it

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,16 +52,21 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink;
-    returns the collected sink as a batch DataFrame."""
+    returns the collected sink as a batch DataFrame.  The checkpoint
+    dir is removed once the query has terminated: the memory sink holds
+    the result, and a finished bounded run is never resumed."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    q = (result.writeStream
-         .format("memory")
-         .queryName(qname)
-         .outputMode(output_mode)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    try:
+        q = (result.writeStream
+             .format("memory")
+             .queryName(qname)
+             .outputMode(output_mode)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname)

@@ -1,5 +1,6 @@
-"""General CEP NFA over ``applyInPandasWithState`` — arbitrary-length
-pattern sequences with quantifiers, or-conditions, until, greedy, and
+"""General CEP NFA over ``applyInPandasWithState`` (streaming input) or
+a keyed ``applyInPandas`` (bounded input) — arbitrary-length pattern
+sequences with quantifiers, or-conditions, until, greedy, and
 mid-pattern negation.
 
 Reference semantics: ``flink-libraries/flink-cep/.../pattern/
@@ -75,8 +76,8 @@ oneOrMore):
   *closes* — on an ``until`` event, bounded saturation, a strict-inner
   violation, the within-window expiring on the run (the window closing
   IS a closing condition: nothing can extend the run anymore, so the
-  consumed maximum emits as a NORMAL match, not a timeout), or an
-  end-of-stream sentinel (bounded replays; see ``with_eos_sentinels``).
+  consumed maximum emits as a NORMAL match, not a timeout), or the
+  end of a bounded input (see ``EOS_SENTINEL_ID``).
   This is the SQL-quantifier tier (``PATTERN (A B+)`` compiles greedy):
   SQL:2016 greedy quantifiers produce the single maximal match.
 - a trailing NON-greedy ``optional`` emits both the short and the long
@@ -116,14 +117,15 @@ Scope notes (documented narrowings vs the reference):
   closing condition; the non-greedy forms above are the
   reference-faithful alternative.
 - window expiry has two drivers: same-key event-time advance (always
-  on; plus the EOS sentinel for bounded replays), and — with
+  on; plus the end-of-input flush of bounded inputs), and — with
   ``match_nfa(..., watermark_timers=...)`` — real cross-key event-time
   timers (``GroupStateTimeout.EventTimeTimeout``), so a key that goes
   silent forever still flushes its satisfied trailing-greedy maximal
   match when the GLOBAL watermark passes its window, the reference's
   ``CepOperator.java:82`` onEventTime semantics.  Timers require a
-  ``within`` window and a streaming source; bounded replays keep the
-  sentinel (batch has no watermark clock).
+  ``within`` window and a streaming source; a bounded (batch) input is
+  one keyed batch query whose end of input flushes every key, the
+  final +inf watermark of a bounded reference job.
 - at end-of-stream, a HELD skip-strategy match still blocked by an
   older UNSATISFIED partial run is discarded, exactly like the
   reference's bounded-job close (the completedMatches queue is never
@@ -157,10 +159,11 @@ MAX_RUNS_PER_KEY = 512
 # announced format break, not a surprise.
 NFA_STATE_FORMAT_VERSION = 4
 
-# End-of-stream sentinel id for BOUNDED replays: a row whose id equals
-# this value (appended by ``with_eos_sentinels``, sorted last per key by
-# its timestamp) flushes the key's pending runs — the analog of the
-# final +inf watermark a bounded reference job emits.  Satisfied
+# End-of-stream sentinel id for BOUNDED inputs: a row whose id equals
+# this value flushes the key's pending runs — the analog of the final
+# +inf watermark a bounded reference job emits.  The batch route
+# appends one per key group itself (``_bounded_group_fn``); a bounded
+# table replayed as a stream gets them from ``with_eos_sentinels``.  Satisfied
 # trailing-greedy runs emit as NORMAL matches (their maximal consumed
 # prefix is decided: nothing follows); other partials go to the timeout
 # output when ``emit_timeouts`` is on, else are dropped.  The sentinel
@@ -423,11 +426,20 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
               order_tiebreakers: list[str] | None = None,
               emit_timeouts: bool = False,
               watermark_timers: str | None = None) -> DataFrame:
-    """Run the NFA over a keyed event stream.
+    """Run the NFA over a keyed event stream or a bounded table.
 
-    Returns an append stream: one row per completed match with the
-    consumed event ids / stage indexes (``ev_ids``/``ev_stages``) plus
-    scalar start/end columns for oracle-friendly projection.
+    Returns one row per completed match with the consumed event ids /
+    stage indexes (``ev_ids``/``ev_stages``) plus scalar start/end
+    columns for oracle-friendly projection.
+
+    The route follows ``events.isStreaming``.  A streaming input runs
+    through ``applyInPandasWithState`` and returns an append stream.  A
+    batch input is bounded by definition: it runs the same state
+    function once per key group through ``groupBy(key).applyInPandas``
+    and returns a lazy batch frame; the end of each group flushes the
+    key's pending runs (the final +inf watermark of a bounded reference
+    job), so satisfied trailing-greedy runs emit and held skip-strategy
+    matches resolve.
 
     ``key`` is one column name or a list — composite partition keys
     (e.g. ``(tenant, symbol)``) shuffle and run exactly like single
@@ -467,8 +479,7 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
     ``within_minutes`` (only a window makes a silent run decidable) and
     a streaming source; ``withWatermark(ts_col, watermark_timers)`` is
     applied here.  Without it, expiry is driven by same-key event-time
-    advance only (plus the EOS sentinel on bounded replays) — the
-    right mode for batch replays, where there is no cross-key clock.
+    advance only (plus the end-of-input flush of a bounded input).
 
     ``after_match`` is ``no_skip``, ``skip_to_next``,
     ``skip_past_last``, or a tuple
@@ -515,6 +526,11 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                          "a window a silent key's pending runs are "
                          "undecidable (no event can be ruled out)")
     timer_mode = watermark_timers is not None
+    if timer_mode and not events.isStreaming:
+        raise NotImplementedError(
+            "watermark_timers needs a streaming source: a bounded input "
+            "has no watermark clock, and its end of input already "
+            "flushes every key")
 
     # navigation bookkeeping (MatchCodeGenerator.scala's IterativeCondition
     # analog): which per-run closures refine which stages, which (var, col)
@@ -1531,6 +1547,14 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
 
     if os.environ.get("SPARK_GRAFT_NFA_PROFILE"):
         fn = _profile_wrap(fn, os.environ["SPARK_GRAFT_NFA_PROFILE"])
+    if not events.isStreaming:
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DataType
+        empty = (to_arrow_schema(DataType.fromDDL(out_schema))
+                 .empty_table().to_pandas())
+        return (tagged.groupBy(*keys)
+                .applyInPandas(_bounded_group_fn(fn, id_col, empty),
+                               out_schema))
     if timer_mode:
         return (tagged.withWatermark(ts_col, watermark_timers)
                 .groupBy(*keys)
@@ -1542,11 +1566,41 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                                     "append", GroupStateTimeout.NoTimeout))
 
 
+class _BoundedGroupState:
+    """GroupState stand-in for the batch route: a key's whole group
+    arrives in one call, so there is no prior state, nothing to persist
+    and no timer (``NoTimeout`` only)."""
+    exists = False
+
+    def update(self, _value) -> None:
+        pass
+
+    def remove(self) -> None:
+        pass
+
+
+def _bounded_group_fn(fn, id_col: str, empty: pd.DataFrame):
+    """Adapt the NFA state function to ``applyInPandas``: feed the key's
+    whole group, then one end-of-stream row (a copy of a group row with
+    ``id = EOS_SENTINEL_ID``, so every column keeps its dtype) as its own
+    final chunk — the bounded job's +inf watermark.  A key without
+    matches returns ``empty``, a zero-row frame typed like the output
+    schema (Arrow cannot cast an untyped float64 column to a timestamp
+    or array)."""
+    def run(key_, pdf):
+        eos = pdf.iloc[-1:].copy()
+        eos[id_col] = EOS_SENTINEL_ID
+        frames = list(fn(key_, iter((pdf, eos)), _BoundedGroupState()))
+        return pd.concat(frames, ignore_index=True) if frames else empty
+    return run
+
+
 def _profile_wrap(fn, out_dir: str):
     """Diagnostics only (SPARK_GRAFT_NFA_PROFILE=<dir>): accumulate a
     per-worker cProfile of the NFA state function and snapshot it to
     ``<dir>/nfa_<pid>.prof`` every few keys — the UDF perf profiler does
-    not cover applyInPandasWithState.  Inert unless the env var is set."""
+    not cover applyInPandasWithState.  Wraps the state function itself,
+    so both routes profile.  Inert unless the env var is set."""
     holder: list = [None, 0]    # [Profile, call count] — created in the
                                 # worker (a Profile object cannot pickle)
 
@@ -1571,10 +1625,12 @@ def with_eos_sentinels(df: DataFrame, key: str | list[str],
                        ts_col: str = "ts",
                        id_col: str = "event_id") -> DataFrame:
     """Append one end-of-stream sentinel row per key to a BOUNDED batch
-    frame before replaying it through :func:`match_nfa` — the analog of
-    the final +inf watermark a bounded reference job emits, which is
-    what flushes pending runs (satisfied trailing-greedy matches emit,
-    other partials time out; see ``EOS_SENTINEL_ID``).
+    frame before replaying it as a STREAM through :func:`match_nfa` —
+    the analog of the final +inf watermark a bounded reference job
+    emits, which is what flushes pending runs (satisfied trailing-greedy
+    matches emit, other partials time out; see ``EOS_SENTINEL_ID``).  A
+    batch frame passed to :func:`match_nfa` directly needs none: the
+    batch route flushes each key at the end of its group.
 
     The sentinel carries ``id = EOS_SENTINEL_ID``, ``ts = max(ts) + 1
     day`` for its key (so it sorts strictly last), and NULL in every

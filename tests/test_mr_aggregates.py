@@ -25,10 +25,10 @@ def _events(spark, rows):
 
 
 def _run(spark, df, sql):
-    # batch path: execute_match_recognize_sql replays through
-    # _bounded_stream, which appends the per-key EOS sentinel (the
-    # bounded job's final watermark) — held skip-strategy matches and
-    # trailing-greedy runs flush at end-of-stream
+    # batch path: execute_match_recognize_sql runs one keyed batch
+    # query that flushes each key at the end of its group (the bounded
+    # job's final watermark) — held skip-strategy matches and
+    # trailing-greedy runs flush at end of input
     from flink_release_1_10_0_spark.sql_match import (
         execute_match_recognize_sql)
     return execute_match_recognize_sql(spark, sql, batch_df=df)

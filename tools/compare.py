@@ -2,7 +2,11 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row count + column names + order-insensitive values.
 
-Usage: python tools/compare.py [sf_dir] [query_name ...]
+Usage: python tools/compare.py [sf_dir] [query_name | @cep ...]
+
+``@cep`` names the CEP family: every head registered in
+``queries/cep_nfa.py`` plus the CEP and MATCH_RECOGNIZE heads of
+``queries/streaming.py`` (the gate for any NFA change).
 """
 
 from __future__ import annotations
@@ -79,11 +83,27 @@ def rows_key(cols, rows):
     return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
+def cep_family(qs) -> set[str]:
+    """Heads of the CEP family (see the module docstring)."""
+    pkg = "flink_release_1_10_0_spark.queries."
+    return {name for name, fn in qs.items()
+            if fn.__module__ == pkg + "cep_nfa"
+            or (fn.__module__ == pkg + "streaming"
+                and ("_cep_" in name or "match_recognize" in name))}
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = get_spark()
     qs, oracles = all_queries(), all_oracles()
+    only = set()
+    for arg in sys.argv[2:]:
+        if arg == "@cep":
+            family = cep_family(qs)
+            print(f"@cep: {len(family)} heads")
+            only |= family
+        else:
+            only.add(arg)
+    spark = get_spark()
     con = duckdb.connect()
     for name in TABLES:
         p = os.path.join(sf_dir, f"{name}.parquet")
