@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_release_1_10_0_spark.session import session_memo
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -69,10 +71,9 @@ def register_tables(spark: SparkSession, sf_dir: str,
 # index and re-reads the parquet footer on EVERY call (measured 90-150ms
 # of pure driver gap per call; a bench run makes ~170 such calls).  The
 # memoized value is an analyzed scan PLAN, not data: every action against
-# it still reads the parquet inputs through the normal scan path.  Keyed
-# on the JVM session identity (the same convention as the planning-probe
-# memo in llm/text.py), so a new session never sees a stale entry.
-_LOAD_MEMO: dict = {}
+# it still reads the parquet inputs through the normal scan path.  The
+# memo is per session (``session.session_memo``), so a new session never
+# sees a stale entry.
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -83,12 +84,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microsecond
     timestamps — matching DuckDB's nanos->micros truncation.
     """
-    key = None
-    try:
-        key = (id(spark._jsparkSession), os.path.realpath(sf_dir), name)
-    except Exception:
-        pass        # non-classic session shape: no memo
-    df = _LOAD_MEMO.get(key) if key is not None else None
+    memo = session_memo(spark, "catalog.load")
+    key = (os.path.realpath(sf_dir), name)
+    df = memo.get(key) if memo is not None else None
     if df is not None:
         return df
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -97,8 +95,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_event_time(spark.read.parquet(path))
     else:
         df = spark.read.parquet(path)
-    if key is not None:
-        if len(_LOAD_MEMO) > 256:   # bound driver memory across sessions
-            _LOAD_MEMO.clear()
-        _LOAD_MEMO[key] = df
+    if memo is not None:
+        if len(memo) > 256:         # bound driver memory
+            memo.clear()
+        memo[key] = df
     return df

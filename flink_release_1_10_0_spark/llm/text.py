@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_release_1_10_0_spark.session import session_memo
+
 #: canonical tokenizer (Spark SQL expression over a column name)
 def words_expr(col: str = "text") -> str:
     return (f"filter(split(regexp_replace(lower({col}), '[^a-z0-9 ]', ' '), ' +'), "
@@ -49,16 +51,16 @@ def hash128_expr(s: str, method: str = "md5") -> str:
             f"'h2', cast(conv(substr(md5({s}), 17, 15), 16, 10) as bigint))")
 
 
-# planned-partition-count memo for ensure_min_parallelism, keyed on
-# (session, canonicalized-plan semantic hash).  The count is a PLAN
-# PROPERTY (like Catalyst's own file-listing cache), not a query result:
+# planned-partition-count memo for ensure_min_parallelism, per session
+# (``session.session_memo``) and keyed on the canonicalized plan's
+# semantic hash.  The count is a PLAN PROPERTY (like Catalyst's own
+# file-listing cache), not a query result:
 # every bench/oracle run still computes from the parquet inputs.  It
 # exists because df.rdd.getNumPartitions() forces a full physical plan
 # + RDD conversion per call, and the helper sits at several NESTED
 # operator entries (semantic_index -> kmeans_train both check the same
 # scan) — r10 verdict item 6 measured this planning pass as pure
 # driver-gap on exactly the sequential-job-bound heads.
-_EMP_MEMO: dict = {}
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
@@ -79,20 +81,20 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     nested entries plan the same frame once."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
+    memo = session_memo(df.sparkSession, "llm.min_parallelism")
     key = None
-    try:
-        key = (id(df.sparkSession._jsparkSession),
-               target,
-               df._jdf.queryExecution().logical().semanticHash())
-    except Exception:
-        pass        # non-JVM frame shape: fall through, no memo
-    n = _EMP_MEMO.get(key) if key is not None else None
+    if memo is not None:
+        try:
+            key = (target, df._jdf.queryExecution().logical().semanticHash())
+        except Exception:
+            pass    # non-JVM frame shape: fall through, no memo
+    n = memo.get(key) if key is not None else None
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
-            if len(_EMP_MEMO) > 4096:     # bound driver memory
-                _EMP_MEMO.clear()
-            _EMP_MEMO[key] = n
+            if len(memo) > 4096:          # bound driver memory
+                memo.clear()
+            memo[key] = n
     if n < target:
         return df.repartition(target)
     return df

@@ -23,6 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _release_local_checkpoint(df: DataFrame) -> None:
+    """Free a superseded ``localCheckpoint`` now instead of at the next
+    ContextCleaner pass.  ``DataFrame.unpersist()`` only touches the
+    cache manager; the checkpointed blocks belong to the persisted RDD
+    under the frame's ``LogicalRDD``."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-vertex in/out/total degree (Graph.java inDegrees/outDegrees)."""
     out_d = edges.groupBy(F.col(src).alias("id")).agg(
@@ -51,7 +59,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     of the O(V) label vector rather than hundreds of shuffles of the
     edge list (the same round bound as the MapReduce large-star/
     small-star construction).  Lineage is truncated with a local
-    checkpoint every 4 rounds.
+    checkpoint every round, and the previous round's checkpoint is
+    released once the new one exists.
     """
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -60,6 +69,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
               .withColumn("component", F.col("id")))
     sym = sym.persist()
     labels = labels.persist()
+    ckpt = None         # the checkpoint `labels` projects, if any
     for step in range(max_iterations):
         neighbor_min = (sym.join(labels, sym.b == labels.id)
                         .groupBy(F.col("a").alias("id"))
@@ -93,7 +103,11 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         new_labels = new_labels.localCheckpoint(eager=True)
         changed = (new_labels.filter(F.expr("component <> __old"))
                    .limit(1).count())
-        labels.unpersist()
+        if ckpt is None:
+            labels.unpersist()
+        else:
+            _release_local_checkpoint(ckpt)
+        ckpt = new_labels
         labels = new_labels.select("id", "component")
         if changed == 0:
             break

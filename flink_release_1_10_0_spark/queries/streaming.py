@@ -13,6 +13,31 @@ from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import MONEY, t
 from flink_release_1_10_0_spark.streaming.core import read_stream_table, run_to_completion
 from flink_release_1_10_0_spark.streaming import stateful
+from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+
+def _first_then(m):
+    """A two-stage match log as (first, then) event pairs."""
+    return m.select("user_id", F.col("start_id").alias("first_id"),
+                    F.col("end_id").alias("then_id"),
+                    F.col("start_ts").alias("first_ts"),
+                    F.col("end_ts").alias("then_ts"))
+
+
+def _greedy_run_then(spark, sf_dir, m):
+    """One row per ``A+ B`` match of a greedy loop: B, the number of As,
+    and the first and last A's time (the last A is the match's
+    next-to-last event, looked up in the events table)."""
+    last_a = t(spark, sf_dir, "events").select(
+        F.col("event_id").alias("last_a"), F.col("ts").alias("last_ts"))
+    return (run_to_completion(m, "append")
+            .withColumn("last_a", F.element_at("ev_ids", -2))
+            .join(last_a, "last_a")
+            .select("user_id", F.col("end_id").alias("then_id"),
+                    F.col("end_ts").alias("then_ts"),
+                    (F.col("n_events") - 1).cast("bigint").alias("n_first"),
+                    F.col("start_ts").alias("first_ts"), "last_ts"))
+
 
 # --------------------------------------------------------------------------
 # Streaming tumbling-window aggregate, complete mode
@@ -118,8 +143,8 @@ SELECT user_id, first_id, then_id, first_ts, then_ts FROM cand WHERE rn = 1
 @register("stream_cep_error_then_purchase", _STREAM_CEP_ORACLE)
 def stream_cep_error_then_purchase(spark, sf_dir):
     ev = read_stream_table(spark, sf_dir, "events")
-    matched = stateful.cep_followed_by(ev, "error", "purchase", within_minutes=30)
-    return run_to_completion(matched, "append")
+    m = Pattern.begin("error").followed_by("purchase").within(30).match_stream(ev)
+    return run_to_completion(_first_then(m), "append")
 
 
 # --------------------------------------------------------------------------
@@ -364,7 +389,8 @@ def stream_temporal_join(spark, sf_dir):
 # (Pattern.java oneOrMore/greedy); matched errors are consumed
 # (AFTER MATCH SKIP PAST LAST ROW), so each error can belong to at most
 # one match — equivalently, each error is assigned to the FIRST purchase
-# that follows it within the window.
+# that follows it within the window.  The greedy loop keeps the longest
+# in-window run, and skip_past_last drops the runs begun inside it.
 # --------------------------------------------------------------------------
 _STREAM_CEP_OOM_ORACLE = """
 WITH assign AS (
@@ -385,9 +411,10 @@ GROUP BY user_id, b_id, b_ts
 @register("stream_cep_one_or_more", _STREAM_CEP_OOM_ORACLE)
 def stream_cep_one_or_more(spark, sf_dir):
     ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
-        stateful.cep_one_or_more(ev, "error", "purchase", within_minutes=30),
-        "append")
+    m = (Pattern.begin("error").one_or_more().greedy()
+         .followed_by("purchase").within(30)
+         .match_stream(ev, after_match="skip_past_last"))
+    return _greedy_run_then(spark, sf_dir, m)
 
 
 # --------------------------------------------------------------------------
@@ -607,8 +634,13 @@ FROM pos WHERE p % 3 = 0
 @register("stream_cep_times_consecutive", _STREAM_CEP_TIMES_ORACLE)
 def stream_cep_times_consecutive(spark, sf_dir):
     ev = read_stream_table(spark, sf_dir, "events")
+    m = (Pattern.begin("click").times(3).consecutive()
+         .match_stream(ev, after_match="skip_past_last"))
     return run_to_completion(
-        stateful.cep_times_consecutive(ev, "click", n=3), "append")
+        m.select("user_id", F.col("end_id").alias("last_id"),
+                 F.col("end_ts").alias("last_ts"),
+                 F.col("n_events").cast("bigint").alias("run_n")),
+        "append")
 
 
 # --------------------------------------------------------------------------
@@ -712,10 +744,12 @@ FROM seq WHERE pt = 'error' AND event_type = 'purchase'
 
 @register("stream_cep_next_strict", _STREAM_CEP_NEXT_ORACLE)
 def stream_cep_next_strict(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import Pattern
     ev = read_stream_table(spark, sf_dir, "events")
+    m = Pattern.begin("error").next("purchase").match_stream(ev)
     return run_to_completion(
-        Pattern.begin("error").next("purchase").match_stream(ev), "append")
+        m.select("user_id", F.col("start_id").alias("a_id"),
+                 F.col("end_id").alias("b_id"), F.col("end_ts").alias("b_ts")),
+        "append")
 
 
 # --------------------------------------------------------------------------
@@ -735,18 +769,19 @@ FROM events a JOIN events b
 
 @register("stream_cep_followed_by_any", _STREAM_CEP_ANY_ORACLE)
 def stream_cep_followed_by_any(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import Pattern
     ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
-        Pattern.begin("error").followed_by_any("purchase").within(30)
-        .match_stream(ev), "append")
+    m = (Pattern.begin("error").followed_by_any("purchase").within(30)
+         .match_stream(ev))
+    return run_to_completion(_first_then(m), "append")
 
 
 # --------------------------------------------------------------------------
 # CEP optional middle stage: begin(error).followedBy(click).optional()
 # .followedBy(purchase).within(30): each error matches its first
 # in-window purchase, annotated with whether a click fell strictly
-# between the two (Pattern.java optional()).
+# between the two (Pattern.java optional()).  The NFA emits both the
+# 2-event and the 3-event match per error; the earliest end is the first
+# purchase, and a 3-event match ending there carries the click.
 # --------------------------------------------------------------------------
 _STREAM_CEP_OPT_ORACLE = """
 WITH a AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'error'),
@@ -768,11 +803,19 @@ FROM cand WHERE rn = 1
 
 @register("stream_cep_optional_middle", _STREAM_CEP_OPT_ORACLE)
 def stream_cep_optional_middle(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import Pattern
     ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
+    m = run_to_completion(
         Pattern.begin("error").followed_by("click").optional()
         .followed_by("purchase").within(30).match_stream(ev), "append")
+    ends = (m.groupBy("user_id", "start_id", "start_ts", "end_ts", "end_id")
+            .agg(F.max(F.col("n_events") == 3).alias("had_opt")))
+    first = (ends.groupBy("user_id", "start_id", "start_ts")
+             .agg(F.min(F.struct("end_ts", "end_id", "had_opt")).alias("e")))
+    return first.select("user_id", F.col("start_id").alias("first_id"),
+                        F.col("e.end_id").alias("then_id"),
+                        F.col("start_ts").alias("first_ts"),
+                        F.col("e.end_ts").alias("then_ts"),
+                        F.col("e.had_opt").alias("had_opt"))
 
 
 # --------------------------------------------------------------------------
@@ -823,14 +866,14 @@ SELECT user_id, first_id, then_id, first_ts, then_ts FROM cand WHERE rn = 1
 
 @register("stream_match_recognize_define", _STREAM_MR_ORACLE)
 def stream_match_recognize_define(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import Pattern, match_recognize
+    from flink_release_1_10_0_spark.streaming.cep import match_recognize
     ev = read_stream_table(spark, sf_dir, "events")
     out = match_recognize(
         ev, "user_id",
         define={"H": "event_type = 'click' AND value >= 75",
                 "P": "event_type = 'purchase'"},
         pattern=Pattern.begin("H").followed_by("P").within(30))
-    return run_to_completion(out, "append")
+    return run_to_completion(_first_then(out), "append")
 
 
 # --------------------------------------------------------------------------
@@ -962,11 +1005,11 @@ FROM st WHERE matched
 
 @register("stream_cep_times_or_more", _STREAM_CEP_TOM_ORACLE)
 def stream_cep_times_or_more(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import Pattern
     ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
-        Pattern.begin("click").times_or_more(2).followed_by("purchase")
-        .within(1440).match_stream(ev), "append")
+    m = (Pattern.begin("click").times_or_more(2).greedy()
+         .followed_by("purchase").within(1440)
+         .match_stream(ev, after_match="skip_past_last"))
+    return _greedy_run_then(spark, sf_dir, m)
 
 
 # --------------------------------------------------------------------------

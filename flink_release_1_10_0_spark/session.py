@@ -24,6 +24,31 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Driver-side memos, one dict per (session, name), keyed on the JVM
+# session's UUID.  A UUID is never reused, so a session built after
+# stop() cannot be served an entry of the stopped one (``id()`` of the
+# py4j proxy can be recycled).  Only the newest few sessions keep their
+# memos: a stopped session's entries are dropped once later sessions
+# take its place.
+_SESSION_MEMOS: dict[str, dict[str, dict]] = {}
+_MAX_MEMO_SESSIONS = 4
+
+
+def session_memo(spark: SparkSession, name: str) -> dict | None:
+    """The memo dict ``name`` of ``spark``'s session, or None when the
+    session has no JVM handle (no memo then).  Callers cache plans and
+    registrations here, never query results."""
+    try:
+        sid = spark._jsparkSession.sessionUUID()
+    except Exception:
+        return None
+    memos = _SESSION_MEMOS.get(sid)
+    if memos is None:
+        while len(_SESSION_MEMOS) >= _MAX_MEMO_SESSIONS:
+            del _SESSION_MEMOS[next(iter(_SESSION_MEMOS))]
+        memos = _SESSION_MEMOS[sid] = {}
+    return memos.setdefault(name, {})
+
 
 def get_spark(app_name: str = "flink_release_1_10_0_spark",
               cpus: int | None = None) -> SparkSession:

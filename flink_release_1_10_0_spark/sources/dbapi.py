@@ -42,6 +42,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from flink_release_1_10_0_spark.session import session_memo
+
 
 def _connect(url: str, read_only: bool = False):
     import sqlite3
@@ -264,21 +266,17 @@ class DbapiDataSource(DataSource):
         return _DbapiWriter(self.options, schema)
 
 
-# sessions (by JVM session id) that already registered the format:
-# DataSourceRegistration pickles the class and round-trips py4j per
-# call, and every query invocation re-registered it (~driver-gap on
-# the dbapi/queryable heads; r10 verdict item 5)
-_REGISTERED: set = set()
-
-
 def register_dbapi_source(spark) -> None:
-    """Idempotent registration of the ``flink_jdbc`` format (memoized
-    per session)."""
-    key = id(spark._jsparkSession)
-    if key in _REGISTERED:
+    """Idempotent registration of the ``flink_jdbc`` format, memoized
+    per session: DataSourceRegistration pickles the class and
+    round-trips py4j per call, and every query invocation re-registered
+    it (~driver-gap on the dbapi/queryable heads; r10 verdict item 5)."""
+    memo = session_memo(spark, "dbapi.registered")
+    if memo:
         return
     spark.dataSource.register(DbapiDataSource)
-    _REGISTERED.add(key)
+    if memo is not None:
+        memo["flink_jdbc"] = True
 
 
 def create_table(url: str, ddl: str) -> None:

@@ -1,44 +1,51 @@
 """CEP pattern API (``flink-libraries/flink-cep/.../pattern/
-Pattern.java:50-542`` subset) compiling to the stateful NFA operators in
-``streaming/stateful.py``.
+Pattern.java:50-542``) compiled onto the generic NFA in
+``streaming/nfa.py``: one engine, as the reference's ``NFACompiler``
+feeds one ``NFA.java:85`` inside ``CepOperator.java:82``.
 
-Supported pattern shapes (the MATCH_RECOGNIZE core):
+Every pattern gets the reference semantics and one output schema (see
+``nfa.match_nfa``: key, ``start_id``/``end_id``, ``start_ts``/``end_ts``,
+``n_events``, ``ev_ids``/``ev_stages``).  With the default
+``after_match="no_skip"`` every match emits when it completes:
 
-- ``Pattern.begin(A).followed_by(B).within(T)`` — each A matches its
-  first B inside the window; matched As are consumed.
-- ``Pattern.begin(A).next(B)`` — strict contiguity: B must be the
-  immediately following event of its key.
-- ``Pattern.begin(A).followed_by_any(B).within(T)`` — every in-window
-  (A, B) pair matches; no consumption (SKIP TO NEXT).
-- ``Pattern.begin(A).one_or_more().followed_by(B).within(T)`` — greedy:
-  all pending As inside the window form one match with B.
-- ``Pattern.begin(A).times(n).consecutive()`` — n consecutive As with no
-  intervening event; SKIP PAST LAST ROW.
-- ``Pattern.begin(A).times_or_more(n).followed_by(B).within(T)`` — B
-  completes a greedy match only when >= n pending As are in its window;
-  consumption happens only on success.
-- ``Pattern.begin(A).not_followed_by(B).within(T)`` — absence inside the
-  window, decided on watermark.
-- ``Pattern.begin(A).followed_by(B).optional().followed_by(C).within(T)``
-  — three-stage with optional middle; matches annotate whether B
-  occurred between A and C.
+- ``begin(A).followed_by(B).within(T)`` — each A's run takes its first
+  B inside the window (relaxed contiguity, SKIP_TILL_NEXT).
+- ``begin(A).next(B)`` — strict contiguity: B must be the key's very
+  next event.
+- ``begin(A).followed_by_any(B).within(T)`` — every in-window (A, B)
+  pair (SKIP_TILL_ANY).
+- ``begin(A).one_or_more().followed_by(B).within(T)`` — a run starts
+  at every A, and a non-greedy loop also emits each stop-early prefix:
+  ``a1 a2 b`` yields ``a1 b``, ``a1 a2 b`` and ``a2 b``.
+- ``begin(A).times(n).consecutive()`` — every run of n adjacent As,
+  overlapping.
+- ``begin(A).followed_by(B).optional().followed_by(C).within(T)`` —
+  both the ``A C`` and the ``A B C`` match.
+- ``begin(A).not_followed_by(B).within(T)`` — absence inside the
+  window, decided on watermark (``stateful.cep_not_followed_by``: a
+  timer emission, the one shape that does not run on the NFA).
 
-``where`` conditions are event-type predicates (the keyed-stream layout
-the reference's CepOperator runs on); richer per-event predicates can be
-pushed as filters before ``match_stream``.
+Matches consume their events through the skip strategy, not through a
+different operator: ``.greedy()`` on the loop plus
+``match_stream(..., after_match="skip_past_last")`` emits one maximal
+match per closing event and discards every run that began inside it.
+``begin(A).one_or_more().greedy().followed_by(B).within(T)`` then
+yields one row per B holding all pending in-window As, and
+``times(n).consecutive()`` yields non-overlapping runs of n.
 
-Beyond the dedicated-operator shapes above, every other combination
-compiles onto the generic NFA (``streaming/nfa.py``) with the
-reference's full edge set: arbitrary-length sequences, times(n)/
-times(from, to) quantifiers, consecutive()/allow_combinations() INNER
-loop strategies (the entry seam keeps the sequencing verb's
-contiguity), leading optionals, group patterns
-(``begin_pattern``/``followed_by_pattern``/``next_pattern``) both
-unrolled (``times=n``) and QUANTIFIED (``group_optional``/
-``group_one_or_more``/``group_times``/``group_times_or_more`` — NFA
-group loop-back edges, GroupPattern.java:30), after-match skip
-strategies, and — with ``match_stream(..., emit_timeouts=True)`` —
-the timed-out-partial-match side output.
+``where`` conditions are arbitrary row predicates ANDed onto the
+stage's event type (``or_`` ORs alternatives); navigation and
+aggregates (``LAST(a.value)``) compile to per-run closures.  The NFA
+also takes arbitrary-length sequences, times(n)/times(from, to)
+quantifiers, consecutive()/allow_combinations() INNER loop strategies
+(the entry seam keeps the sequencing verb's contiguity), leading
+optionals, group patterns (``begin_pattern``/``followed_by_pattern``/
+``next_pattern``) both unrolled (``times=n``) and QUANTIFIED
+(``group_optional``/``group_one_or_more``/``group_times``/
+``group_times_or_more`` — NFA group loop-back edges,
+GroupPattern.java:30), every after-match skip strategy, and — with
+``match_stream(..., emit_timeouts=True)`` — the timed-out-partial-match
+side output.
 """
 
 from __future__ import annotations
@@ -81,8 +88,10 @@ class _Stage:
         return base
 
     def flags(self) -> set[str]:
-        """Names of the non-default knobs set on this stage — dispatch
-        refuses to route to an operator that would drop any of them."""
+        """Names of the non-default knobs set on this stage.
+        ``match_stream`` reads them to recognise the bare two-stage
+        ``not_followed_by`` shape (no knob but the negation), the one
+        pattern that does not run on the NFA."""
         out = set()
         for f_ in ("one_or_more", "negated", "strict", "any_match",
                    "optional", "or_more", "consecutive", "greedy",
@@ -448,109 +457,57 @@ class Pattern:
                      after_match: str = "no_skip",
                      emit_timeouts: bool = False,
                      watermark_timers: str | None = None) -> DataFrame:
-        """Compile to a stateful NFA operator; returns the match stream.
+        """Compile to the generic NFA (``nfa.match_nfa``); returns the
+        match stream, or a batch frame when ``events`` is bounded.
 
-        Shapes that exactly match one of the dedicated operators in
-        ``streaming/stateful.py`` dispatch there (their consumption
-        semantics mirror specific reference operators); every other
-        combination compiles to the generic NFA (``streaming/nfa.py``).
-        Dispatch verifies that the chosen operator consumes EVERY flag
-        set on every stage — a flag the target cannot honor routes to
-        the generic engine instead of being silently dropped, and
-        genuinely unsupported shapes raise ``NotImplementedError``
-        (never silently-wrong results).
+        Every shape has the reference semantics and ``match_nfa``'s
+        output schema; shapes the NFA cannot run raise
+        ``NotImplementedError`` (never silently-wrong results).  The one
+        exception is the two-stage trailing ``not_followed_by``, which
+        runs on ``stateful.cep_not_followed_by`` because its match is a
+        watermark timeout.  ``after_match`` is the reference's
+        ``AfterMatchSkipStrategy``: ``"skip_past_last"`` with a
+        ``.greedy()`` loop consumes matched events (one maximal match
+        per closing event).
 
         ``emit_timeouts=True`` is the ``PatternStream.flatSelect(
         timeoutTag, ...)`` surface: the output gains a ``timed_out``
         boolean column, and window-expired partial matches are emitted
         with it set (``TimedOutPartialMatchHandler.java``).  Requires
-        ``within(...)``; always routes to the generic NFA (the
-        dedicated operators have no timeout output).
+        ``within(...)``.
 
         ``watermark_timers`` (a watermark delay string) arms cross-key
         event-time timers so a key that goes silent still flushes when
         the GLOBAL watermark passes its window — the reference's
-        ``CepOperator.onEventTime``.  Requires ``within(...)``; always
-        routes to the generic NFA (see ``nfa.match_nfa``).
+        ``CepOperator.onEventTime``.  Requires ``within(...)`` and a
+        streaming source (see ``nfa.match_nfa``).
         """
         from flink_release_1_10_0_spark.streaming import stateful
+        from flink_release_1_10_0_spark.streaming.nfa import match_nfa
 
         st = self.stages
-        flags = [s.flags() for s in st]
         w = self.within_minutes
-        if watermark_timers is not None:
-            if any(s.negated for s in st):
-                raise NotImplementedError(
-                    "watermark_timers with negation stages: route "
-                    "absence patterns to stateful.cep_not_followed_by "
-                    "(its timeout IS the match)")
-            from flink_release_1_10_0_spark.streaming.nfa import match_nfa
-            return match_nfa(events, self._compile_nfa_stages(),
-                             within_minutes=w, key=key,
-                             after_match=after_match,
-                             emit_timeouts=emit_timeouts,
-                             watermark_timers=watermark_timers)
-        if self.groups and not emit_timeouts:
-            # quantified group patterns always run on the generic NFA
-            # (the dedicated operators have no group-iteration state)
-            from flink_release_1_10_0_spark.streaming.nfa import match_nfa
-            return match_nfa(events, self._compile_nfa_stages(),
-                             within_minutes=w, key=key,
-                             after_match=after_match)
-        if emit_timeouts:
-            if any(s.negated for s in st):
-                raise NotImplementedError(
-                    "emit_timeouts with negation stages: an absence "
-                    "pattern's timeout IS its match (see "
-                    "stateful.cep_not_followed_by)")
-            from flink_release_1_10_0_spark.streaming.nfa import match_nfa
-            return match_nfa(events, self._compile_nfa_stages(),
-                             within_minutes=w, key=key,
-                             after_match=after_match, emit_timeouts=True)
-
-        # --- exact legacy shapes (flag sets fully consumed) ------------
-        if len(st) == 1 and flags[0] == {"times_n", "consecutive"}:
-            return stateful.cep_times_consecutive(
-                events, st[0].event_type, n=st[0].times_n, key=key)
-        if len(st) == 2 and after_match == "no_skip":
-            a, b = st
-            if flags[0] == set() and flags[1] == {"strict"} and w is None:
-                return stateful.cep_next(events, a.event_type, b.event_type,
-                                         key=key)
-            if w is not None and flags[0] == set():
-                if flags[1] == {"negated"}:
-                    return stateful.cep_not_followed_by(
-                        events, a.event_type, b.event_type, w, key=key)
-                if flags[1] == {"any_match"}:
-                    return stateful.cep_followed_by_any(
-                        events, a.event_type, b.event_type, w, key=key)
-                if flags[1] == set():
-                    return stateful.cep_followed_by(
-                        events, a.event_type, b.event_type, w, key=key)
-            if w is not None and flags[1] == set():
-                if flags[0] == {"times_n", "or_more"}:
-                    return stateful.cep_times_or_more(
-                        events, a.event_type, b.event_type, a.times_n, w,
-                        key=key)
-                if flags[0] == {"one_or_more"}:
-                    return stateful.cep_one_or_more(
-                        events, a.event_type, b.event_type, w, key=key)
-        if (len(st) == 3 and after_match == "no_skip" and w is not None
-                and flags[0] == set() and flags[1] == {"optional"}
-                and flags[2] == set()):
-            return stateful.cep_optional_between(
-                events, st[0].event_type, st[1].event_type, st[2].event_type,
-                w, key=key)
-
-        # --- everything else: the generic NFA --------------------------
-        if any(s.negated for s in st[:-1]) or not st[-1].negated:
-            from flink_release_1_10_0_spark.streaming.nfa import match_nfa
-            return match_nfa(events, self._compile_nfa_stages(),
-                             within_minutes=w, key=key,
-                             after_match=after_match)
-        raise NotImplementedError(
-            "trailing notFollowedBy beyond the two-stage shape needs "
-            "watermark timers (see stateful.cep_not_followed_by)")
+        if any(s.negated for s in st) and (
+                emit_timeouts or watermark_timers is not None):
+            raise NotImplementedError(
+                "timeouts/watermark_timers with negation stages: an "
+                "absence pattern's timeout IS its match (see "
+                "stateful.cep_not_followed_by)")
+        if st[-1].negated:
+            # a trailing absence matches when the watermark closes A's
+            # window with no B: a timer emission, not an NFA transition
+            if (len(st) == 2 and not st[0].flags()
+                    and st[1].flags() == {"negated"} and w is not None
+                    and after_match == "no_skip"):
+                return stateful.cep_not_followed_by(
+                    events, st[0].event_type, st[1].event_type, w, key=key)
+            raise NotImplementedError(
+                "trailing notFollowedBy beyond the two-stage shape needs "
+                "watermark timers (see stateful.cep_not_followed_by)")
+        return match_nfa(events, self._compile_nfa_stages(),
+                         within_minutes=w, key=key, after_match=after_match,
+                         emit_timeouts=emit_timeouts,
+                         watermark_timers=watermark_timers)
 
 
 _PATTERN_TOKEN = __import__("re").compile(
@@ -1110,8 +1067,7 @@ def match_recognize(events: DataFrame, partition_by: str,
     run); rows matching no variable keep a symbol that matches no stage,
     so they still break strict (``next``) contiguity, exactly like
     MATCH_RECOGNIZE's unmatched-row semantics.  The symbol column then
-    drives the same stateful NFA operators as the event-type patterns —
-    no separate engine.
+    drives the same NFA as the event-type patterns.
 
     ``pattern`` stages must name DEFINE variables.  Returns the match
     stream of the compiled pattern.

@@ -7,9 +7,6 @@ These are the reference operators with NO declarative Spark equivalent
   DeduplicateKeepLastRowFunction.java:34`` — one latest row per key.
 - streaming top-N:  ``runtime/operators/rank/AppendOnlyTopNFunction.java:46``
   — maintain the N best rows per key as events arrive.
-- CEP A-followed-by-B: ``flink-libraries/flink-cep/.../nfa/NFA.java:85`` /
-  ``CepOperator.java:82`` — a 2-state NFA (begin A -> followedBy B,
-  within T), the core MATCH_RECOGNIZE pattern shape.
 
 State is a compact per-key summary (the current winner set / pending
 partial matches), never the full history — the same bounded-state
@@ -113,57 +110,6 @@ def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFra
     return (_prune(events, [key, "event_id", "value"]).groupBy(key)
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "update", GroupStateTimeout.NoTimeout))
-
-
-def cep_followed_by(events: DataFrame, first_type: str, then_type: str,
-                    within_minutes: float, key: str = "user_id") -> DataFrame:
-    """CEP pattern ``begin(A).followedBy(B).within(T)`` per key
-    (Pattern.java:50-542 subset): each A matches the first B with
-    ``A.ts < B.ts <= A.ts + T``; a B can close multiple pending As
-    (allowCombinations semantics); matched As are discarded
-    (AFTER MATCH SKIP PAST A)."""
-    out_schema = "user_id bigint, first_id bigint, then_id bigint, first_ts timestamp, then_ts timestamp"
-    state_schema = "pending_ids array<bigint>, pending_us array<bigint>"
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pids, pus = state.get
-            pending = list(zip(list(pids), list(pus)))  # (event_id, ts_micros)
-        else:
-            pending = []
-        matches = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == first_type:
-                    # prune on A arrivals too: an expired A can never match
-                    # a later B (event-time order), so state stays bounded
-                    # by the window even when no B's flow
-                    pending = [(aid, aus) for (aid, aus) in pending
-                               if ts_us - aus <= within_us]
-                    pending.append((eid, ts_us))
-                elif et == then_type:
-                    still = []
-                    for (aid, aus) in pending:
-                        if 0 < ts_us - aus <= within_us:
-                            matches.append((key_[0], aid, eid, aus, ts_us))
-                        elif ts_us - aus <= 0:
-                            still.append((aid, aus))  # same-instant A: not expired
-                    pending = still
-        state.update(([p[0] for p in pending], [p[1] for p in pending]))
-        if matches:
-            yield pd.DataFrame({
-                "user_id": [m[0] for m in matches],
-                "first_id": [m[1] for m in matches],
-                "then_id": [m[2] for m in matches],
-                "first_ts": pd.to_datetime([m[3] for m in matches], unit="us"),
-                "then_ts": pd.to_datetime([m[4] for m in matches], unit="us")})
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
 
 
 def count_tumble_window(events: DataFrame, n: int = 10,
@@ -310,51 +256,6 @@ def temporal_join(events: DataFrame, build_type: str, probe_type: str,
     return (_prune(events, [key, "ts", "event_id", "event_type", "value"])
             .filter(F.col("event_type").isin(build_type, probe_type))
             .groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_one_or_more(events: DataFrame, first_type: str, then_type: str,
-                    within_minutes: float, key: str = "user_id") -> DataFrame:
-    """CEP ``begin(A).oneOrMore().followedBy(B).within(T)``
-    (``Pattern.java`` oneOrMore/greedy + NFA SHARED_BUFFER semantics,
-    scoped to the greedy match): when a B arrives, all pending A's within
-    the window form ONE greedy match — emitted with the count of A's and
-    the first/last A timestamps; matched A's are consumed
-    (AFTER MATCH SKIP PAST LAST ROW).
-    """
-    out_schema = ("user_id bigint, then_id bigint, then_ts timestamp, "
-                  "n_first bigint, first_ts timestamp, last_ts timestamp")
-    state_schema = "pend_us array<bigint>"
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        pending = sorted(state.get[0]) if state.exists else []  # A ts_us asc
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == first_type:
-                    # window-bounded state even with no B traffic
-                    pending = [a for a in pending if ts_us - a <= within_us]
-                    pending.append(ts_us)
-                elif et == then_type:
-                    pending = [a for a in pending if ts_us - a <= within_us]
-                    in_win = [a for a in pending if 0 < ts_us - a <= within_us]
-                    if in_win:
-                        out.append((key_[0], eid, ts_us, len(in_win),
-                                    min(in_win), max(in_win)))
-                        pending = [a for a in pending if not (0 < ts_us - a <= within_us)]
-        state.update((pending,))
-        if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "then_id", "then_ts", "n_first", "first_ts", "last_ts"])
-            for c in ("then_ts", "first_ts", "last_ts"):
-                df[c] = pd.to_datetime(df[c], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "append", GroupStateTimeout.NoTimeout))
 
@@ -583,194 +484,6 @@ def over_rows_bounded(events: DataFrame, frame: int = 5,
                                     "append", GroupStateTimeout.NoTimeout))
 
 
-def cep_times_consecutive(events: DataFrame, event_type: str = "click",
-                          n: int = 3, key: str = "user_id") -> DataFrame:
-    """CEP quantifier ``begin(A).times(n).consecutive()`` with
-    AFTER MATCH SKIP PAST LAST ROW (``Pattern.java`` times/consecutive;
-    match-skip ``flink-libraries/flink-cep/.../nfa/aftermatch/``): emit a
-    match when ``n`` consecutive A-type events arrive for a key with no
-    intervening other-type event; the run counter resets on a match (so
-    runs of length L yield floor(L/n) non-overlapping matches) and on any
-    non-A event.  State = one integer per key."""
-    out_schema = "user_id bigint, last_id bigint, last_ts timestamp, run_n bigint"
-    state_schema = "run bigint"
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        run = state.get[0] if state.exists else 0
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == event_type:
-                    run += 1
-                    if run == n:
-                        out.append((key_[0], eid, ts_us, n))
-                        run = 0
-                else:
-                    run = 0
-        state.update((run,))
-        if out:
-            df = pd.DataFrame(out, columns=["user_id", "last_id", "last_ts", "run_n"])
-            df["last_ts"] = pd.to_datetime(df["last_ts"], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_next(events: DataFrame, first_type: str, then_type: str,
-             key: str = "user_id") -> DataFrame:
-    """CEP strict contiguity ``begin(A).next(B)`` (``Pattern.java``
-    next(): an NFA TAKE edge with no ignore self-loop): B matches only as
-    the IMMEDIATELY following event of its key after an A — any
-    intervening event of any type kills the partial match.  State = the
-    previous event (type, id) per key; O(1) regardless of rate."""
-    out_schema = "user_id bigint, a_id bigint, b_id bigint, b_ts timestamp"
-    state_schema = "prev_type string, prev_id bigint"
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        prev_type, prev_id = state.get if state.exists else (None, None)
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == then_type and prev_type == first_type:
-                    out.append((key_[0], int(prev_id), eid, ts_us))
-                prev_type, prev_id = et, eid
-        state.update((prev_type, prev_id))
-        if out:
-            df = pd.DataFrame(out, columns=["user_id", "a_id", "b_id", "b_ts"])
-            df["b_ts"] = pd.to_datetime(df["b_ts"], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_followed_by_any(events: DataFrame, first_type: str, then_type: str,
-                        within_minutes: float, key: str = "user_id") -> DataFrame:
-    """CEP ``begin(A).followedByAny(B).within(T)`` with AFTER MATCH SKIP
-    TO NEXT (no consumption): every in-window (A, B) pair is a match —
-    the NFA keeps all partial runs alive (``followedByAny`` relaxed
-    contiguity for non-deterministic runs).  State = in-window A's only;
-    every arrival (A or B) prunes expired A's, so state is bounded by
-    the window, not the history — including on B-starved keys."""
-    out_schema = ("user_id bigint, first_id bigint, then_id bigint, "
-                  "first_ts timestamp, then_ts timestamp")
-    state_schema = "pending_ids array<bigint>, pending_us array<bigint>"
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pids, pus = state.get
-            pending = list(zip(list(pids), list(pus)))
-        else:
-            pending = []
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == first_type:
-                    # prune on A arrivals too (not only under B traffic):
-                    # expired A's can never match later — state stays
-                    # window-bounded on B-starved keys
-                    pending = [(aid, aus) for (aid, aus) in pending
-                               if ts_us - aus <= within_us]
-                    pending.append((eid, ts_us))
-                elif et == then_type:
-                    pending = [(aid, aus) for (aid, aus) in pending
-                               if ts_us - aus <= within_us]
-                    for (aid, aus) in pending:
-                        if 0 < ts_us - aus:
-                            out.append((key_[0], aid, eid, aus, ts_us))
-        state.update(([p[0] for p in pending], [p[1] for p in pending]))
-        if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "first_id", "then_id", "first_ts", "then_ts"])
-            df["first_ts"] = pd.to_datetime(df["first_ts"], unit="us")
-            df["then_ts"] = pd.to_datetime(df["then_ts"], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_optional_between(events: DataFrame, first_type: str, opt_type: str,
-                         last_type: str, within_minutes: float,
-                         key: str = "user_id") -> DataFrame:
-    """CEP three-stage sequence with an optional middle stage:
-    ``begin(A).followedBy(B).optional().followedBy(C).within(T)``
-    (``Pattern.java`` optional()): each C closes all pending in-window
-    A's (one match per A, AFTER MATCH SKIP PAST A), annotated with
-    whether a B occurred strictly between the A and the C.  State =
-    pending A's + in-window B timestamps (both pruned by the window)."""
-    out_schema = ("user_id bigint, first_id bigint, then_id bigint, "
-                  "first_ts timestamp, then_ts timestamp, had_opt boolean")
-    state_schema = ("pending_ids array<bigint>, pending_us array<bigint>, "
-                    "opt_us array<bigint>")
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pids, pus, ous = state.get
-            pending = list(zip(list(pids), list(pus)))
-            opts = list(ous)
-        else:
-            pending, opts = [], []
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == first_type:
-                    pending = [(aid, aus) for (aid, aus) in pending
-                               if ts_us - aus <= within_us]
-                    pending.append((eid, ts_us))
-                elif et == opt_type:
-                    opts.append(ts_us)
-                    opts = [o for o in opts if ts_us - o <= within_us]
-                elif et == last_type:
-                    opts = [o for o in opts if ts_us - o <= within_us]
-                    still = []
-                    for (aid, aus) in pending:
-                        if 0 < ts_us - aus <= within_us:
-                            had = any(aus < o < ts_us for o in opts)
-                            out.append((key_[0], aid, eid, aus, ts_us, had))
-                        elif ts_us - aus <= 0:
-                            # same-instant A: not yet matchable, keep; an
-                            # EXPIRED A is dropped — it can never match
-                            # again (event-time order), keeping it would
-                            # grow state without bound
-                            still.append((aid, aus))
-                    pending = still
-        state.update(([p[0] for p in pending], [p[1] for p in pending], opts))
-        if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "first_id", "then_id", "first_ts", "then_ts",
-                "had_opt"])
-            df["first_ts"] = pd.to_datetime(df["first_ts"], unit="us")
-            df["then_ts"] = pd.to_datetime(df["then_ts"], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
 def updatable_topn(events: DataFrame, n: int = 3,
                    key: str = "event_type",
                    id_col: str = "user_id") -> DataFrame:
@@ -887,62 +600,6 @@ def over_range_bounded(events: DataFrame, preceding_minutes: float = 5,
             yield df
 
     return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_times_or_more(events: DataFrame, first_type: str, then_type: str,
-                      n_min: int, within_minutes: float,
-                      key: str = "user_id") -> DataFrame:
-    """CEP ``begin(A).timesOrMore(n).followedBy(B).within(T)``
-    (``Pattern.java`` timesOrMore): a B completes a greedy match only if
-    at least ``n`` pending A's lie inside its window; on success all
-    in-window A's are consumed (AFTER MATCH SKIP PAST LAST ROW), on
-    failure nothing is consumed — the A's stay pending for a later B.
-
-    State stays bounded: expired A's (older than any future B's window,
-    since event time is processed in order) are pruned at each B.
-
-    The oracle insight (used by the DuckDB side): because a successful B
-    consumes exactly the A's older than itself and in-window, and
-    expired A's can never re-enter a later window, the full pending-set
-    evolution collapses to ONE value per key — the last successful B's
-    timestamp; an A is eligible for B_k iff ``b_k.ts - T <= a.ts <
-    b_k.ts`` and ``a.ts >= last_successful_b.ts``.
-    """
-    out_schema = ("user_id bigint, then_id bigint, then_ts timestamp, "
-                  "n_first bigint, first_ts timestamp, last_ts timestamp")
-    state_schema = "pend_us array<bigint>"
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        pending = sorted(state.get[0]) if state.exists else []
-        out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                      _i64(pdf, "event_id"), _ts_us(pdf)):
-                if et == first_type:
-                    pending = [a for a in pending if ts_us - a <= within_us]
-                    pending.append(ts_us)
-                elif et == then_type:
-                    pending = [a for a in pending if ts_us - a <= within_us]
-                    in_win = [a for a in pending if 0 < ts_us - a]
-                    if len(in_win) >= n_min:
-                        out.append((key_[0], eid, ts_us, len(in_win),
-                                    min(in_win), max(in_win)))
-                        pending = [a for a in pending if a >= ts_us]
-        state.update((pending,))
-        if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "then_id", "then_ts", "n_first", "first_ts", "last_ts"])
-            for c in ("then_ts", "first_ts", "last_ts"):
-                df[c] = pd.to_datetime(df[c], unit="us")
-            yield df
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"]).groupBy(key)
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "append", GroupStateTimeout.NoTimeout))
 

@@ -190,6 +190,39 @@ def test_run_to_completion_leaves_no_checkpoint_dirs(spark, tmp_path):
     assert n_ckpt() == before
 
 
+def test_bounded_pattern_match_stream_is_one_batch_query(spark, tmp_path,
+                                                         monkeypatch):
+    """Pattern.match_stream on a batch frame takes match_nfa's batch
+    route: the result is not streaming, no streaming query starts and no
+    temp dir is made, and its pairs equal the match log of the streaming
+    head that runs the same pattern (stream_cep_error_then_purchase)."""
+    from flink_release_1_10_0_spark.catalog import load
+    from flink_release_1_10_0_spark.queries import all_queries
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+    from tests.conftest import SF_DIR
+
+    listener = _Starts()
+    spark.streams.addListener(listener)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    try:
+        out = (Pattern.begin("error").followed_by("purchase").within(30)
+               .match_stream(load(spark, SF_DIR, "events")))
+        assert not out.isStreaming
+        got = sorted((r.user_id, r.start_id, r.end_id, r.start_ts, r.end_ts)
+                     for r in out.collect())
+        assert listener.started == 0
+        assert spark.streams.active == []
+        assert os.listdir(tmp_path) == []
+
+        head = all_queries()["stream_cep_error_then_purchase"](spark, SF_DIR)
+        assert listener.started == 1
+        assert got and got == sorted(
+            (r.user_id, r.first_id, r.then_id, r.first_ts, r.then_ts)
+            for r in head.collect())
+    finally:
+        spark.streams.removeListener(listener)
+
+
 # The generated inputs of the MATCH_RECOGNIZE property tests in
 # test_properties.py: the navigated V shape (values 0..6) and the
 # RUNNING-aggregate DEFINE (values 1..9), both on one key; a second key

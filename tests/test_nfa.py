@@ -1116,3 +1116,20 @@ def test_bits_fallback_past_62_stages(spark):
         match_nfa(sdf, stages, key="user_id"), "append")
     # 5 events can never complete 63 stages: engine runs, no matches
     assert out.count() == 0
+
+
+def test_equal_timestamps_order_by_event_id(spark):
+    """A and B at the same (user, ts): the NFA walks events in
+    (ts, event_id) order, the reference's order for equal timestamps,
+    so a B with the larger id follows its A and matches, while a B with
+    the smaller id precedes it and does not."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+    rows = [_ev(1, 0, "error"), _ev(2, 0, "purchase"),
+            _ev(3, 0, "purchase", user=2), _ev(4, 0, "error", user=2),
+            _ev(5, 20, "purchase", user=2)]
+    pat = Pattern.begin("error").followed_by("purchase").within(30)
+    out = run_to_completion(pat.match_stream(_stream(spark, rows)), "append")
+    got = sorted((r.user_id, r.start_id, r.end_id) for r in out.collect())
+    assert got == [(1, 1, 2), (2, 4, 5)]
+

@@ -265,6 +265,23 @@ def test_connected_components_long_chain(spark):
     assert {r.component for r in rows} == {0}
 
 
+def test_connected_components_releases_superseded_checkpoints(spark):
+    """Each round's local checkpoint replaces the previous round's: the
+    run leaves one new persistent RDD (the result's checkpoint) however
+    many rounds it takes."""
+    from flink_release_1_10_0_spark.operators.graph import connected_components
+    sc = spark.sparkContext
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "src bigint, dst bigint")
+
+    def new_persistent(rounds):
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        connected_components(chain, max_iterations=rounds).collect()
+        return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+    assert len(new_persistent(2)) == len(new_persistent(6)) == 1
+
+
 def test_sssp_long_chain(spark):
     """BFS distance down a 12-hop path — one superstep per hop (inherent
     for BFS), lineage checkpointed every 8 hops."""

@@ -136,34 +136,42 @@ def test_triangle_wedge_join_not_cartesian(spark):
 
 def test_stateful_ops_prune_payload_before_shuffle(spark):
     """Catalyst cannot prune columns through a Python state function, so
-    the operators project explicitly: the executed micro-batch plan (and
-    its parquet ReadSchema) must not carry the wide `props` payload into
-    the keyed exchange."""
+    the stateful operators and the CEP NFA project explicitly: the
+    executed micro-batch plan (and its parquet ReadSchema) must not
+    carry the wide `props` payload into the keyed exchange."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
     from flink_release_1_10_0_spark.streaming.core import read_stream_table
-    from flink_release_1_10_0_spark.streaming.stateful import cep_followed_by
+    from flink_release_1_10_0_spark.streaming.stateful import topn_per_key
 
     import tempfile
 
     ev = read_stream_table(spark, "/root/testdata/sf0.001", "events")
-    out = cep_followed_by(ev, "error", "purchase", within_minutes=30)
-    ckpt = tempfile.mkdtemp(prefix="plan_ckpt_")
-    q = (out.writeStream.format("memory").queryName("_plan_prune")
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination()
-        plan = q._jsq.explainInternal(True)
-    finally:
-        q.stop()
-    phys = plan.split("== Physical Plan ==")[-1]
-    assert "FlatMapGroupsInPandasWithState" in phys
-    # the parquet scan itself must be pruned (no props/value), so the
-    # keyed exchange carries only key/time/id/type
-    assert "props" not in phys, "payload column leaked into the stateful plan"
     # ts surfaces as bigint (legacy nanos) or timestamp_ntz depending on
-    # Spark version; either way only the four needed columns may be read
-    assert ("ReadSchema: struct<event_id:bigint,ts:bigint,user_id:bigint,event_type:string>" in phys
-            or "ReadSchema: struct<event_id:bigint,ts:timestamp_ntz,user_id:bigint,event_type:string>" in phys)
+    # Spark version; either way only the needed columns may be read
+    cases = [
+        (topn_per_key(ev, n=3), "update",
+         ["struct<event_id:bigint,user_id:bigint,value:double>"]),
+        (Pattern.begin("error").followed_by("purchase").within(30)
+         .match_stream(ev), "append",
+         [f"struct<event_id:bigint,ts:{t},user_id:bigint,event_type:string>"
+          for t in ("bigint", "timestamp_ntz")]),
+    ]
+    for i, (out, mode, schemas) in enumerate(cases):
+        ckpt = tempfile.mkdtemp(prefix="plan_ckpt_")
+        q = (out.writeStream.format("memory").queryName(f"_plan_prune{i}")
+             .outputMode(mode).option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        try:
+            q.awaitTermination()
+            plan = q._jsq.explainInternal(True)
+        finally:
+            q.stop()
+        phys = plan.split("== Physical Plan ==")[-1]
+        assert "FlatMapGroupsInPandasWithState" in phys
+        # the parquet scan itself must be pruned, so the keyed exchange
+        # carries only the columns the state function reads
+        assert "props" not in phys, "payload column leaked into the stateful plan"
+        assert any(f"ReadSchema: {s}" in phys for s in schemas), phys[-1500:]
 
 
 def test_ivf_index_search_uses_partition_pruning(spark):

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # Mechanical verification: regenerates every README-grade claim.
 #   tools/verify.sh            # pytest + sf0.01 gate + bench
-#   tools/verify.sh --full     # also the sf0.1 oracle gate (slow)
+#   tools/verify.sh --full     # also the sf0.1 oracle gate and the CEP
+#                              # family gate at three scales (slow)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -14,6 +15,10 @@ python tools/compare.py /root/testdata/sf0.01 2>/dev/null | tail -1
 if [[ "${1:-}" == "--full" ]]; then
   echo "== oracle gate @ sf0.1 (10x scale) =="
   python tools/compare.py /root/testdata/sf0.1 2>/dev/null | tail -1
+  for sf in sf0.001 sf0.01 sf0.1; do
+    echo "== CEP family gate (every NFA head) @ $sf =="
+    python tools/compare.py "/root/testdata/$sf" @cep 2>/dev/null | tail -1
+  done
 fi
 
 echo "== bench @ sf0.1 =="
