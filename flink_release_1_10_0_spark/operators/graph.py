@@ -22,13 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a superseded ``localCheckpoint`` now instead of at the next
-    ContextCleaner pass.  ``DataFrame.unpersist()`` only touches the
-    cache manager; the checkpointed blocks belong to the persisted RDD
-    under the frame's ``LogicalRDD``."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+from flink_release_1_10_0_spark.operators.iterate import (
+    release_local_checkpoint)
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -106,7 +101,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if ckpt is None:
             labels.unpersist()
         else:
-            _release_local_checkpoint(ckpt)
+            release_local_checkpoint(ckpt)
         ckpt = new_labels
         labels = new_labels.select("id", "component")
         if changed == 0:
@@ -168,7 +163,7 @@ def sssp(edges: DataFrame, source: int, src: str = "src", dst: str = "dst",
             .localCheckpoint(eager=True))
     frontier = dist
     # every checkpointed frame the current `dist` union still scans; at
-    # each re-cut these become garbage and are unpersisted EXPLICITLY —
+    # each re-cut these become garbage and are released EXPLICITLY —
     # relying on driver GC + ContextCleaner would let per-hop frontier
     # blocks (memory+disk) pile up across a 100+-hop iteration
     pending: list[DataFrame] = [dist]
@@ -187,7 +182,7 @@ def sssp(edges: DataFrame, source: int, src: str = "src", dst: str = "dst",
                         .withColumn("distance", F.lit(step))
                         .localCheckpoint(eager=True))
         if new_frontier.count() == 0:
-            new_frontier.unpersist()
+            release_local_checkpoint(new_frontier)
             break
         # dist stays a linear union of checkpointed RDD scans — re-cut
         # every 8 hops so a 100+-hop diameter stays plannable
@@ -200,10 +195,16 @@ def sssp(edges: DataFrame, source: int, src: str = "src", dst: str = "dst",
             # frame cannot be recomputed once unpersisted)
             for f in pending:
                 if f is not new_frontier:
-                    f.unpersist()
+                    release_local_checkpoint(f)
             pending = [new_dist, new_frontier]
         dist = new_dist
         frontier = new_frontier
+    if len(pending) > 1:
+        # the result owns one checkpoint: cut once more and release the
+        # per-hop frames the union still scans
+        dist = dist.localCheckpoint(eager=True)
+        for f in pending:
+            release_local_checkpoint(f)
     sym.unpersist()
     return dist
 

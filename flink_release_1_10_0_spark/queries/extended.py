@@ -1529,37 +1529,30 @@ FROM orders GROUP BY o_orderstatus
 
 @register("source_dbapi_roundtrip", _DBAPI_RT_ORACLE)
 def source_dbapi_roundtrip(spark, sf_dir):
-    """JDBC-family connector analog: executor-side DB-API cursors behind
-    Spark's Python Data Source API (sources/dbapi.py)."""
+    """JDBC-family connector analog: executor-side DB-API cursors, one
+    Arrow stage per write and per read (sources/dbapi.py)."""
     import tempfile
 
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source)
-    register_dbapi_source(spark)
+    from flink_release_1_10_0_spark.sources import dbapi
+
     url = tempfile.mkdtemp(prefix="dbapi_rt_") + "/orders.db"
-    create_table(url, "CREATE TABLE IF NOT EXISTS orders_t ("
-                      "o_orderkey BIGINT PRIMARY KEY, "
-                      "o_orderstatus TEXT, o_totalprice DOUBLE)")
+    dbapi.create_table(url, "CREATE TABLE IF NOT EXISTS orders_t ("
+                            "o_orderkey BIGINT PRIMARY KEY, "
+                            "o_orderstatus TEXT, o_totalprice DOUBLE)")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus",
         F.col("o_totalprice").cast("double").alias("o_totalprice"))
     half = orders.filter(F.col("o_orderkey") % 2 == 0)
-    (half.write.format("flink_jdbc").mode("append")
-     .option("url", url).option("table", "orders_t")
-     .option("writeMode", "append").save())
+    dbapi.write(half, url, "orders_t", mode="append")
     # keyed upsert of EVERYTHING: the even keys appended above must be
     # replaced in place, not duplicated
-    (orders.write.format("flink_jdbc").mode("append")
-     .option("url", url).option("table", "orders_t")
-     .option("writeMode", "upsert").save())
-    back = (spark.read.format("flink_jdbc")
-            .option("url", url).option("table", "orders_t")
-            .option("schema", "o_orderkey bigint, o_orderstatus string, "
-                              "o_totalprice double")
-            .option("columns", "o_orderkey, o_orderstatus, o_totalprice")
-            .option("partitionColumn", "o_orderkey")
-            .option("lowerBound", "1").option("upperBound", "1000000")
-            .option("numPartitions", "8").load())
+    dbapi.write(orders, url, "orders_t", mode="upsert")
+    back = dbapi.read(
+        spark, url, table="orders_t",
+        schema="o_orderkey bigint, o_orderstatus string, o_totalprice double",
+        columns="o_orderkey, o_orderstatus, o_totalprice",
+        partition_column="o_orderkey", lower_bound=1, upper_bound=1000000,
+        num_partitions=8)
     return (back.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum("o_orderkey").alias("key_sum"),

@@ -1513,7 +1513,7 @@ def dataset_delta_iteration_sssp(spark, sf_dir):
 # Queryable state (KeyedStream.java:1020 asQueryableState +
 # QueryableStateClient.java): a keyed streaming aggregation's state is
 # continuously upserted into an external store via foreachBatch
-# (update-mode deltas through the flink_jdbc sink); the snapshot read
+# (update-mode deltas through the dbapi connector); the snapshot read
 # back from the store must equal the batch aggregate.
 # --------------------------------------------------------------------------
 _QSTATE_ORACLE = """
@@ -1623,7 +1623,7 @@ def stream_delta_evictor_window(spark, sf_dir):
 # AsyncTableFunction analog (flink-table-common/.../functions/
 # AsyncTableFunction.java; async lookup-join runner in
 # StreamExecLookupJoin.scala): each probe row triggers an async fetch
-# against an EXTERNAL keyed store (the flink_jdbc sqlite db) returning
+# against an EXTERNAL keyed store (the dbapi connector's sqlite db) returning
 # a table of matching rows, laterally joined in input order.  The
 # oracle is the plain equi-join the async lateral must equal.
 # --------------------------------------------------------------------------
@@ -1644,23 +1644,19 @@ def async_table_lookup_join(spark, sf_dir):
 
     from pyspark.sql.types import DoubleType, LongType
 
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source)
+    from flink_release_1_10_0_spark.sources import dbapi
     from flink_release_1_10_0_spark.streaming.async_io import (
         async_table_enrich)
 
-    register_dbapi_source(spark)
     url = tempfile.mkdtemp(prefix="async_tbl_") + "/orders.db"
-    create_table(url, "CREATE TABLE orders_t ("
-                      "o_orderkey BIGINT, o_custkey BIGINT, "
-                      "o_totalprice DOUBLE)")
-    create_table(url, "CREATE INDEX idx_ock ON orders_t (o_custkey)")
+    dbapi.create_table(url, "CREATE TABLE orders_t ("
+                            "o_orderkey BIGINT, o_custkey BIGINT, "
+                            "o_totalprice DOUBLE)")
+    dbapi.create_table(url, "CREATE INDEX idx_ock ON orders_t (o_custkey)")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
         F.col("o_totalprice").cast("double").alias("o_totalprice"))
-    (orders.write.format("flink_jdbc").mode("append")
-     .option("url", url).option("table", "orders_t")
-     .option("writeMode", "append").save())
+    dbapi.write(orders, url, "orders_t")
 
     async def fetch_orders(custkey: int):
         from flink_release_1_10_0_spark.sources.dbapi import _connect

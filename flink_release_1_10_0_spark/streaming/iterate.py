@@ -14,12 +14,12 @@ shape the streaming API has and the batch API does not.
 Spark-first shape: Spark has no cyclic dataflow, so the loop lives in
 the driver while ALL data movement stays distributed — each round is a
 normal DataFrame plan, ``localCheckpoint(eager=True)`` truncates the
-otherwise-exponential lineage, and superseded round state is unpersisted
-explicitly (same discipline as ``operators/iterate.py``).  The driver
-holds only loop counters and an ``isEmpty()`` probe per round; at
-100 TB each round is one distributed job and the feedback set is
-whatever fraction of rows still circulates — the same per-superstep
-cost model as the reference's feedback edge.
+otherwise-exponential lineage, and superseded round state is released
+explicitly (``release_local_checkpoint``, same discipline as
+``operators/iterate.py``).  The driver holds only loop counters and an
+``isEmpty()`` probe per round; at 100 TB each round is one distributed
+job and the feedback set is whatever fraction of rows still circulates
+— the same per-superstep cost model as the reference's feedback edge.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from flink_release_1_10_0_spark.operators.iterate import (  # noqa: F401
     bulk_iterate,
     delta_iterate,
+    release_local_checkpoint,
 )
 
 
@@ -54,7 +55,7 @@ def iterate_feedback(
     # _FOLD_EVERY union leaves above the last fold) instead of one
     # N-leaf union at the end.  Round inputs stay persisted until the
     # fold that covers their round's output has materialized — an
-    # un-folded ``out`` plan still reads them — and are unpersisted in
+    # un-folded ``out`` plan still reads them — and are released in
     # a batch right after; ~N/_FOLD_EVERY materializations total where
     # the round-6 shape paid N.
     acc: DataFrame | None = None
@@ -67,10 +68,10 @@ def iterate_feedback(
         nonlocal acc, prev_fold, pending
         acc = acc.localCheckpoint(eager=True)
         for r in retire:
-            r.unpersist()
+            release_local_checkpoint(r)
         retire.clear()
         if prev_fold is not None:
-            prev_fold.unpersist()
+            release_local_checkpoint(prev_fold)
         prev_fold = acc
         pending = 0
 
@@ -90,7 +91,7 @@ def iterate_feedback(
         fold()        # final fold releases the tail rounds' inputs
     else:
         for r in retire:
-            r.unpersist()
+            release_local_checkpoint(r)
     return acc
 
 

@@ -16,12 +16,17 @@ table, so "queryable state" is a continuously-maintained keyed view:
   ``get(key)`` is a filtered lookup on it.  In-process only (the
   reference's local-state fast path), fine for small keyed state.
 - ``backend="dbapi"``: ``foreachBatch`` upserts each micro-batch's
-  updated keys through the ``flink_jdbc`` sink (sources/dbapi.py) into
+  updated keys through ``sources.dbapi.write`` (one Arrow stage) into
   an external store — any process with a DB connection can point-lookup
   a key WITHOUT Spark, which is the actual QueryableStateClient
-  contract.  Update-mode deltas only: each trigger ships changed keys,
-  not the whole state, so this is the 100 TB path (state lives in the
-  store, partitioned writes, no driver materialization).
+  contract.  ``snapshot()`` reads the store back with
+  ``sources.dbapi.read``.  Update-mode deltas only: each trigger ships
+  changed keys, not the whole state, so this is the 100 TB path (state
+  lives in the store, partitioned writes, no driver materialization).
+
+With ``bounded=True`` the checkpoint dir is removed once the
+``availableNow`` query has terminated; the store (or memory table) is
+the state and stays.
 
 ``QueryableStateClient.get_dbapi(url, table, **key)`` is the client-side
 analog — a plain DB-API lookup, no SparkSession required.
@@ -30,11 +35,18 @@ analog — a plain DB-API lookup, no SparkSession required.
 from __future__ import annotations
 
 import itertools
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _counter = itertools.count()
+
+# state column type -> store column type (what keyed agg state is made
+# of); the dbapi backend refuses any other column type
+_STORE_TYPES = {"bigint": "BIGINT", "int": "BIGINT", "double": "DOUBLE",
+                "string": "TEXT"}
 
 
 class QueryableStateHandle:
@@ -42,22 +54,25 @@ class QueryableStateHandle:
 
     def __init__(self, spark: SparkSession, name: str, key_cols: list[str],
                  backend: str, url: str | None = None,
-                 table: str | None = None):
+                 table: str | None = None,
+                 schema: StructType | None = None):
         self.spark = spark
         self.name = name
         self.key_cols = key_cols
         self.backend = backend
         self.url = url
         self.table = table
+        self.schema = schema
         self.query = None
 
     def snapshot(self) -> DataFrame:
         """The current full state as a DataFrame (state-store scan)."""
         if self.backend == "memory":
             return self.spark.table(self.name)
-        return (self.spark.read.format("flink_jdbc")
-                .option("url", self.url).option("table", self.table)
-                .option("schema", self._schema_ddl).load())
+        from flink_release_1_10_0_spark.sources import dbapi
+
+        return dbapi.read(self.spark, self.url, table=self.table,
+                          schema=self.schema)
 
     def get(self, **key):
         """Point lookup: the state row(s) for one key, or [] if absent
@@ -84,15 +99,13 @@ def as_queryable_state(state_df: DataFrame, name: str,
     completion (the test harness); ``bounded=False`` leaves the query
     running and returns immediately — lookups then observe live state.
 
-    dbapi-backend type support: bigint/int/double/string state columns
-    (what keyed agg state is made of).  Timestamp/array state falls back
-    to TEXT in the store and will NOT round-trip through ``snapshot()``
-    — keep such columns out of the published state (project them to
-    epoch numbers first), matching the reference's requirement that
+    The dbapi backend stores bigint/int/double/string state columns
+    (what keyed agg state is made of); any other column type raises
+    ``ValueError`` here — project timestamps or arrays to epoch numbers
+    or strings first, matching the reference's requirement that
     queryable state be a declared, serializable state descriptor.
     """
     spark = state_df.sparkSession
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_qstate_")
     if backend == "memory":
         import warnings
 
@@ -104,47 +117,48 @@ def as_queryable_state(state_df: DataFrame, name: str,
             "store).", UserWarning, stacklevel=2)
         handle = QueryableStateHandle(spark, name, key_cols, "memory")
         writer = (state_df.writeStream.format("memory").queryName(name)
-                  .outputMode("complete")
-                  .option("checkpointLocation", ckpt))
+                  .outputMode("complete"))
     elif backend == "dbapi":
-        from flink_release_1_10_0_spark.sources.dbapi import (
-            create_table, register_dbapi_source)
-        register_dbapi_source(spark)
-        if url is None:
-            url = tempfile.mkdtemp(prefix="qstate_db_") + f"/{name}.db"
-        table = f"qstate_{name}_{next(_counter)}"
-        fields = state_df.schema.fields
+        from flink_release_1_10_0_spark.sources import dbapi
+
         ddl_cols = []
-        sql_types = {"bigint": "BIGINT", "long": "BIGINT", "int": "BIGINT",
-                     "double": "DOUBLE", "string": "TEXT"}
-        for f in fields:
-            st = sql_types.get(f.dataType.simpleString(), "TEXT")
+        for f in state_df.schema.fields:
+            st = _STORE_TYPES.get(f.dataType.simpleString())
+            if st is None:
+                raise ValueError(
+                    f"queryable state column {f.name!r} has type "
+                    f"{f.dataType.simpleString()}; the dbapi backend "
+                    f"stores only {', '.join(_STORE_TYPES)}")
             pk = " PRIMARY KEY" if (
                 f.name in key_cols and len(key_cols) == 1) else ""
             ddl_cols.append(f"{f.name} {st}{pk}")
+        if url is None:
+            url = tempfile.mkdtemp(prefix="qstate_db_") + f"/{name}.db"
+        table = f"qstate_{name}_{next(_counter)}"
         constraint = (f", PRIMARY KEY ({', '.join(key_cols)})"
                       if len(key_cols) > 1 else "")
-        create_table(url, f"CREATE TABLE IF NOT EXISTS {table} "
-                          f"({', '.join(ddl_cols)}{constraint})")
+        dbapi.create_table(url, f"CREATE TABLE IF NOT EXISTS {table} "
+                                f"({', '.join(ddl_cols)}{constraint})")
         handle = QueryableStateHandle(spark, name, key_cols, "dbapi",
-                                      url=url, table=table)
-        handle._schema_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in fields)
+                                      url=url, table=table,
+                                      schema=state_df.schema)
 
         def _upsert(batch_df, _epoch):
-            (batch_df.write.format("flink_jdbc").mode("append")
-             .option("url", url).option("table", table)
-             .option("writeMode", "upsert").save())
+            dbapi.write(batch_df, url, table, mode="upsert")
 
         writer = (state_df.writeStream.foreachBatch(_upsert)
-                  .outputMode("update")
-                  .option("checkpointLocation", ckpt))
+                  .outputMode("update"))
     else:
         raise ValueError(f"unknown queryable-state backend: {backend}")
 
+    ckpt = tempfile.mkdtemp(prefix="spark_graft_qstate_")
+    writer = writer.option("checkpointLocation", ckpt)
     if bounded:
-        handle.query = writer.trigger(availableNow=True).start()
-        handle.query.awaitTermination()
+        try:
+            handle.query = writer.trigger(availableNow=True).start()
+            handle.query.awaitTermination()
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
     else:
         handle.query = writer.start()
     return handle

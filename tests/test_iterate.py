@@ -91,3 +91,56 @@ def test_feedback_loop_100_rounds_bounded_plan(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan
     assert len(plan.splitlines()) <= 3
+
+
+# ---------------------------------------------------------------------------
+# Each superstep releases the checkpoint it superseded: a run leaves one
+# new persistent RDD (the result's checkpoint) however many rounds it takes
+# ---------------------------------------------------------------------------
+
+def _new_persistent(spark, run):
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    run().collect()
+    return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+
+def test_bulk_iteration_releases_superseded_checkpoints(spark):
+    df = spark.range(5).select(F.col("id").alias("v"))
+
+    def run(rounds):
+        return lambda: bulk_iterate(
+            df, lambda d: d.select((F.col("v") * 2).alias("v")), rounds)
+
+    assert (len(_new_persistent(spark, run(2)))
+            == len(_new_persistent(spark, run(6))) == 1)
+
+
+def test_delta_iteration_releases_superseded_checkpoints(spark):
+    def step(sol, ws):
+        delta = sol.join(ws, "k").select("k", (F.col("n") + 1).alias("n"))
+        mx = ws.agg(F.max("k").alias("m"))
+        return delta, ws.join(mx, ws.k == mx.m, "left_anti")
+
+    def run(keys):
+        solution = spark.createDataFrame(
+            [(k, 0) for k in range(keys)], "k long, n long")
+        workset = solution.select("k")
+        return lambda: delta_iterate(solution, workset, step, 50,
+                                     key_cols=["k"])
+
+    assert (len(_new_persistent(spark, run(2)))
+            == len(_new_persistent(spark, run(6))) == 1)
+
+
+def test_feedback_loop_releases_superseded_checkpoints(spark):
+    def step(cur):
+        nxt = cur.select((F.col("v") - 1).alias("v"))
+        return nxt.filter("v > 0"), nxt.filter("v <= 0")
+
+    def run(rounds):      # 35 rounds crosses one accumulator fold
+        df = spark.createDataFrame([(rounds,)], "v long")
+        return lambda: iterate_feedback(df, step)
+
+    assert (len(_new_persistent(spark, run(3)))
+            == len(_new_persistent(spark, run(35))) == 1)

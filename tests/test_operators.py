@@ -293,6 +293,23 @@ def test_sssp_long_chain(spark):
     assert got[12] == 12 and got[0] == 0 and got[6] == 6
 
 
+def test_sssp_releases_superseded_checkpoints(spark):
+    """Per-hop frontier checkpoints are released at each re-cut and at
+    the end: the run leaves one new persistent RDD (the result's
+    checkpoint) however many hops it takes."""
+    from flink_release_1_10_0_spark.operators.graph import sssp
+    sc = spark.sparkContext
+
+    def new_persistent(hops):
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(hops)], "src bigint, dst bigint")
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        assert sssp(chain, source=0).count() == hops + 1
+        return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+    assert len(new_persistent(3)) == len(new_persistent(13)) == 1
+
+
 def test_partition_custom_routes_by_user_partitioner(spark):
     """DataStream.partitionCustom (DataStream.java:361): an arbitrary
     Python partitioner decides each record's partition; verified with

@@ -325,25 +325,20 @@ def test_leakage_audit_equi_joins_only(spark):
 
 
 def test_dbapi_read_has_stride_partitions(spark):
-    """flink_jdbc scans parallelize by stride splits, not a single
-    cursor (JDBCInputFormat split contract)."""
+    """dbapi scans parallelize by stride splits, not a single cursor
+    (JDBCInputFormat split contract)."""
     import tempfile
 
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source, _connect)
-    register_dbapi_source(spark)
+    from flink_release_1_10_0_spark.sources import dbapi
     url = tempfile.mkdtemp(prefix="dbapi_plan_") + "/t.db"
-    create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY)")
-    con = _connect(url)
+    dbapi.create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY)")
+    con = dbapi._connect(url)
     con.executemany("INSERT INTO kv VALUES (?)", [(k,) for k in range(100)])
     con.commit()
     con.close()
-    df = (spark.read.format("flink_jdbc")
-          .option("url", url).option("table", "kv")
-          .option("schema", "k bigint")
-          .option("partitionColumn", "k")
-          .option("lowerBound", "0").option("upperBound", "100")
-          .option("numPartitions", "8").load())
+    df = dbapi.read(spark, url, table="kv", schema="k bigint",
+                    partition_column="k", lower_bound=0, upper_bound=100,
+                    num_partitions=8)
     assert df.rdd.getNumPartitions() == 8
 
 

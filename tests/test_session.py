@@ -25,7 +25,7 @@ old_df = load(old, sf, "nation")
 assert load(old, sf, "nation") is old_df
 old.stop()
 new = get_spark("memo_new", cpus=1)
-for name in ("catalog.load", "llm.min_parallelism", "dbapi.registered"):
+for name in ("catalog.load", "llm.min_parallelism"):
     assert session_memo(new, name) == {}, name
 new_df = load(new, sf, "nation")
 assert new_df is not old_df

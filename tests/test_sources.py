@@ -405,26 +405,29 @@ def test_avro_spark_roundtrip_with_timestamp(spark, orders):
 # JDBCUpsertTableSink)
 # ---------------------------------------------------------------------------
 
-def test_dbapi_stride_splits_cover_out_of_bounds_keys(spark):
-    """First/last strides are unbounded: keys below lowerBound and at/above
-    upperBound must still be read (JDBCNumericBetweenParametersProvider
-    boundary semantics, same as Spark's own JDBC relation)."""
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source, _connect)
-    register_dbapi_source(spark)
-    url = tempfile.mkdtemp(prefix="dbapi_t_") + "/t.db"
-    create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY, v TEXT)")
+def _kv_db(prefix, ddl, rows):
+    from flink_release_1_10_0_spark.sources.dbapi import _connect, create_table
+
+    url = tempfile.mkdtemp(prefix=prefix) + "/t.db"
+    create_table(url, ddl)
     con = _connect(url)
-    con.executemany("INSERT INTO kv VALUES (?, ?)",
-                    [(k, f"v{k}") for k in (-5, 0, 3, 7, 50, 99, 100, 1000)])
+    con.executemany(
+        f"INSERT INTO kv VALUES ({', '.join('?' * len(rows[0]))})", rows)
     con.commit()
     con.close()
-    back = (spark.read.format("flink_jdbc")
-            .option("url", url).option("table", "kv")
-            .option("schema", "k bigint, v string")
-            .option("partitionColumn", "k")
-            .option("lowerBound", "0").option("upperBound", "100")
-            .option("numPartitions", "4").load())
+    return url
+
+
+def test_dbapi_stride_splits_cover_out_of_bounds_keys(spark):
+    """First/last strides are unbounded: keys below lower_bound and at/above
+    upper_bound must still be read (JDBCNumericBetweenParametersProvider
+    boundary semantics, same as Spark's own JDBC relation)."""
+    from flink_release_1_10_0_spark.sources import dbapi
+    url = _kv_db("dbapi_t_", "CREATE TABLE kv (k BIGINT PRIMARY KEY, v TEXT)",
+                 [(k, f"v{k}") for k in (-5, 0, 3, 7, 50, 99, 100, 1000)])
+    back = dbapi.read(spark, url, table="kv", schema="k bigint, v string",
+                      partition_column="k", lower_bound=0, upper_bound=100,
+                      num_partitions=4)
     assert back.rdd.getNumPartitions() == 4
     got = sorted(r.k for r in back.collect())
     assert got == [-5, 0, 3, 7, 50, 99, 100, 1000]
@@ -434,24 +437,16 @@ def test_dbapi_parallel_upsert_is_exactly_once(spark):
     """Concurrent per-partition writers + keyed upsert: writing the same
     keyed rows twice (append then upsert) leaves one row per key with the
     upserted value (JDBCUpsertTableSink contract)."""
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source)
-    register_dbapi_source(spark)
+    from flink_release_1_10_0_spark.sources import dbapi
     url = tempfile.mkdtemp(prefix="dbapi_u_") + "/t.db"
-    create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY, v BIGINT)")
+    dbapi.create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY, v BIGINT)")
     df1 = spark.range(0, 500, 1, 8).select(
         F.col("id").alias("k"), F.lit(1).cast("bigint").alias("v"))
-    (df1.write.format("flink_jdbc").mode("append")
-     .option("url", url).option("table", "kv")
-     .option("writeMode", "append").option("batchSize", "64").save())
+    assert dbapi.write(df1, url, "kv", mode="append", batch_size=64) == 500
     df2 = spark.range(0, 500, 1, 8).select(
         F.col("id").alias("k"), F.lit(2).cast("bigint").alias("v"))
-    (df2.write.format("flink_jdbc").mode("append")
-     .option("url", url).option("table", "kv")
-     .option("writeMode", "upsert").option("batchSize", "64").save())
-    back = (spark.read.format("flink_jdbc")
-            .option("url", url).option("table", "kv")
-            .option("schema", "k bigint, v bigint").load())
+    assert dbapi.write(df2, url, "kv", mode="upsert", batch_size=64) == 500
+    back = dbapi.read(spark, url, table="kv", schema="k bigint, v bigint")
     rows = back.collect()
     assert len(rows) == 500
     assert all(r.v == 2 for r in rows)
@@ -459,89 +454,103 @@ def test_dbapi_parallel_upsert_is_exactly_once(spark):
 
 def test_dbapi_query_with_existing_where(spark):
     """Stride predicates compose with a user WHERE clause via AND."""
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source, _connect)
-    register_dbapi_source(spark)
-    url = tempfile.mkdtemp(prefix="dbapi_q_") + "/t.db"
-    create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY, v BIGINT)")
-    con = _connect(url)
-    con.executemany("INSERT INTO kv VALUES (?, ?)",
-                    [(k, k * 10) for k in range(100)])
-    con.commit()
-    con.close()
-    back = (spark.read.format("flink_jdbc")
-            .option("url", url)
-            .option("query", "SELECT k, v FROM kv WHERE v >= 200")
-            .option("schema", "k bigint, v bigint")
-            .option("partitionColumn", "k")
-            .option("lowerBound", "0").option("upperBound", "100")
-            .option("numPartitions", "3").load())
+    from flink_release_1_10_0_spark.sources import dbapi
+    url = _kv_db("dbapi_q_",
+                 "CREATE TABLE kv (k BIGINT PRIMARY KEY, v BIGINT)",
+                 [(k, k * 10) for k in range(100)])
+    back = dbapi.read(spark, url, query="SELECT k, v FROM kv WHERE v >= 200",
+                      schema="k bigint, v bigint", partition_column="k",
+                      lower_bound=0, upper_bound=100, num_partitions=3)
     assert sorted(r.k for r in back.collect()) == list(range(20, 100))
 
 
 def test_dbapi_degenerate_bounds_still_read_everything(spark):
-    """lowerBound == upperBound must fall back to one unbounded split,
-    never zero splits (review r6: empty range() would silently read
-    nothing)."""
-    from flink_release_1_10_0_spark.sources.dbapi import (
-        create_table, register_dbapi_source, _connect)
-    register_dbapi_source(spark)
-    url = tempfile.mkdtemp(prefix="dbapi_d_") + "/t.db"
-    create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY)")
-    con = _connect(url)
-    con.executemany("INSERT INTO kv VALUES (?)", [(k,) for k in range(7)])
-    con.commit()
-    con.close()
-    back = (spark.read.format("flink_jdbc")
-            .option("url", url).option("table", "kv")
-            .option("schema", "k bigint")
-            .option("partitionColumn", "k")
-            .option("lowerBound", "3").option("upperBound", "3")
-            .option("numPartitions", "4").load())
+    """lower_bound == upper_bound must fall back to one unbounded split,
+    never zero splits (an empty range() would silently read nothing)."""
+    from flink_release_1_10_0_spark.sources import dbapi
+    url = _kv_db("dbapi_d_", "CREATE TABLE kv (k BIGINT PRIMARY KEY)",
+                 [(k,) for k in range(7)])
+    back = dbapi.read(spark, url, table="kv", schema="k bigint",
+                      partition_column="k", lower_bound=3, upper_bound=3,
+                      num_partitions=4)
     assert sorted(r.k for r in back.collect()) == list(range(7))
 
 
 def test_dbapi_flush_retry_rolls_back_partial_batch():
     """A failed executemany must not leave partial rows in the open
-    transaction for a later commit (review r6: duplicate-row hazard on
-    append retries)."""
+    transaction for a later commit (duplicate-row hazard on append
+    retries)."""
     import sqlite3
 
-    from flink_release_1_10_0_spark.sources.dbapi import _DbapiWriter
+    import pyarrow as pa
+
+    from flink_release_1_10_0_spark.sources.dbapi import _write_batches
 
     url = tempfile.mkdtemp(prefix="dbapi_rb_") + "/t.db"
-    con = sqlite3.connect(url)
-    con.execute("CREATE TABLE kv (k BIGINT)")
-    con.commit()
-    con.close()
-
-    class Schema:
-        class F:
-            def __init__(self, name):
-                self.name = name
-        fields = [F("k")]
-
-    w = _DbapiWriter({"url": url, "table": "kv", "batchSize": "10"},
-                     Schema())
     # a CHECK constraint forces a mid-batch executemany failure (sqlite
     # applies rows up to the failure inside the open transaction)
     con = sqlite3.connect(url)
-    con.execute("DROP TABLE kv")
     con.execute("CREATE TABLE kv (k BIGINT CHECK (k < 100))")
     con.commit()
     con.close()
-    bad_then_good = [(1,), (2,), (999,)]   # 999 violates CHECK mid-batch
-    try:
-        w.write(iter(bad_then_good))
-        raise AssertionError("expected CHECK violation to propagate")
-    except Exception:
-        pass
+    bad_then_good = pa.RecordBatch.from_pydict(
+        {"k": [1, 2, 999]})             # 999 violates CHECK mid-batch
+    with pytest.raises(sqlite3.IntegrityError):
+        _write_batches(url, "INSERT INTO kv (k) VALUES (?)",
+                       iter([bad_then_good]), 10)
     # after the failed write (all 6 retries roll back), the table must
     # hold NO partial rows
     con = sqlite3.connect(url)
     got = con.execute("SELECT k FROM kv").fetchall()
     con.close()
     assert got == []
+
+
+def test_dbapi_read_value_outside_declared_type_raises(spark):
+    """A stored value the declared schema cannot hold (sqlite keeps
+    'oops' in a BIGINT column) fails the read, naming the column."""
+    import pytest
+
+    from flink_release_1_10_0_spark.sources import dbapi
+    url = _kv_db("dbapi_bad_", "CREATE TABLE kv (k BIGINT, v BIGINT)",
+                 [(1, 10), (2, "oops")])
+    back = dbapi.read(spark, url, table="kv", schema="k bigint, v bigint")
+    with pytest.raises(Exception, match="column 'v'"):
+        back.collect()
+
+
+def test_dbapi_round_trip_registers_no_data_source(spark, monkeypatch):
+    """A write-then-read round trip on a fresh session runs as Arrow
+    stages: nothing is registered as a Python Data Source, and both
+    plans show MapInArrow with no V2 scan or write node."""
+    from flink_release_1_10_0_spark.sources import dbapi
+    fresh = spark.newSession()
+    url = tempfile.mkdtemp(prefix="dbapi_fresh_") + "/t.db"
+    dbapi.create_table(url, "CREATE TABLE kv (k BIGINT PRIMARY KEY)")
+    # every action below (write's count, the read's rows) ends in
+    # collect(): record the executed plan of each
+    plans = []
+    frame = type(fresh.range(1))
+    collect = frame.collect
+
+    def traced_collect(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", traced_collect)
+    assert dbapi.write(fresh.range(0, 40, 1, 4).withColumnRenamed("id", "k"),
+                       url, "kv") == 40
+    back = dbapi.read(fresh, url, table="kv", schema="k bigint",
+                      partition_column="k", lower_bound=0, upper_bound=40,
+                      num_partitions=4)
+    assert sorted(r.k for r in back.collect()) == list(range(40))
+    assert len(plans) == 2
+    for plan in plans:
+        assert "MapInArrow" in plan, plan
+        assert "BatchScan" not in plan and "WriteToDataSourceV2" not in plan
+        assert "AppendData" not in plan, plan
+    sources = fresh._jsparkSession.sessionState().dataSourceManager()
+    assert not sources.dataSourceExists("flink_jdbc")
 
 
 def test_sequence_file_roundtrip_types_and_nulls(spark):

@@ -406,6 +406,46 @@ def test_queryable_state_external_client_needs_no_spark(spark):
     assert len(rows) == 1 and rows[0][1] == expect[k]
 
 
+def test_queryable_state_dbapi_rejects_unsupported_column_type(spark):
+    """A state column the store cannot round-trip (a timestamp) fails at
+    registration, naming the column, before any query starts."""
+    from flink_release_1_10_0_spark.streaming.core import read_stream_table
+    from flink_release_1_10_0_spark.streaming.queryable import (
+        as_queryable_state)
+    from tests.conftest import SF_DIR
+
+    ev = read_stream_table(spark, SF_DIR, "events")
+    state = ev.groupBy("user_id").agg(F.max("ts").alias("last_ts"))
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="'last_ts'"):
+        as_queryable_state(state, "qs_bad_type", ["user_id"],
+                           backend="dbapi")
+    assert len(spark.streams.active) == active
+
+
+def test_queryable_state_snapshot_leaves_no_checkpoint_dirs(spark):
+    """A bounded as_queryable_state removes its checkpoint dir once the
+    availableNow query has terminated: three runs of the head keep the
+    count of spark_graft_qstate_* dirs flat."""
+    import os
+    import tempfile
+
+    from flink_release_1_10_0_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    tmp = tempfile.gettempdir()
+
+    def n_ckpt():
+        return sum(p.startswith("spark_graft_qstate_")
+                   for p in os.listdir(tmp))
+
+    head = all_queries()["queryable_state_snapshot"]
+    before = n_ckpt()
+    for _ in range(3):
+        assert head(spark, SF_DIR).count() > 0
+    assert n_ckpt() == before
+
+
 def test_latency_tracker_captures_trigger_histogram(spark):
     """LatencyMarker analog (streaming/metrics.py): per-trigger latency
     metrics captured via StreamingQueryListener during a bounded run."""

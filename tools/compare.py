@@ -2,11 +2,13 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row count + column names + order-insensitive values.
 
-Usage: python tools/compare.py [sf_dir] [query_name | @cep ...]
+Usage: python tools/compare.py [sf_dir] [query_name | @cep | @dbapi ...]
 
 ``@cep`` names the CEP family: every head registered in
 ``queries/cep_nfa.py`` plus the CEP and MATCH_RECOGNIZE heads of
 ``queries/streaming.py`` (the gate for any NFA change).
+``@dbapi`` names the heads that read or write through
+``sources/dbapi.py`` (the gate for any connector change).
 """
 
 from __future__ import annotations
@@ -92,6 +94,12 @@ def cep_family(qs) -> set[str]:
                 and ("_cep_" in name or "match_recognize" in name))}
 
 
+DBAPI_HEADS = frozenset({
+    "source_dbapi_roundtrip", "queryable_state_snapshot",
+    "async_table_lookup_join", "state_processor_read_keyed",
+    "state_processor_bootstrap_resume"})
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     qs, oracles = all_queries(), all_oracles()
@@ -101,6 +109,9 @@ def main():
             family = cep_family(qs)
             print(f"@cep: {len(family)} heads")
             only |= family
+        elif arg == "@dbapi":
+            print(f"@dbapi: {len(DBAPI_HEADS)} heads")
+            only |= DBAPI_HEADS
         else:
             only.add(arg)
     spark = get_spark()
