@@ -54,7 +54,9 @@ def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFra
     """Execute a streaming DataFrame to completion into a memory sink;
     returns the collected sink as a batch DataFrame.  The checkpoint
     dir is removed once the query has terminated: the memory sink holds
-    the result, and a finished bounded run is never resumed."""
+    the result, and a finished bounded run is never resumed.  The sink's
+    temp view is dropped too: the returned frame's plan holds the sink
+    itself, so it keeps working, and the session catalog stays flat."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
     ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
@@ -69,4 +71,6 @@ def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFra
         q.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out

@@ -125,6 +125,20 @@ def test_no_driver_side_collect_in_package():
     assert offenders == []
 
 
+def test_sessions_built_only_by_get_spark():
+    """Guard: in the package, tools/ and bench.py only session.get_spark
+    builds a SparkSession, so no hand-copied builder drops a conf every
+    session needs (the worker daemon and its PYTHONPATH)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [*(root / "flink_release_1_10_0_spark").rglob("*.py"),
+             *(root / "tools").rglob("*.py"), root / "bench.py"]
+    offenders = [str(p.relative_to(root)) for p in files
+                 if "SparkSession.builder" in p.read_text()]
+    assert offenders == ["flink_release_1_10_0_spark/session.py"]
+
+
 @given(vals=st.lists(st.integers(min_value=0, max_value=9),
                      min_size=1, max_size=12),
        mode=st.sampled_from(["relaxed", "relaxed_nd"]))

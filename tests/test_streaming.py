@@ -446,6 +446,29 @@ def test_queryable_state_snapshot_leaves_no_checkpoint_dirs(spark):
     assert n_ckpt() == before
 
 
+def test_run_to_completion_leaves_no_sink_views(spark):
+    """run_to_completion drops its memory-sink temp view: three runs of
+    the head keep the catalog flat, and each returned frame still
+    collects and derives to the first run's rows."""
+    from flink_release_1_10_0_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    head = all_queries()["stream_topn_per_key"]
+    before = tables()
+    first = None
+    for _ in range(3):
+        df = head(spark, SF_DIR)
+        rows = sorted(map(tuple, df.collect()), key=repr)
+        first = first or rows
+        assert rows == first
+        assert df.limit(2).count() == min(2, len(rows))
+    assert first
+    assert tables() == before
+
+
 def test_latency_tracker_captures_trigger_histogram(spark):
     """LatencyMarker analog (streaming/metrics.py): per-trigger latency
     metrics captured via StreamingQueryListener during a bounded run."""

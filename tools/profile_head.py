@@ -22,44 +22,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4077
-
-
-def get_spark_with_ui():
-    from pyspark.sql import SparkSession
-
-    n = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # mirror flink_release_1_10_0_spark.session.get_spark, UI on
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # keep in sync with session.get_spark: small-byte CPU-heavy stages
-        # must not coalesce below useful parallelism here either, or the
-        # profiler measures a different plan than the bench runs
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def rest(app_id: str, path: str):
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}{path}"
+def rest(ui_url: str, app_id: str, path: str):
+    url = f"{ui_url}/api/v1/applications/{app_id}{path}"
     with urllib.request.urlopen(url, timeout=10) as r:
         return json.loads(r.read())
 
@@ -71,8 +35,10 @@ def main():
     show_jobs = "--jobs" in sys.argv
 
     from flink_release_1_10_0_spark.queries import all_queries
+    from flink_release_1_10_0_spark.session import get_spark
 
-    spark = get_spark_with_ui()
+    spark = get_spark("profile", ui=True)
+    ui_url = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
     q = all_queries()[name]
 
@@ -81,13 +47,13 @@ def main():
 
     run()  # warmup (JIT, codegen cache, parquet footers)
 
-    jobs_before = {j["jobId"] for j in rest(app_id, "/jobs")}
+    jobs_before = {j["jobId"] for j in rest(ui_url, app_id, "/jobs")}
     t0 = time.perf_counter()
     run()
     wall = time.perf_counter() - t0
 
-    jobs = [j for j in rest(app_id, "/jobs") if j["jobId"] not in jobs_before]
-    stages = {s["stageId"]: s for s in rest(app_id, "/stages")}
+    jobs = [j for j in rest(ui_url, app_id, "/jobs") if j["jobId"] not in jobs_before]
+    stages = {s["stageId"]: s for s in rest(ui_url, app_id, "/stages")}
 
     def ms(iso_a, iso_b):
         from datetime import datetime
