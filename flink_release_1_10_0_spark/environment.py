@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_release_1_10_0_spark.catalog import register_tables
+from flink_release_1_10_0_spark.sql_temporal import TemporalTableFunction
 
 
 def _cols(exprs: Iterable[str | Column]) -> list[Column]:
@@ -133,34 +134,23 @@ class Table:
     limit = fetch
 
     def create_temporal_table_function(self, ts_col: str,
-                                       key_col: str) -> "TemporalTableFunction":
+                                       key_col: str) -> TemporalTableFunction:
         """``Table.createTemporalTableFunction`` (``Table.java:139``):
         view this table as a versioned history — for each key, the row
         with the greatest ``ts_col`` not after a probe time is the valid
         version.  Use with :meth:`temporal_join`."""
         return TemporalTableFunction(self._df, ts_col, key_col)
 
-    def temporal_join(self, ttf: "TemporalTableFunction", probe_ts: str,
+    def temporal_join(self, ttf: TemporalTableFunction, probe_ts: str,
                       probe_key: str, build_cols: list[str]) -> "Table":
         """Event-time temporal join against a temporal table function
         (``StreamExecTemporalJoin.scala:51`` /
         ``TemporalRowTimeJoinOperator.java:71`` semantics): each probe
         row is enriched with the version valid as of its ``probe_ts``."""
         from flink_release_1_10_0_spark.operators.joins import asof_join
-        return Table(asof_join(self._df, ttf.history,
-                               [(probe_key, ttf.key_col)],
-                               probe_ts, ttf.ts_col, build_cols))
-
-
-class TemporalTableFunction:
-    """Versioned-table handle produced by
-    ``Table.create_temporal_table_function`` (``TemporalTableFunction``
-    in flink-table-api-java)."""
-
-    def __init__(self, history, ts_col: str, key_col: str):
-        self.history = history
-        self.ts_col = ts_col
-        self.key_col = key_col
+        return Table(asof_join(self._df, ttf.versions,
+                               [(probe_key, ttf.primary_key)],
+                               probe_ts, ttf.time_attr, build_cols))
 
 
 class GroupedTable:
@@ -311,7 +301,7 @@ class TableEnvironment:
             df, primary_key, tuple(version_cols))
 
     def register_temporal_table_function(
-            self, name: str, ttf: "TemporalTableFunction") -> None:
+            self, name: str, ttf: TemporalTableFunction) -> None:
         """``tEnv.registerFunction("Rates", rates)`` (joins.md:163-166):
         makes ``LATERAL TABLE (Rates(o.rowtime))`` resolvable in
         sql_query."""
@@ -353,8 +343,7 @@ class TableEnvironment:
             parsed = ST.parse_from_clause(query)
             tables = ({parsed[0]: self.spark.table(parsed[0])}
                       if parsed else {})
-            fns = {n: ST.TemporalTableFunction(t.history, t.ts_col, t.key_col)
-                   for n, t in self._temporal_fns.items()}
+            fns = dict(self._temporal_fns)
             pa = {}
             if parsed:
                 col = self._proctime_attrs.get(parsed[0])

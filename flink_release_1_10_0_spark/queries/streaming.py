@@ -483,8 +483,9 @@ def stream_changelog_sum(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # CEP absence detection: error NOT followed by purchase within 30 min
-# (Pattern.notFollowedBy + WITHIN), via event-time timers.  Only windows
-# fully closed by the final watermark (max ts - 10 min) are decided.
+# (Pattern.notFollowedBy + WITHIN) on the NFA with event-time timers.
+# Only windows fully closed by the final watermark (max ts - 10 min) are
+# decided.
 # --------------------------------------------------------------------------
 _STREAM_CEP_ABSENT_ORACLE = """
 WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events)
@@ -502,9 +503,11 @@ WHERE a.event_type = 'error'
 @register("stream_cep_not_followed_by", _STREAM_CEP_ABSENT_ORACLE)
 def stream_cep_not_followed_by(spark, sf_dir):
     ev = read_stream_table(spark, sf_dir, "events")
+    m = (Pattern.begin("error").not_followed_by("purchase").within(30)
+         .match_stream(ev, watermark_timers="10 minutes"))
     return run_to_completion(
-        stateful.cep_not_followed_by(ev, "error", "purchase", within_minutes=30),
-        "append")
+        m.select("user_id", F.col("start_id").alias("first_id"),
+                 F.col("start_ts").alias("first_ts")), "append")
 
 
 # --------------------------------------------------------------------------
@@ -844,9 +847,8 @@ def stream_window_cogroup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# MATCH_RECOGNIZE with DEFINE predicates (StreamExecMatch.scala:69):
-# variables are arbitrary row predicates compiled to a symbol column
-# driving the same NFA — H = high-value click, P = purchase; PATTERN
+# MATCH_RECOGNIZE-style DEFINE predicates (StreamExecMatch.scala:69) as
+# Pattern where() conditions: H = high-value click, P = purchase;
 # (H P) within 30 minutes, each H consumed by its first P.
 # --------------------------------------------------------------------------
 _STREAM_MR_ORACLE = """
@@ -866,13 +868,9 @@ SELECT user_id, first_id, then_id, first_ts, then_ts FROM cand WHERE rn = 1
 
 @register("stream_match_recognize_define", _STREAM_MR_ORACLE)
 def stream_match_recognize_define(spark, sf_dir):
-    from flink_release_1_10_0_spark.streaming.cep import match_recognize
     ev = read_stream_table(spark, sf_dir, "events")
-    out = match_recognize(
-        ev, "user_id",
-        define={"H": "event_type = 'click' AND value >= 75",
-                "P": "event_type = 'purchase'"},
-        pattern=Pattern.begin("H").followed_by("P").within(30))
+    out = (Pattern.begin("click").where("value >= 75")
+           .followed_by("purchase").within(30).match_stream(ev))
     return run_to_completion(_first_then(out), "append")
 
 

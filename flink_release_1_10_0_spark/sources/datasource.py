@@ -126,28 +126,33 @@ def run_sequence_stream_to_end(spark, end: int, rows_per_batch: int,
     range, then stop — the bounded-run harness for a SourceFunction
     (``availableNow`` drains only one ``read()`` slice of a python
     stream reader, so completion is detected by row count).  Returns the
-    collected sink as a batch DataFrame."""
-    import tempfile
+    collected sink as a batch DataFrame; the checkpoint dir and the
+    sink's temp view do not outlive the call (the returned frame's plan
+    holds the sink itself)."""
     import time
+
+    from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
 
     register_sequence_source(spark)
     sdf = (spark.readStream.format("flink_sequence")
            .option("end", str(end))
            .option("rowsPerBatch", str(rows_per_batch)).load())
     qname = f"_seq_sink_{next(_run_counter)}"
-    ckpt = tempfile.mkdtemp(prefix="seq_stream_ckpt_")
-    q = (sdf.writeStream.format("memory").queryName(qname)
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    deadline = time.time() + timeout_s
-    try:
-        while spark.table(qname).count() < end:
-            if time.time() > deadline:
-                raise TimeoutError("sequence stream did not drain")
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    return spark.table(qname)
+    with scoped_checkpoint("seq_stream_ckpt_") as ckpt:
+        q = (sdf.writeStream.format("memory").queryName(qname)
+             .option("checkpointLocation", ckpt)
+             .trigger(processingTime="0 seconds").start())
+        deadline = time.time() + timeout_s
+        try:
+            while spark.table(qname).count() < end:
+                if time.time() > deadline:
+                    raise TimeoutError("sequence stream did not drain")
+                time.sleep(0.2)
+        finally:
+            q.stop()
+    out = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return out
 
 
 _run_counter = __import__("itertools").count()

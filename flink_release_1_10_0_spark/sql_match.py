@@ -743,4 +743,9 @@ def execute_match_recognize_sql(spark: SparkSession, query: str,
     # the outer remainder may itself use Flink group-window functions
     # (TUMBLE/HOP/SESSION over the match output) — rewrite them too
     from flink_release_1_10_0_spark.sql_windows import rewrite_group_windows
-    return spark.sql(rewrite_group_windows(spec.outer.replace("{VIEW}", view)))
+    try:
+        return spark.sql(
+            rewrite_group_windows(spec.outer.replace("{VIEW}", view)))
+    finally:
+        # the returned frame holds the analyzed plan, not the name
+        spark.catalog.dropTempView(view)

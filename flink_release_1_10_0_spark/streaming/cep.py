@@ -21,9 +21,10 @@ Every pattern gets the reference semantics and one output schema (see
   overlapping.
 - ``begin(A).followed_by(B).optional().followed_by(C).within(T)`` —
   both the ``A C`` and the ``A B C`` match.
-- ``begin(A).not_followed_by(B).within(T)`` — absence inside the
-  window, decided on watermark (``stateful.cep_not_followed_by``: a
-  timer emission, the one shape that does not run on the NFA).
+- ``begin(A).not_followed_by(B).within(T)`` — each A with no B in
+  ``(A.ts, A.ts + T]``, emitted when the window closes: on a stream
+  when the watermark reaches ``A.ts + T`` (``watermark_timers``), on a
+  bounded input at its end.
 
 Matches consume their events through the skip strategy, not through a
 different operator: ``.greedy()`` on the loop plus
@@ -86,27 +87,6 @@ class _Stage:
         if self.ors:
             base = "(" + " OR ".join([base] + [f"({o})" for o in self.ors]) + ")"
         return base
-
-    def flags(self) -> set[str]:
-        """Names of the non-default knobs set on this stage.
-        ``match_stream`` reads them to recognise the bare two-stage
-        ``not_followed_by`` shape (no knob but the negation), the one
-        pattern that does not run on the NFA."""
-        out = set()
-        for f_ in ("one_or_more", "negated", "strict", "any_match",
-                   "optional", "or_more", "consecutive", "greedy",
-                   "combinations"):
-            if getattr(self, f_):
-                out.add(f_)
-        if self.times_n is not None:
-            out.add("times_n")
-        if self.times_m is not None:
-            out.add("times_range")
-        if self.wheres or self.ors:
-            out.add("conditions")
-        if self.until_sql is not None:
-            out.add("until")
-        return out
 
 
 @dataclass
@@ -462,50 +442,35 @@ class Pattern:
 
         Every shape has the reference semantics and ``match_nfa``'s
         output schema; shapes the NFA cannot run raise
-        ``NotImplementedError`` (never silently-wrong results).  The one
-        exception is the two-stage trailing ``not_followed_by``, which
-        runs on ``stateful.cep_not_followed_by`` because its match is a
-        watermark timeout.  ``after_match`` is the reference's
-        ``AfterMatchSkipStrategy``: ``"skip_past_last"`` with a
-        ``.greedy()`` loop consumes matched events (one maximal match
-        per closing event).
+        ``NotImplementedError`` (never silently-wrong results).
+        ``after_match`` is the reference's ``AfterMatchSkipStrategy``:
+        ``"skip_past_last"`` with a ``.greedy()`` loop consumes matched
+        events (one maximal match per closing event).
 
         ``emit_timeouts=True`` is the ``PatternStream.flatSelect(
         timeoutTag, ...)`` surface: the output gains a ``timed_out``
         boolean column, and window-expired partial matches are emitted
         with it set (``TimedOutPartialMatchHandler.java``).  Requires
-        ``within(...)``.
+        ``within(...)`` and no negation stage.
 
         ``watermark_timers`` (a watermark delay string) arms cross-key
         event-time timers so a key that goes silent still flushes when
         the GLOBAL watermark passes its window — the reference's
         ``CepOperator.onEventTime``.  Requires ``within(...)`` and a
-        streaming source (see ``nfa.match_nfa``).
+        streaming source (see ``nfa.match_nfa``).  A trailing
+        ``not_followed_by`` on a stream needs it: its match is the
+        watermark closing the window; on a bounded input the end of
+        input closes it.
         """
-        from flink_release_1_10_0_spark.streaming import stateful
         from flink_release_1_10_0_spark.streaming.nfa import match_nfa
 
-        st = self.stages
-        w = self.within_minutes
-        if any(s.negated for s in st) and (
-                emit_timeouts or watermark_timers is not None):
+        if emit_timeouts and any(s.negated for s in self.stages):
             raise NotImplementedError(
-                "timeouts/watermark_timers with negation stages: an "
-                "absence pattern's timeout IS its match (see "
-                "stateful.cep_not_followed_by)")
-        if st[-1].negated:
-            # a trailing absence matches when the watermark closes A's
-            # window with no B: a timer emission, not an NFA transition
-            if (len(st) == 2 and not st[0].flags()
-                    and st[1].flags() == {"negated"} and w is not None
-                    and after_match == "no_skip"):
-                return stateful.cep_not_followed_by(
-                    events, st[0].event_type, st[1].event_type, w, key=key)
-            raise NotImplementedError(
-                "trailing notFollowedBy beyond the two-stage shape needs "
-                "watermark timers (see stateful.cep_not_followed_by)")
+                "emit_timeouts with negation stages: an absence "
+                "pattern's window closing IS its match, not a timeout")
         return match_nfa(events, self._compile_nfa_stages(),
-                         within_minutes=w, key=key, after_match=after_match,
+                         within_minutes=self.within_minutes, key=key,
+                         after_match=after_match,
                          emit_timeouts=emit_timeouts,
                          watermark_timers=watermark_timers)
 
@@ -1052,34 +1017,3 @@ def match_recognize_measures(matches: DataFrame, events: DataFrame,
         # excluded rows still count in RUNNING/FINAL aggregates
         out = out.filter(~F.col("classifier").isin(list(exclude)))
     return out
-
-
-def match_recognize(events: DataFrame, partition_by: str,
-                    define: dict[str, str], pattern: "Pattern",
-                    order_by: str = "ts") -> DataFrame:
-    """MATCH_RECOGNIZE-style entry point (``StreamExecMatch.scala:69`` /
-    ``MatchCodeGenerator.scala``): pattern variables are DEFINEd by
-    arbitrary row predicates, not just event types.
-
-    Compilation: evaluate the DEFINE predicates in declaration order and
-    assign each row its first matching variable as a symbol column (the
-    reference's NFA does the same — a row can take only one edge per
-    run); rows matching no variable keep a symbol that matches no stage,
-    so they still break strict (``next``) contiguity, exactly like
-    MATCH_RECOGNIZE's unmatched-row semantics.  The symbol column then
-    drives the same NFA as the event-type patterns.
-
-    ``pattern`` stages must name DEFINE variables.  Returns the match
-    stream of the compiled pattern.
-    """
-    from pyspark.sql import functions as F
-
-    # first-matching-variable-wins CASE chain, declaration order
-    expr = F.lit("__none__")
-    for var, pred in reversed(list(define.items())):
-        expr = F.when(F.expr(pred), F.lit(var)).otherwise(expr)
-    symbolized = (events
-                  .withColumn("__symbol", expr)  # DEFINEs see original cols
-                  .withColumnRenamed("event_type", "__orig_event_type")
-                  .withColumnRenamed("__symbol", "event_type"))
-    return pattern.match_stream(symbolized, key=partition_by)

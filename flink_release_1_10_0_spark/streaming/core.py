@@ -19,10 +19,24 @@ import itertools
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
 _counter = itertools.count()
+
+
+@contextmanager
+def scoped_checkpoint(prefix: str = "spark_graft_ckpt_") -> Iterator[str]:
+    """A temp checkpoint dir for one bounded streaming run, removed on
+    exit: once the query has terminated its result lives in the sink,
+    and a finished bounded run is never resumed."""
+    ckpt = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield ckpt
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -53,14 +67,12 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink;
     returns the collected sink as a batch DataFrame.  The checkpoint
-    dir is removed once the query has terminated: the memory sink holds
-    the result, and a finished bounded run is never resumed.  The sink's
+    dir is scoped to the run (:func:`scoped_checkpoint`).  The sink's
     temp view is dropped too: the returned frame's plan holds the sink
     itself, so it keeps working, and the session catalog stays flat."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    try:
+    with scoped_checkpoint() as ckpt:
         q = (result.writeStream
              .format("memory")
              .queryName(qname)
@@ -69,8 +81,6 @@ def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFra
              .trigger(availableNow=True)
              .start())
         q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
     out = spark.table(qname)
     spark.catalog.dropTempView(qname)
     return out

@@ -102,14 +102,24 @@ match per completed repetition (partial-match semantics).  Narrowings
 exact inner quantifiers (no negation/until/navigation/greedy/
 followedByAny inside); optional groups need relaxed seams.
 
+Trailing absence (``begin(A).notFollowedBy(B).within(T)``): a run that
+completes the last consuming stage WAITS at the trailing negated stage
+instead of emitting.  A negated event after its last consumed event and
+no later than ``start + within`` kills it; otherwise it emits as a
+NORMAL match when the window closes — on a stream, when the watermark
+reaches ``start + within`` (so ``watermark_timers`` is required), on a
+bounded input at the end of input.  A same-key event past the window
+does not decide it: a late negated event may still arrive until the
+watermark passes.
+
 Scope notes (documented narrowings vs the reference):
-- a trailing ``notFollowedBy`` is supported only via the dedicated
-  watermark-timer operator (``stateful.cep_not_followed_by``) that the
-  ``Pattern`` facade routes to; the generic engine supports negation
-  **between** consuming stages (guards) and ``notNext``.
-- a negation's neighbor stages must be non-optional, and the stage
-  before it non-looping (the guard window is then exactly "between the
-  two consumed events", matching the reference for these shapes).
+- negation sits between consuming stages (guards), or trails the
+  pattern with a ``within`` window and relaxed contiguity (a trailing
+  ``notNext`` and a leading negation are refused).
+- a negation's neighbor stages must be non-optional, non-negated, and
+  the stage before it non-looping and no group end (the guard window is
+  then exactly "between the two consumed events", matching the
+  reference for these shapes).
 - a trailing GREEDY unbounded RELAXED loop needs ``until()`` or a
   ``within`` window, and a trailing GREEDY ``optional`` is rejected:
   maximal-match emission would need lookahead ("no more loop events
@@ -238,10 +248,14 @@ def _validate(stages: list[NfaStage], has_window: bool = False) -> None:
     n = len(stages)
     if not stages:
         raise ValueError("empty pattern")
-    if stages[0].negated or stages[-1].negated:
+    if stages[0].negated:
+        raise NotImplementedError("a pattern cannot begin with a negation")
+    if stages[-1].negated and (not has_window
+                               or stages[-1].contiguity == "strict"):
         raise NotImplementedError(
-            "negation must sit between two consuming stages (trailing "
-            "notFollowedBy routes to stateful.cep_not_followed_by)")
+            "a trailing negation needs within() and relaxed contiguity "
+            "(notFollowedBy): its match is the window closing with no "
+            "negated event")
     last = stages[-1]
     if (last.greedy and last.is_loop() and last.until is None
             and not has_window
@@ -354,12 +368,15 @@ def _validate(stages: list[NfaStage], has_window: bool = False) -> None:
                     "in-between event, not a consuming edge)")
             if s.is_loop() or s.min_times != 1 or s.until:
                 raise NotImplementedError("negation stages take no quantifier")
-            if stages[i - 1].is_loop() or stages[i - 1].min_times == 0 \
-                    or (i + 1 < n and stages[i + 1].min_times == 0):
+            prv = stages[i - 1]
+            if (prv.is_loop() or prv.min_times == 0 or prv.negated
+                    or prv.group_start is not None
+                    or (i + 1 < n and stages[i + 1].min_times == 0)):
                 raise NotImplementedError(
-                    "negation neighbors must be non-optional, preceding "
-                    "stage non-looping (guard window = between the two "
-                    "consumed events)")
+                    "negation neighbors must be non-optional consuming "
+                    "stages, the preceding one non-looping and no group "
+                    "end (guard window = between the two consumed "
+                    "events)")
         if s.until is not None and not s.is_loop():
             raise NotImplementedError("until() applies to loop stages only")
         if s.min_times < 0 or (s.max_times is not None
@@ -531,6 +548,13 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
             "watermark_timers needs a streaming source: a bounded input "
             "has no watermark clock, and its end of input already "
             "flushes every key")
+    # the trailing negated stage a completed run waits at (None: no
+    # trailing absence)
+    absent = n - 1 if stages[-1].negated else None
+    if absent is not None and events.isStreaming and not timer_mode:
+        raise ValueError("a streaming trailing negation needs "
+                         "watermark_timers: its match is the watermark "
+                         "closing the window")
 
     # navigation bookkeeping (MatchCodeGenerator.scala's IterativeCondition
     # analog): which per-run closures refine which stages, which (var, col)
@@ -833,6 +857,25 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
         # CURRENT stage belongs to (0 outside groups / in the first rep)
         S, T, G, GS, A, L, EV, ST, EU, NV, GR = range(11)
 
+        def closes(run):
+            """A pending run that is a complete NORMAL match once its
+            window closes (or the input ends): a satisfied trailing-
+            greedy loop — nothing can extend it any more — or a run
+            waiting out a trailing absence."""
+            s_ = run[S]
+            return s_ == absent or (
+                spec[s_][GREEDY] and run[T] >= spec[s_][MIN]
+                and tail_opt[s_] and run[G] < 0)
+
+        def complete(out_runs, run_start, run_last, evs, sts, eus):
+            """The last consuming stage is done: emit the match, or —
+            before a trailing absence — wait out its window."""
+            if absent is None:
+                emit(run_start, run_last, evs, sts, eus)
+            else:
+                out_runs.append([absent, 0, -1, False, run_start,
+                                 run_last, evs, sts, eus, EMPTY_NAV, 0])
+
         def nav_take(nv, var, rowvals):
             """Copy-on-write nav update when an event is consumed into
             ``var``: append the tracked columns' values (bounded head +
@@ -939,31 +982,6 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                                if (q[0], q[2][0]) > cut]
             return live_runs
 
-        if timer_mode and state.hasTimedOut:
-            # cross-key event-time timer fired for a SILENT key
-            # (CepOperator.java:82 onEventTime → NFA advanceTime): the
-            # global watermark passed run_start + within for at least
-            # one run, with no same-key arrival to drive the per-event
-            # expiry arm.  Same disposition as that arm: a satisfied
-            # trailing-greedy run's maximal match is decided (nothing
-            # inside the window can extend it) and emits as a NORMAL
-            # match; other partials time out; held skip-strategy
-            # matches behind the expired runs unblock.
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            live = []
-            for run in runs:
-                if after_match != NO_SKIP and (run[A], run[EV][0]) <= cut:
-                    continue
-                if wm_us - run[A] > within_us:
-                    s_x = run[S]
-                    if (spec[s_x][GREEDY] and run[T] >= spec[s_x][MIN]
-                            and tail_opt[s_x] and run[G] < 0):
-                        emit(run[A], run[L], run[EV], run[ST], run[EU])
-                    elif emit_timeouts:
-                        timeouts.append((run[A], run[L], run[EV], run[ST]))
-                else:
-                    live.append(run)
-            runs = resolve(live)
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -1025,18 +1043,16 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                 eid, ts_us = ids[r_i], tss[r_i]
                 if eid == EOS_SENTINEL_ID:
                     # end-of-stream flush (bounded replays; the final
-                    # +inf watermark of a bounded reference job): a
-                    # satisfied trailing-greedy run's maximal match is
-                    # decided — emit it; every other partial times out
-                    # (or is dropped without the timeout output)
+                    # +inf watermark of a bounded reference job): a run
+                    # that ``closes`` is decided — emit it; every other
+                    # partial times out (or is dropped without the
+                    # timeout output)
                     blockers = []
                     for run in runs:
                         if after_match != NO_SKIP \
                                 and (run[A], run[EV][0]) <= cut:
                             continue
-                        s_f = run[S]
-                        if (spec[s_f][GREEDY] and run[T] >= spec[s_f][MIN]
-                                and tail_opt[s_f] and run[G] < 0):
+                        if closes(run):
                             emit(run[A], run[L], run[EV], run[ST], run[EU])
                         else:
                             if emit_timeouts:
@@ -1073,19 +1089,28 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                     # prunes the shared buffer the same way)
                     if after_match != NO_SKIP and (run[A], run[EV][0]) <= cut:
                         continue
+                    if run[S] == absent:
+                        # waiting out a trailing absence: only a negated
+                        # event inside (last consumed, start + within]
+                        # touches it — it kills the run.  The watermark
+                        # or the end of input emits it, never a same-key
+                        # event past the window (a late negated event
+                        # may still come)
+                        if not (m[absent] and run[L] < ts_us
+                                <= run[A] + within_us):
+                            new_runs.append(run)
+                        continue
                     # window expiry kills the run before it can consume —
-                    # but a SATISFIED trailing-greedy run is not a partial
-                    # match: the closing window is its loop-closing
-                    # condition (nothing inside the window can extend it
-                    # anymore), so the consumed maximum emits as a NORMAL
-                    # match (its span fits the window by construction).
-                    # Other runs: with emit_timeouts the consumed prefix
-                    # goes to the timeout output
-                    # (TimedOutPartialMatchHandler) instead of vanishing
+                    # but a run that ``closes`` (a SATISFIED trailing-
+                    # greedy loop) is not a partial match: the closing
+                    # window is its loop-closing condition, so the
+                    # consumed maximum emits as a NORMAL match (its span
+                    # fits the window by construction).  Other runs:
+                    # with emit_timeouts the consumed prefix goes to the
+                    # timeout output (TimedOutPartialMatchHandler)
+                    # instead of vanishing
                     if within_us is not None and ts_us - run[A] > within_us:
-                        s_x = run[S]
-                        if (spec[s_x][GREEDY] and run[T] >= spec[s_x][MIN]
-                                and tail_opt[s_x] and run[G] < 0):
+                        if closes(run):
                             emit(run[A], run[L], run[EV], run[ST], run[EU])
                         elif emit_timeouts:
                             timeouts.append((run[A], run[L], run[EV],
@@ -1290,7 +1315,8 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                             continue
                         if nxt >= n and t2 >= mnj and mxj is not None \
                                 and t2 == mxj:
-                            emit(run[A], ts_us, evs2, sts2, us2)
+                            complete(new_runs, run[A], ts_us, evs2, sts2,
+                                     us2)
                             continue
                         if t2 >= mnj and tail_opt[j] and not spec[j][GREEDY]:
                             # trailing-stage prefix emission: the match
@@ -1424,7 +1450,8 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                         mnj0, mxj0 = spec[js][MIN], spec[js][MAX]
                         nxt = real_next(js + 1)
                         if nxt >= n and mxj0 == 1:
-                            emit(ts_us, ts_us, [eid], [js], [ts_us])
+                            complete(new_runs, ts_us, ts_us, [eid], [js],
+                                     [ts_us])
                             continue
                         if (1 >= mnj0 and tail_opt[js]
                                 and not spec[js][GREEDY]):
@@ -1461,7 +1488,12 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                         seen.add(k2)
                         runs.append(r)
                 if len(runs) > MAX_RUNS_PER_KEY:
-                    runs = runs[-MAX_RUNS_PER_KEY:]
+                    # the cap drops the oldest PARTIAL runs; a run
+                    # waiting out a trailing absence is a complete match
+                    # awaiting its verdict, never dropped
+                    partial = [r for r in runs if r[S] != absent]
+                    runs = ([r for r in runs if r[S] == absent]
+                            + partial[-MAX_RUNS_PER_KEY:])
                 # start-order skip-strategy emission: held matches flush
                 # while no earlier-started partial remains (the
                 # reference resolves the completedMatches queue after
@@ -1474,6 +1506,33 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                     # the one an older emission's pruning id discards)
                     pending.sort(key=lambda p: (p[0], p[2][0]))
                     del pending[MAX_RUNS_PER_KEY:]
+
+        if timer_mode:
+            # cross-key event-time timers (CepOperator.java:82
+            # onEventTime → NFA advanceTime): the global watermark
+            # passed run_start + within, with no same-key arrival to
+            # drive the per-event expiry arm.  A timer fires with no
+            # events, so a silent key's runs expire once their timer
+            # fired; a trailing absence closes AT its window end and is
+            # checked on every call, after the call's events had their
+            # chance to kill it.  A run that ``closes`` emits as a
+            # NORMAL match; other partials time out; held skip-strategy
+            # matches behind the expired runs unblock.
+            wm_us = state.getCurrentWatermarkMs() * 1000
+            live = []
+            for run in runs:
+                if after_match != NO_SKIP and (run[A], run[EV][0]) <= cut:
+                    continue
+                if (run[A] + within_us <= wm_us if run[S] == absent
+                        else state.hasTimedOut
+                        and wm_us - run[A] > within_us):
+                    if closes(run):
+                        emit(run[A], run[L], run[EV], run[ST], run[EU])
+                    elif emit_timeouts:
+                        timeouts.append((run[A], run[L], run[EV], run[ST]))
+                else:
+                    live.append(run)
+            runs = resolve(live)
 
         if not runs and not pending and not prev_rows and cut == (-1, -1):
             # nothing to persist: drop the state row entirely instead of
@@ -1507,11 +1566,12 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                           [u for p in pending for u in p[4]]))
             if timer_mode and runs:
                 # re-arm for the earliest live run's window close: fires
-                # strictly after run_start + within (ms granularity), and
-                # always strictly after the current watermark (Spark's
+                # strictly after run_start + within (ms granularity; a
+                # trailing absence closes AT it), and always strictly
+                # after the current watermark (Spark's
                 # setTimeoutTimestamp contract)
-                deadline_ms = (min(r[A] for r in runs)
-                               + within_us) // 1000 + 1
+                deadline_ms = min((r[A] + within_us) // 1000
+                                  + (r[S] != absent) for r in runs)
                 state.setTimeoutTimestamp(
                     max(deadline_ms, state.getCurrentWatermarkMs() + 1))
         if matches or timeouts:

@@ -35,11 +35,12 @@ analog — a plain DB-API lookup, no SparkSession required.
 from __future__ import annotations
 
 import itertools
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
 
 _counter = itertools.count()
 
@@ -151,16 +152,14 @@ def as_queryable_state(state_df: DataFrame, name: str,
     else:
         raise ValueError(f"unknown queryable-state backend: {backend}")
 
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_qstate_")
-    writer = writer.option("checkpointLocation", ckpt)
     if bounded:
-        try:
-            handle.query = writer.trigger(availableNow=True).start()
+        with scoped_checkpoint("spark_graft_qstate_") as ckpt:
+            handle.query = (writer.option("checkpointLocation", ckpt)
+                            .trigger(availableNow=True).start())
             handle.query.awaitTermination()
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
     else:
-        handle.query = writer.start()
+        ckpt = tempfile.mkdtemp(prefix="spark_graft_qstate_")
+        handle.query = writer.option("checkpointLocation", ckpt).start()
     return handle
 
 

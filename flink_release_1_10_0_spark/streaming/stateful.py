@@ -8,8 +8,8 @@ These are the reference operators with NO declarative Spark equivalent
 - streaming top-N:  ``runtime/operators/rank/AppendOnlyTopNFunction.java:46``
   — maintain the N best rows per key as events arrive.
 
-State is a compact per-key summary (the current winner set / pending
-partial matches), never the full history — the same bounded-state
+State is a compact per-key summary (the current winner set, a running
+total, a version table), never the full history — the same bounded-state
 contract the reference's operators guarantee.  At scale, state lives in
 the state store (RocksDB provider), partitioned by the group key.
 """
@@ -292,66 +292,6 @@ def over_running_agg(events: DataFrame, key: str = "user_id") -> DataFrame:
     return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "append", GroupStateTimeout.NoTimeout))
-
-
-def cep_not_followed_by(events: DataFrame, first_type: str, then_type: str,
-                        within_minutes: float, key: str = "user_id",
-                        watermark_delay: str = "10 minutes") -> DataFrame:
-    """CEP absence detection: ``begin(A).notFollowedBy(B).within(T)``
-    (``Pattern.java`` notFollowedBy + WITHIN; NFA pending-state timeout).
-
-    An A row is emitted only when its window ``(A.ts, A.ts + T]`` closes
-    — the event-time watermark passes the deadline — without a matching
-    B for the same key.  Uses real event-time timers
-    (``GroupStateTimeout.EventTimeTimeout`` + ``setTimeoutTimestamp``),
-    the Spark analog of the reference's timer service
-    (``KeyedProcessFunction`` timers / ``CepOperator`` NFA timeouts).
-    """
-    out_schema = "user_id bigint, first_id bigint, first_ts timestamp"
-    state_schema = "pids array<bigint>, pus array<bigint>"
-    within_us = int(within_minutes * 60_000_000)
-
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pids, pus = state.get
-            pending = sorted(zip(list(pus), list(pids)))  # (ts_us, id)
-        else:
-            pending = []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for et, eid, ts_us in zip(pdf["event_type"].tolist(),
-                                          _i64(pdf, "event_id"), _ts_us(pdf)):
-                    if et == first_type:
-                        pending.append((ts_us, eid))
-                    elif et == then_type:
-                        pending = [(aus, aid) for (aus, aid) in pending
-                                   if not (0 < ts_us - aus <= within_us)]
-        # emit every pending A whose deadline the watermark has passed
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        expired = [(aus, aid) for (aus, aid) in pending if aus + within_us <= wm_us]
-        pending = [(aus, aid) for (aus, aid) in pending if aus + within_us > wm_us]
-        if pending:
-            next_deadline_ms = min(aus + within_us for aus, _ in pending) // 1000
-            state.update(([p[1] for p in pending], [p[0] for p in pending]))
-            state.setTimeoutTimestamp(max(next_deadline_ms,
-                                          state.getCurrentWatermarkMs() + 1))
-        elif state.exists:
-            state.remove()
-        else:
-            state.update(([], []))
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 60_000)
-        if expired:
-            yield pd.DataFrame({
-                "user_id": [key_[0]] * len(expired),
-                "first_id": [e[1] for e in expired],
-                "first_ts": pd.to_datetime([e[0] for e in expired], unit="us")})
-
-    return (_prune(events, [key, "ts", "event_id", "event_type"])
-            .withWatermark("ts", watermark_delay)
-            .groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.EventTimeTimeout))
 
 
 def temporal_sort(events: DataFrame, key: str = "user_id",

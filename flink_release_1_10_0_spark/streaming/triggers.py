@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
+
 _counter = itertools.count()
 
 
@@ -55,8 +57,8 @@ def run_with_early_firings(agg: DataFrame,
     opportunity, exactly like the reference's trigger interval.
     """
     spark = agg.sparkSession
+    # the firing log outlives the run: the returned frame reads it lazily
     out_dir = tempfile.mkdtemp(prefix=f"early_fire_out_{next(_counter)}_")
-    ckpt = tempfile.mkdtemp(prefix=f"early_fire_ckpt_{next(_counter)}_")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         # update-mode: batch_df holds only the keys updated this batch
@@ -71,13 +73,14 @@ def run_with_early_firings(agg: DataFrame,
              .withColumn("batch_id", F.lit(None).cast("bigint")))
     empty.write.mode("append").parquet(out_dir)
 
-    q = (agg.writeStream
-         .outputMode("update")
-         .foreachBatch(sink)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    with scoped_checkpoint("early_fire_ckpt_") as ckpt:
+        q = (agg.writeStream
+             .outputMode("update")
+             .foreachBatch(sink)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
 
     fired = spark.read.parquet(out_dir).filter(F.col("batch_id").isNotNull())
     out_cols = [c for c in fired.columns if c != "batch_id"]

@@ -282,3 +282,25 @@ def test_batch_route_equals_eos_replay_define_aggregate(spark,
         spark, tmp_path_factory.getbasetemp(), vals,
         _mr_stages("A+ B", {"A": f"AVG(A.value) < {thr}", "B": "TRUE"}),
         SKIP_PAST_LAST)
+
+
+def test_mr_sql_leaves_no_temp_views(spark):
+    """execute_match_recognize_sql drops the view it registers for the
+    outer query once spark.sql has analyzed it: three calls keep the
+    catalog flat, and each returned frame still collects."""
+    from flink_release_1_10_0_spark.sql_match import (
+        execute_match_recognize_sql)
+
+    df = _events(spark, [_ev(1, 0, "a"), _ev(2, 1, "b"), _ev(3, 2, "c")])
+
+    def tables():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = tables()
+    frames = [execute_match_recognize_sql(spark, _MR_SQL, batch_df=df)
+              for _ in range(3)]
+    assert tables() == before
+    for f in frames:
+        assert [(r.user_id, r.a_id, r.c_id) for r in f.collect()] == \
+            [(1, 1, 3)]
+        assert f.count() == 1

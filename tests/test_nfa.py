@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import tempfile
 
+import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_release_1_10_0_spark.streaming.core import run_to_completion
@@ -327,7 +330,7 @@ def test_watermark_timers_require_window(spark):
 
 def test_pattern_facade_routes_watermark_timers(spark):
     """Pattern.match_stream(watermark_timers=...) routes to the generic
-    NFA with timers armed; refusals stay loud (no window / negation)."""
+    NFA with timers armed; the refusal stays loud (no window)."""
     from flink_release_1_10_0_spark.streaming.cep import Pattern
 
     ev = _stream(spark, [_ev(1, 0, "a")])
@@ -338,9 +341,6 @@ def test_pattern_facade_routes_watermark_timers(spark):
     assert out.isStreaming
     with pytest.raises(ValueError, match="watermark_timers"):
         (Pattern.begin("a").followed_by("b")
-         .match_stream(ev, watermark_timers="0 seconds"))
-    with pytest.raises(NotImplementedError, match="cep_not_followed_by"):
-        (Pattern.begin("a").not_followed_by("b").within(10)
          .match_stream(ev, watermark_timers="0 seconds"))
 
 
@@ -1133,3 +1133,107 @@ def test_equal_timestamps_order_by_event_id(spark):
     got = sorted((r.user_id, r.start_id, r.end_id) for r in out.collect())
     assert got == [(1, 1, 2), (2, 4, 5)]
 
+
+# --------------------------------------------------------------------------
+# Trailing absence: begin(A).not_followed_by(B).within(W) on the NFA.  A
+# run that completes the last consuming stage waits at the negated stage;
+# a B in (last consumed ts, start + W] kills it, the end of a bounded input
+# (or, on a stream, the watermark reaching start + W) emits it.
+# --------------------------------------------------------------------------
+
+def _batch(spark, rows):
+    return (spark.createDataFrame(rows, _SCHEMA)
+            .withColumn("ts", F.col("ts").cast("timestamp")))
+
+
+@given(seq=st.lists(st.tuples(st.integers(min_value=1, max_value=2),
+                              st.integers(min_value=0, max_value=40),
+                              st.sampled_from("abx")),
+                    min_size=1, max_size=25))
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_trailing_absence_batch_equals_brute_force(spark, seq):
+    """The batch route of begin(a).not_followed_by(b).within(10) emits
+    exactly the a events with NO b of the same key in (a.ts, a.ts + 10
+    min] — equal timestamps included on random per-key sequences."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+    rows = [_ev(i, minute, et, user=user)
+            for i, (user, minute, et) in enumerate(seq, 1)]
+    pdf = pd.DataFrame([(i, m, u, et) for i, (u, m, et) in
+                        enumerate(seq, 1)],
+                       columns=["id", "minute", "user", "et"])
+    a, b = pdf[pdf.et == "a"], pdf[pdf.et == "b"]
+    want = sorted(
+        (int(r.user), int(r.id)) for r in a.itertuples()
+        if not ((b.user == r.user) & (b.minute > r.minute)
+                & (b.minute <= r.minute + 10)).any())
+    out = (Pattern.begin("a").not_followed_by("b").within(10)
+           .match_stream(_batch(spark, rows)))
+    assert not out.isStreaming
+    got = sorted((r.user_id, r.start_id) for r in out.collect())
+    assert got == want
+    assert all(r.start_id == r.end_id for r in out.collect())
+
+
+def test_trailing_absence_after_two_stages(spark):
+    """a followed_by b, not_followed_by c, within 10: a c after the
+    consumed b and no later than a.ts + 10 kills the match; a c before
+    b, or past the window, does not."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+    rows = [_ev(1, 0, "a", user=1), _ev(2, 2, "b", user=1),
+            _ev(3, 5, "c", user=1),                       # killed
+            _ev(4, 0, "a", user=2), _ev(5, 1, "c", user=2),
+            _ev(6, 2, "b", user=2),                       # c before b
+            _ev(7, 0, "a", user=3), _ev(8, 2, "b", user=3),
+            _ev(9, 11, "c", user=3),                      # c past window
+            _ev(10, 0, "a", user=4), _ev(11, 2, "b", user=4),
+            _ev(12, 10, "c", user=4)]                     # c at the edge
+    out = (Pattern.begin("a").followed_by("b").not_followed_by("c")
+           .within(10).match_stream(_batch(spark, rows)))
+    assert sorted((r.user_id, tuple(r.ev_ids), tuple(r.ev_stages))
+                  for r in out.collect()) == [(2, (4, 6), (0, 1)),
+                                              (3, (7, 8), (0, 1))]
+
+
+def test_trailing_absence_on_bounded_input_collects(spark):
+    """A bounded trailing absence is one keyed batch query: of three
+    errors, the one followed by a purchase inside 30 minutes is blocked
+    and the other two come back."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+    rows = [_ev(1, 0, "error"), _ev(2, 10, "purchase"),
+            _ev(3, 20, "error"), _ev(4, 59, "purchase"),
+            _ev(5, 5, "error", user=2)]
+    out = (Pattern.begin("error").not_followed_by("purchase").within(30)
+           .match_stream(_batch(spark, rows)))
+    assert sorted((r.user_id, r.start_id) for r in out.collect()) == \
+        [(1, 3), (2, 5)]
+
+
+def test_trailing_absence_waiting_runs_are_not_capped(spark):
+    """MAX_RUNS_PER_KEY bounds partial runs only: 600 unblocked a events
+    of one key all wait for the end of input, and all 600 emit."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+    from flink_release_1_10_0_spark.streaming.nfa import MAX_RUNS_PER_KEY
+
+    n = MAX_RUNS_PER_KEY + 88
+    df = (spark.createDataFrame([(i, i * 60, 1, "a", 0.0) for i in range(n)],
+                                "event_id bigint, sec bigint, user_id bigint, "
+                                "event_type string, value double")
+          .withColumn("ts", F.timestamp_seconds("sec")).drop("sec"))
+    out = Pattern.begin("a").not_followed_by("b").within(30).match_stream(df)
+    assert out.count() == n
+
+
+def test_streaming_trailing_absence_needs_watermark_timers(spark):
+    """On a stream the match of a trailing absence IS the watermark
+    closing its window: without watermark_timers the build refuses."""
+    from flink_release_1_10_0_spark.streaming.cep import Pattern
+
+    p = Pattern.begin("a").not_followed_by("b").within(10)
+    with pytest.raises(ValueError, match="watermark_timers"):
+        p.match_stream(_stream(spark, [_ev(1, 0, "a")]))
+    assert p.match_stream(_stream(spark, [_ev(1, 0, "a")]),
+                          watermark_timers="0 seconds").isStreaming

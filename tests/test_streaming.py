@@ -469,6 +469,39 @@ def test_run_to_completion_leaves_no_sink_views(spark):
     assert tables() == before
 
 
+@pytest.mark.parametrize("name", ["stream_window_early_fire",
+                                  "source_custom_fn_stream"])
+def test_bounded_runs_leave_no_checkpoints_or_views(spark, name, tmp_path,
+                                                   monkeypatch):
+    """The early-firing and sequence-source harnesses scope their
+    checkpoint dirs to the run, and the sequence harness drops its sink
+    view: three runs keep the checkpoint-dir count and the catalog flat,
+    and each returned frame still collects to the first run's rows."""
+    import os
+    import tempfile
+
+    from flink_release_1_10_0_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    # a private temp dir: other processes' runs cannot move the count
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def state():
+        return (sum(p.startswith(("early_fire_ckpt_", "seq_stream_ckpt_"))
+                    for p in os.listdir(tmp_path)),
+                sorted(t.name for t in spark.catalog.listTables()))
+
+    before = state()
+    first = None
+    for _ in range(3):
+        rows = sorted(map(tuple, all_queries()[name](spark, SF_DIR)
+                          .collect()), key=repr)
+        first = first or rows
+        assert rows == first
+    assert first
+    assert state() == before
+
+
 def test_latency_tracker_captures_trigger_histogram(spark):
     """LatencyMarker analog (streaming/metrics.py): per-trigger latency
     metrics captured via StreamingQueryListener during a bounded run."""
