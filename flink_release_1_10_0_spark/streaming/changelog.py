@@ -21,7 +21,9 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from flink_release_1_10_0_spark.streaming.keyed import keyed_state
 
 
 def changelog_sum(events: DataFrame, key: str = "event_type",
@@ -33,15 +35,10 @@ def changelog_sum(events: DataFrame, key: str = "event_type",
     out_schema = f"op string, {key} string, total double, seq bigint"
     state_schema = "cents bigint, seq bigint"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         cents, seq = state.get if state.exists else (None, 0)
-        add = 0
-        n = 0
-        for pdf in pdfs:
-            if len(pdf):
-                add += int((pdf[value_col] * 100).round().astype("int64").sum())
-                n += len(pdf)
-        if n:
+        if len(pdf):
+            add = int((pdf[value_col] * 100).round().astype("int64").sum())
             new = (cents or 0) + add
             rows = []
             if cents is None:
@@ -54,11 +51,8 @@ def changelog_sum(events: DataFrame, key: str = "event_type",
             state.update((new, seq))
             yield pd.DataFrame(rows, columns=["op", key, "total", "seq"])
 
-    # prune before the keyed shuffle (Catalyst can't see through the
-    # Python state function)
-    return (events.select(key, value_col).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=[value_col])
 
 
 def materialize(changelog: DataFrame, key_cols: list[str],

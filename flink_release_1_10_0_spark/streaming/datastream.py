@@ -8,7 +8,7 @@ keyBy, process :680, assignTimestampsAndWatermarks :931, print :1005) and
 
 Design: a thin shell where every method lowers to a declarative
 DataFrame op so Catalyst optimizes the whole pipeline; the arbitrary-
-stateful entries (``process``) route to ``applyInPandasWithState``.
+stateful entries (``process``) route to ``keyed.keyed_state``.
 Column-expression arguments (strings or Columns) are preferred over
 Python lambdas — lambdas force serialization barriers; expressions stay
 JVM-side.  ``map``/``flat_map`` accept expressions for exactly that
@@ -291,15 +291,18 @@ class KeyedStream:
     def process(self, fn, output_schema: str, state_schema: str,
                 output_mode: str = "update",
                 timeout: Any = None) -> DataStream:
-        """KeyedProcessFunction analog -> ``applyInPandasWithState``.
-        ``fn(key, pdf_iter, state)`` with GroupState; timers map to
-        ``GroupStateTimeout`` configs."""
-        from pyspark.sql.streaming.state import GroupStateTimeout
-        to = timeout or GroupStateTimeout.NoTimeout
-        return DataStream(
-            self._df.groupBy(*self._keys)
-            .applyInPandasWithState(fn, output_schema, state_schema,
-                                    output_mode, to))
+        """KeyedProcessFunction analog -> ``keyed.keyed_state``.
+        ``fn(key, pdf_iter, state)`` with GroupState, the key's rows of
+        the call in arrival order; timers map to ``GroupStateTimeout``
+        configs."""
+        from flink_release_1_10_0_spark.streaming.keyed import keyed_state
+
+        def call(key, pdf, state):
+            return fn(key, iter((pdf,) if len(pdf) else ()), state)
+
+        return DataStream(keyed_state(
+            self._df, self._keys, call, output_schema, state_schema,
+            output_mode=output_mode, timeout=timeout))
 
     def interval_join(self, other: "KeyedStream", left_ts: str, right_ts: str,
                       lower: str, upper: str) -> DataStream:

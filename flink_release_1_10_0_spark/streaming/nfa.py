@@ -1,5 +1,6 @@
-"""General CEP NFA over ``applyInPandasWithState`` (streaming input) or
-a keyed ``applyInPandas`` (bounded input) — arbitrary-length pattern
+"""General CEP NFA, one state function run by ``keyed.keyed_state``
+(``applyInPandasWithState`` on a streaming input, a keyed
+``applyInPandas`` on a bounded one) — arbitrary-length pattern
 sequences with quantifiers, or-conditions, until, greedy, and
 mid-pattern negation.
 
@@ -23,9 +24,11 @@ Execution model (Spark-first):
   references (never the event history), like the reference's
   per-variable match buffer.
 - Per key, a list of partial-match *runs* evolves event-by-event in
-  (ts, event_id) order; state is the run list (typed Arrow arrays),
-  bounded by the within-window and a hard run cap — never the event
-  history.
+  (ts, *tiebreakers, event_id) order: ``keyed_state`` hands the state
+  function a key's rows of a call as one frame sorted that way, so the
+  Arrow chunking never changes a match.  State is the run list (typed
+  Arrow arrays), bounded by the within-window and a hard run cap —
+  never the event history.
 - Transitions per event mirror the reference NFA's edge set
   (``NFACompiler.java:827`` conditions walked by ``NFA.java``'s
   decision graph): TAKE (consume into the current stage or any
@@ -157,7 +160,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from flink_release_1_10_0_spark.streaming.keyed import (
+    EOS_SENTINEL_ID, i64_list, keyed_state, ts_us_list)
 
 MAX_RUNS_PER_KEY = 512
 
@@ -169,17 +175,16 @@ MAX_RUNS_PER_KEY = 512
 # announced format break, not a surprise.
 NFA_STATE_FORMAT_VERSION = 4
 
-# End-of-stream sentinel id for BOUNDED inputs: a row whose id equals
-# this value flushes the key's pending runs — the analog of the final
-# +inf watermark a bounded reference job emits.  The batch route
-# appends one per key group itself (``_bounded_group_fn``); a bounded
-# table replayed as a stream gets them from ``with_eos_sentinels``.  Satisfied
+# End of input (``keyed.EOS_SENTINEL_ID``): a row whose id equals the
+# sentinel flushes the key's pending runs — the analog of the final +inf
+# watermark a bounded reference job emits.  ``keyed_state``'s batch route
+# appends one per key group (``eos_col=id_col``); a bounded table
+# replayed as a stream must carry its own, sorting last.  Satisfied
 # trailing-greedy runs emit as NORMAL matches (their maximal consumed
 # prefix is decided: nothing follows); other partials go to the timeout
 # output when ``emit_timeouts`` is on, else are dropped.  The sentinel
 # row itself never matches a stage, never starts a run, and never
 # appears in any output.
-EOS_SENTINEL_ID = -(2 ** 62)
 
 NO_SKIP = "no_skip"                    # AfterMatchSkipStrategy.noSkip (default)
 SKIP_TO_NEXT = "skip_to_next"          # AfterMatchSkipStrategy.skipToNext
@@ -384,42 +389,6 @@ def _validate(stages: list[NfaStage], has_window: bool = False) -> None:
             raise ValueError("bad quantifier bounds")
 
 
-def _sort_permutation(pdf, sort_cols, asc):
-    """np.lexsort permutation equal to ``pdf.sort_values(sort_cols,
-    ascending=asc)`` when every key casts to a numeric/datetime dtype;
-    None when a key needs object comparison (the caller then falls back
-    to pandas).  The NFA's composite key ends in the unique event id, so
-    the order is total and sort stability is irrelevant; NaN sorts last
-    under both engines (ascending: numpy end-sorts NaN; descending via
-    negation: -NaN is still NaN, and pandas keeps na_position='last'
-    for both directions)."""
-    keys_np = []
-    for c, a in zip(sort_cols, asc):
-        arr = pdf[c].to_numpy()
-        k = arr.dtype.kind
-        if k in "Mm":
-            if np.isnat(arr).any():
-                return None     # NaT casts to int64-min (would sort
-                                # first); pandas puts NaT last — fall back
-            if k == "M":
-                arr = arr.astype("datetime64[us]")
-            arr = arr.astype("int64")
-        elif k in "bui":
-            if k == "u" and arr.size and \
-                    int(arr.max()) > np.iinfo(np.int64).max:
-                return None     # uint64 >= 2**63 would wrap negative
-                                # under the int64 cast (silent mis-sort)
-            arr = arr.astype("int64")
-        elif k != "f":
-            return None
-        if not a and arr.dtype.kind == "i" and arr.size and \
-                int(arr.min()) == np.iinfo(np.int64).min:
-            return None         # negating INT64_MIN overflows — fall back
-        keys_np.append(arr if a else -arr)
-    # np.lexsort takes least-significant key first
-    return np.lexsort(tuple(reversed(keys_np)))
-
-
 def _bool_list(arr):
     """__m/__u predicate bits to a plain Python bool list: bool dtype
     when null-free; the float NA form maps NaN to False via elementwise
@@ -449,11 +418,12 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
     stage indexes (``ev_ids``/``ev_stages``) plus scalar start/end
     columns for oracle-friendly projection.
 
-    The route follows ``events.isStreaming``.  A streaming input runs
-    through ``applyInPandasWithState`` and returns an append stream.  A
-    batch input is bounded by definition: it runs the same state
-    function once per key group through ``groupBy(key).applyInPandas``
-    and returns a lazy batch frame; the end of each group flushes the
+    The route follows ``events.isStreaming`` (``keyed.keyed_state``).
+    A streaming input runs through ``applyInPandasWithState`` and
+    returns an append stream.  A batch input is bounded by definition:
+    it runs the same state function once per key group through
+    ``groupBy(key).applyInPandas`` and returns a lazy batch frame; the
+    end-of-input row ``keyed_state`` appends to each group flushes the
     key's pending runs (the final +inf watermark of a bounded reference
     job), so satisfied trailing-greedy runs emit and held skip-strategy
     matches resolve.
@@ -543,11 +513,6 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                          "a window a silent key's pending runs are "
                          "undecidable (no event can be ruled out)")
     timer_mode = watermark_timers is not None
-    if timer_mode and not events.isStreaming:
-        raise NotImplementedError(
-            "watermark_timers needs a streaming source: a bounded input "
-            "has no watermark clock, and its end of input already "
-            "flushes every key")
     # the trailing negated stage a completed run waits at (None: no
     # trailing absence)
     absent = n - 1 if stages[-1].negated else None
@@ -637,25 +602,23 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
             if s.until:
                 tagged = tagged.withColumn(f"__u{i}", F.expr(s.until))
                 pred_cols.append(f"__u{i}")
-    # prune before the keyed shuffle: Catalyst cannot see through the
-    # Python state function, so an explicit projection is what keeps the
-    # wide event payload out of the exchange — the NFA only needs the
-    # key, time, id, order tiebreakers, the precomputed predicate bits,
-    # and (nav only) the navigated value columns
+    # the columns the state function reads (keyed_state projects to
+    # them before the keyed shuffle, keeping the wide event payload out
+    # of the exchange): the key, time, id, order tiebreakers, the
+    # precomputed predicate bits, and (nav only) the navigated value
+    # columns
     base_cols = [*keys, ts_col, *[c for c in tiebreak
                                   if c not in (*keys, ts_col, id_col)],
                  id_col]
     extra_cols = sorted(nav_row_cols - set(base_cols))
-    tagged = tagged.select(*base_cols, *pred_cols, *extra_cols)
     # ship the event time as unix_micros int64, not timestamp: the NFA
     # consumes microseconds anyway (the old path cast datetime64[us] ->
     # int64 per chunk), and a plain int64 column skips the serializer's
     # per-chunk timestamp-localization pass (same §4.1 boundary cost as
     # the packed bits above; order is preserved — unix_micros is
-    # monotonic).  Timer mode keeps the real timestamp: withWatermark
-    # below needs the event-time column.
-    ts_is_us = not timer_mode and ts_col not in keys
-    if ts_is_us:
+    # monotonic).  Timer mode keeps the real timestamp: keyed_state's
+    # withWatermark needs the event-time column.
+    if not timer_mode and ts_col not in keys:
         tagged = tagged.withColumn(ts_col, F.unix_micros(F.col(ts_col)))
 
     by_type = {f.name: f.dataType.simpleString()
@@ -811,7 +774,7 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                 return g
         return -1
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         import json as _json
 
         from flink_release_1_10_0_spark.streaming.navexpr import (
@@ -982,40 +945,24 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                                if (q[0], q[2][0]) > cut]
             return live_runs
 
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            sort_cols = [ts_col, *[c for c in tiebreak
-                                   if c not in (ts_col, id_col)], id_col]
-            asc = [c not in tb_desc for c in sort_cols]
-            order = _sort_permutation(pdf, sort_cols, asc)
-            if order is None:
-                pdf = pdf.sort_values(sort_cols, ascending=asc)
-
-            def _col(c):
-                a = pdf[c].to_numpy()
-                return a if order is None else a[order]
-
-            ids = _col(id_col).astype("int64").tolist()
-            if ts_is_us:
-                tss = _col(ts_col).astype("int64", copy=False).tolist()
-            else:
-                tss = (_col(ts_col).astype("datetime64[us]")
-                       .astype("int64").tolist())
+        if len(pdf):
+            ids = i64_list(pdf, id_col)
+            tss = ts_us_list(pdf, ts_col)
             if use_bits:
                 # unpack the single int64 bit column at C speed: bit i
                 # = stage i's pred, until bits at until_off[i]
-                mb = _col("__bits").astype(np.int64, copy=False)
+                mb = pdf["__bits"].to_numpy().astype(np.int64, copy=False)
                 mvec = [((mb >> i) & 1).astype(np.bool_).tolist()
                         for i in range(n)]
                 uvec = [((mb >> until_off[i]) & 1).astype(np.bool_).tolist()
                         if spec[i][HAS_UNTIL] else None for i in range(n)]
             else:
-                mvec = [_bool_list(_col(f"__m{i}")) for i in range(n)]
-                uvec = [_bool_list(_col(f"__u{i}"))
+                mvec = [_bool_list(pdf[f"__m{i}"].to_numpy())
+                        for i in range(n)]
+                uvec = [_bool_list(pdf[f"__u{i}"].to_numpy())
                         if spec[i][HAS_UNTIL] else None for i in range(n)]
             # per-row tuples of the precomputed predicate bits, built
-            # once per chunk at C speed instead of a per-event listcomp
+            # once per call at C speed instead of a per-event listcomp
             mrows = list(zip(*mvec))
             if nav_fns:
                 # NaN -> NULL once per column, then one zip-transpose
@@ -1025,7 +972,7 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
                 if cols_nav:
                     cleaned = [[None if (isinstance(v, float) and v != v)
                                 else v
-                                for v in _col(c).tolist()]
+                                for v in pdf[c].tolist()]
                                for c in cols_nav]
                     rowdicts = [dict(zip(cols_nav, t))
                                 for t in zip(*cleaned)]
@@ -1607,52 +1554,14 @@ def match_nfa(events: DataFrame, stages: list[NfaStage],
 
     if os.environ.get("SPARK_GRAFT_NFA_PROFILE"):
         fn = _profile_wrap(fn, os.environ["SPARK_GRAFT_NFA_PROFILE"])
-    if not events.isStreaming:
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import DataType
-        empty = (to_arrow_schema(DataType.fromDDL(out_schema))
-                 .empty_table().to_pandas())
-        return (tagged.groupBy(*keys)
-                .applyInPandas(_bounded_group_fn(fn, id_col, empty),
-                               out_schema))
-    if timer_mode:
-        return (tagged.withWatermark(ts_col, watermark_timers)
-                .groupBy(*keys)
-                .applyInPandasWithState(
-                    fn, out_schema, state_schema, "append",
-                    GroupStateTimeout.EventTimeTimeout))
-    return (tagged.groupBy(*keys)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
-
-
-class _BoundedGroupState:
-    """GroupState stand-in for the batch route: a key's whole group
-    arrives in one call, so there is no prior state, nothing to persist
-    and no timer (``NoTimeout`` only)."""
-    exists = False
-
-    def update(self, _value) -> None:
-        pass
-
-    def remove(self) -> None:
-        pass
-
-
-def _bounded_group_fn(fn, id_col: str, empty: pd.DataFrame):
-    """Adapt the NFA state function to ``applyInPandas``: feed the key's
-    whole group, then one end-of-stream row (a copy of a group row with
-    ``id = EOS_SENTINEL_ID``, so every column keeps its dtype) as its own
-    final chunk — the bounded job's +inf watermark.  A key without
-    matches returns ``empty``, a zero-row frame typed like the output
-    schema (Arrow cannot cast an untyped float64 column to a timestamp
-    or array)."""
-    def run(key_, pdf):
-        eos = pdf.iloc[-1:].copy()
-        eos[id_col] = EOS_SENTINEL_ID
-        frames = list(fn(key_, iter((pdf, eos)), _BoundedGroupState()))
-        return pd.concat(frames, ignore_index=True) if frames else empty
-    return run
+    return keyed_state(
+        tagged, keys, fn, out_schema, state_schema,
+        cols=[*base_cols, *pred_cols, *extra_cols],
+        order=[ts_col, *[c for c in tiebreak if c not in (ts_col, id_col)],
+               id_col],
+        desc=tb_desc,
+        watermark=(ts_col, watermark_timers) if timer_mode else None,
+        eos_col=id_col)
 
 
 def _profile_wrap(fn, out_dir: str):
@@ -1664,14 +1573,14 @@ def _profile_wrap(fn, out_dir: str):
     holder: list = [None, 0]    # [Profile, call count] — created in the
                                 # worker (a Profile object cannot pickle)
 
-    def wrapped(key_, pdfs, state):
+    def wrapped(key_, pdf, state):
         import cProfile
         if holder[0] is None:
             holder[0] = cProfile.Profile()
         prof = holder[0]
         prof.enable()
         try:
-            out = list(fn(key_, pdfs, state))
+            out = list(fn(key_, pdf, state))
         finally:
             prof.disable()
         holder[1] += 1
@@ -1679,34 +1588,3 @@ def _profile_wrap(fn, out_dir: str):
             prof.dump_stats(os.path.join(out_dir, f"nfa_{os.getpid()}.prof"))
         yield from out
     return wrapped
-
-
-def with_eos_sentinels(df: DataFrame, key: str | list[str],
-                       ts_col: str = "ts",
-                       id_col: str = "event_id") -> DataFrame:
-    """Append one end-of-stream sentinel row per key to a BOUNDED batch
-    frame before replaying it as a STREAM through :func:`match_nfa` —
-    the analog of the final +inf watermark a bounded reference job
-    emits, which is what flushes pending runs (satisfied trailing-greedy
-    matches emit, other partials time out; see ``EOS_SENTINEL_ID``).  A
-    batch frame passed to :func:`match_nfa` directly needs none: the
-    batch route flushes each key at the end of its group.
-
-    The sentinel carries ``id = EOS_SENTINEL_ID``, ``ts = max(ts) + 1
-    day`` for its key (so it sorts strictly last), and NULL in every
-    other column; the NFA recognizes it by id and never lets it match,
-    start a run, or reach any output.  Bounded replays only — a
-    continuous stream has no end to mark."""
-    keys = [key] if isinstance(key, str) else list(key)
-    sent = (df.groupBy(*keys)
-            .agg((F.max(ts_col) + F.expr("INTERVAL 1 DAY")).alias(ts_col)))
-    cols = []
-    for f_ in df.schema.fields:
-        if f_.name in keys or f_.name == ts_col:
-            cols.append(F.col(f_.name))
-        elif f_.name == id_col:
-            cols.append(F.lit(EOS_SENTINEL_ID).cast(f_.dataType)
-                        .alias(f_.name))
-        else:
-            cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-    return df.unionByName(sent.select(*cols))

@@ -1,4 +1,5 @@
-"""Arbitrary keyed-state streaming operators via ``applyInPandasWithState``.
+"""Arbitrary keyed-state streaming operators, each one state function
+run by ``keyed.keyed_state``.
 
 These are the reference operators with NO declarative Spark equivalent
 (SURVEY.md §7 step 5 — "the hard 20%"):
@@ -7,6 +8,13 @@ These are the reference operators with NO declarative Spark equivalent
   DeduplicateKeepLastRowFunction.java:34`` — one latest row per key.
 - streaming top-N:  ``runtime/operators/rank/AppendOnlyTopNFunction.java:46``
   — maintain the N best rows per key as events arrive.
+
+Ordering: each operator declares its row order once — ``(ts, event_id)``,
+the arrival column for ``late_data_split``, or none when order-free
+(top-N, the changelog counter, the self-sorting temporal sort) — and
+``keyed_state`` hands the state function a key's rows of a call as one
+frame in that order, whatever the Arrow chunking; it also owns the
+pre-shuffle projection and the streaming/batch route.
 
 State is a compact per-key summary (the current winner set, a running
 total, a version table), never the full history — the same bounded-state
@@ -22,30 +30,21 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from flink_release_1_10_0_spark.streaming.keyed import (
+    i64_list, keyed_state, ts_us_list)
+
+_EVENT_ORDER = ("ts", "event_id")
 
 
-
-def _prune(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Project to the columns the state function actually reads BEFORE
-    the keyed shuffle.  Catalyst cannot prune columns through an opaque
-    Python state function, so without this the full event payload
-    (including wide text columns) rides the exchange."""
-    want = [c for c in dict.fromkeys(cols) if c in df.columns]
-    return df.select(*want)
-
-def _ts_us(pdf: pd.DataFrame, col: str = "ts") -> list[int]:
-    """Event-time column as integer microseconds, one plain Python list.
-
-    Per-event logic is inherent to these operators (NFA edges, version
-    lookups), but per-event *pandas* overhead is not: extract each column
-    once per Arrow batch (``tolist``) and walk plain lists — the pattern
-    nfa.py uses — instead of ``iterrows`` (~10-100x slower row boxing)."""
-    return pdf[col].values.astype("datetime64[us]").astype("int64").tolist()
-
-
-def _i64(pdf: pd.DataFrame, col: str) -> list[int]:
-    return pdf[col].astype("int64").tolist()
+def _frame(rows: list[tuple], columns: list[str],
+           us_cols: tuple[str, ...] = ("ts",)) -> pd.DataFrame:
+    """Output rows as a frame, the microsecond columns as timestamps."""
+    df = pd.DataFrame(rows, columns=columns)
+    for c in us_cols:
+        df[c] = pd.to_datetime(df[c], unit="us")
+    return df
 
 
 def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
@@ -54,12 +53,9 @@ def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
     out_schema = "user_id bigint, event_id bigint, event_type string, value double, ts timestamp"
     state_schema = "event_id bigint, event_type string, value double, ts timestamp"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         best = state.get if state.exists else None  # (event_id, type, value, ts_us)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
+        if len(pdf):
             row = pdf.iloc[-1]
             cand = (int(row["event_id"]), str(row["event_type"]),
                     float(row["value"]), row["ts"])
@@ -71,9 +67,9 @@ def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
                 "user_id": [key_[0]], "event_id": [best[0]],
                 "event_type": [best[1]], "value": [best[2]], "ts": [best[3]]})
 
-    return (_prune(events, [key, "ts", "event_id", "event_type", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "event_type", "value"],
+                       order=_EVENT_ORDER, output_mode="update")
 
 
 def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFrame:
@@ -82,22 +78,18 @@ def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFra
     out_schema = "user_id bigint, event_id bigint, value double, rn bigint"
     state_schema = "ids array<bigint>, vals array<double>"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             ids, vals = state.get
             entries = list(zip(list(ids), list(vals)))
         else:
             entries = []
-        changed = False
-        for pdf in pdfs:
-            if len(pdf):
-                # vectorized: extend with the whole Arrow batch at once —
-                # never iterate rows in Python (hot keys make that the
-                # slowest loop in the pipeline)
-                entries.extend(zip(pdf["event_id"].astype("int64").tolist(),
-                                   pdf["value"].astype("float64").tolist()))
-                changed = True
-        if changed or not state.exists:
+        # vectorized: extend with the whole call's rows at once — never
+        # iterate rows in Python (hot keys make that the slowest loop in
+        # the pipeline)
+        entries.extend(zip(i64_list(pdf, "event_id"),
+                           pdf["value"].astype("float64").tolist()))
+        if len(pdf) or not state.exists:
             entries.sort(key=lambda e: (-e[1], e[0]))
             entries = entries[:n]
             state.update(([e[0] for e in entries], [e[1] for e in entries]))
@@ -107,9 +99,8 @@ def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFra
                 "value": [e[1] for e in entries],
                 "rn": list(range(1, len(entries) + 1))})
 
-    return (_prune(events, [key, "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["event_id", "value"], output_mode="update")
 
 
 def count_tumble_window(events: DataFrame, n: int = 10,
@@ -125,27 +116,22 @@ def count_tumble_window(events: DataFrame, n: int = 10,
     out_schema = "user_id bigint, w_id bigint, n_events bigint, sum_value double"
     state_schema = "next_w bigint, part_n bigint, part_cents bigint"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         next_w, part_n, part_cents = state.get if state.exists else (0, 0, 0)
         out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for v in pdf["value"].astype("float64").tolist():
-                part_n += 1
-                part_cents += int(round(float(v) * 100))
-                if part_n == n:
-                    out.append((key_[0], next_w, n, part_cents / 100.0))
-                    next_w += 1
-                    part_n = part_cents = 0
+        for v in pdf["value"].astype("float64").tolist():
+            part_n += 1
+            part_cents += int(round(float(v) * 100))
+            if part_n == n:
+                out.append((key_[0], next_w, n, part_cents / 100.0))
+                next_w += 1
+                part_n = part_cents = 0
         state.update((next_w, part_n, part_cents))
         if out:
             yield pd.DataFrame(out, columns=["user_id", "w_id", "n_events", "sum_value"])
 
-    return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
 
 
 def changelog_count(events: DataFrame, key: str = "event_type") -> DataFrame:
@@ -164,9 +150,9 @@ def changelog_count(events: DataFrame, key: str = "event_type") -> DataFrame:
     out_schema = f"op string, {key} string, cnt bigint, seq bigint"
     state_schema = "cnt bigint, seq bigint"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         old, seq = state.get if state.exists else (None, 0)
-        added = sum(len(p) for p in pdfs)
+        added = len(pdf)
         if added:
             new = (old or 0) + added
             rows = []
@@ -180,9 +166,7 @@ def changelog_count(events: DataFrame, key: str = "event_type") -> DataFrame:
             state.update((new, seq))
             yield pd.DataFrame(rows, columns=["op", key, "cnt", "seq"])
 
-    return (_prune(events, [key]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema, cols=[])
 
 
 def temporal_join(events: DataFrame, build_type: str, probe_type: str,
@@ -209,31 +193,29 @@ def temporal_join(events: DataFrame, build_type: str, probe_type: str,
                   "version_id bigint, version_ts timestamp, version_value double")
     state_schema = "vids array<bigint>, vus array<bigint>, vvals array<double>"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             vids, vus, vvals = state.get
             versions = sorted(zip(list(vus), list(vids), list(vvals)))
         else:
             versions = []  # (ts_us, event_id, value) ascending
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for et, eid, ts_us, val in zip(pdf["event_type"].tolist(),
-                                           _i64(pdf, "event_id"), _ts_us(pdf),
-                                           pdf["value"].astype("float64").tolist()):
-                if et == build_type:
-                    versions.append((ts_us, eid, val))
-                    versions.sort()
-                elif et == probe_type:
-                    # latest version at-or-before the probe: rightmost <= ts
-                    best = None
-                    for v in versions:
-                        if v[0] <= ts_us:
-                            best = v
-                        else:
-                            break
-                    if best is not None:
-                        out.append((key_[0], eid, ts_us, best[1], best[0], best[2]))
+        for et, eid, ts_us, val in zip(pdf["event_type"].tolist(),
+                                       i64_list(pdf, "event_id"), ts_us_list(pdf),
+                                       pdf["value"].astype("float64").tolist()):
+            if et == build_type:
+                versions.append((ts_us, eid, val))
+                versions.sort()
+            elif et == probe_type:
+                # latest version at-or-before the probe: rightmost <= ts
+                best = None
+                for v in versions:
+                    if v[0] <= ts_us:
+                        best = v
+                    else:
+                        break
+                if best is not None:
+                    out.append((key_[0], eid, ts_us, best[1], best[0], best[2]))
         if retention_minutes is not None and versions:
             cutoff = versions[-1][0] - int(retention_minutes * 60_000_000)
             # newest version at-or-before the cutoff must survive: an
@@ -246,18 +228,14 @@ def temporal_join(events: DataFrame, build_type: str, probe_type: str,
         state.update(([v[1] for v in versions], [v[0] for v in versions],
                       [v[2] for v in versions]))
         if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "probe_id", "probe_ts",
-                "version_id", "version_ts", "version_value"])
-            df["probe_ts"] = pd.to_datetime(df["probe_ts"], unit="us")
-            df["version_ts"] = pd.to_datetime(df["version_ts"], unit="us")
-            yield df
+            yield _frame(out, ["user_id", "probe_id", "probe_ts", "version_id",
+                               "version_ts", "version_value"],
+                         us_cols=("probe_ts", "version_ts"))
 
-    return (_prune(events, [key, "ts", "event_id", "event_type", "value"])
-            .filter(F.col("event_type").isin(build_type, probe_type))
-            .groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events.filter(F.col("event_type").isin(build_type, probe_type)),
+                       key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "event_type", "value"],
+                       order=_EVENT_ORDER)
 
 
 def over_running_agg(events: DataFrame, key: str = "user_id") -> DataFrame:
@@ -272,26 +250,21 @@ def over_running_agg(events: DataFrame, key: str = "user_id") -> DataFrame:
                   "running_sum double, running_n bigint")
     state_schema = "cents bigint, n bigint"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         cents, n = state.get if state.exists else (0, 0)
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts_us, val in zip(_i64(pdf, "event_id"), _ts_us(pdf),
-                                       pdf["value"].astype("float64").tolist()):
-                cents += int(round(val * 100))
-                n += 1
-                out.append((key_[0], eid, ts_us, cents / 100.0, n))
+        for eid, ts_us, val in zip(i64_list(pdf, "event_id"), ts_us_list(pdf),
+                                   pdf["value"].astype("float64").tolist()):
+            cents += int(round(val * 100))
+            n += 1
+            out.append((key_[0], eid, ts_us, cents / 100.0, n))
         state.update((cents, n))
         if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "event_id", "ts", "running_sum", "running_n"])
-            df["ts"] = pd.to_datetime(df["ts"], unit="us")
-            yield df
+            yield _frame(out, ["user_id", "event_id", "ts", "running_sum",
+                               "running_n"])
 
-    return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
 
 
 def temporal_sort(events: DataFrame, key: str = "user_id",
@@ -312,15 +285,14 @@ def temporal_sort(events: DataFrame, key: str = "user_id",
     out_schema = "user_id bigint, event_id bigint, ts timestamp, seq bigint"
     state_schema = "emitted bigint, bids array<bigint>, bus array<bigint>"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             emitted, bids, bus = state.get
             buf = list(zip(list(bus), list(bids)))  # (ts_us, event_id)
         else:
             emitted, buf = 0, []
         if not state.hasTimedOut:
-            for pdf in pdfs:
-                buf.extend(zip(_ts_us(pdf), _i64(pdf, "event_id")))
+            buf.extend(zip(ts_us_list(pdf), i64_list(pdf, "event_id")))
         buf.sort()
         wm_ms = state.getCurrentWatermarkMs()
         wm_us = wm_ms * 1000
@@ -338,15 +310,11 @@ def temporal_sort(events: DataFrame, key: str = "user_id",
             deadline = max(-(-buf[0][0] // 1000) - 1, wm_ms + 1)
             state.setTimeoutTimestamp(deadline)
         if out:
-            df = pd.DataFrame(out, columns=["user_id", "event_id", "ts", "seq"])
-            df["ts"] = pd.to_datetime(df["ts"], unit="us")
-            yield df
+            yield _frame(out, ["user_id", "event_id", "ts", "seq"])
 
-    return (_prune(events, [key, "ts", "event_id"])
-            .withWatermark("ts", watermark_delay)
-            .groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.EventTimeTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id"],
+                       watermark=("ts", watermark_delay))
 
 
 def count_sliding_window(events: DataFrame, size: int = 5, slide: int = 2,
@@ -361,31 +329,26 @@ def count_sliding_window(events: DataFrame, size: int = 5, slide: int = 2,
     out_schema = "user_id bigint, fire_seq bigint, n_events bigint, sum_value double"
     state_schema = "n bigint, recent array<bigint>"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             n, recent = state.get[0], list(state.get[1])
         else:
             n, recent = 0, []
         out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for v in pdf["value"].astype("float64").tolist():
-                recent.append(int(round(float(v) * 100)))
-                if len(recent) > size:
-                    recent.pop(0)
-                n += 1
-                if n % slide == 0:
-                    out.append((key_[0], n, len(recent), sum(recent) / 100.0))
+        for v in pdf["value"].astype("float64").tolist():
+            recent.append(int(round(float(v) * 100)))
+            if len(recent) > size:
+                recent.pop(0)
+            n += 1
+            if n % slide == 0:
+                out.append((key_[0], n, len(recent), sum(recent) / 100.0))
         state.update((n, recent))
         if out:
             yield pd.DataFrame(out, columns=[
                 "user_id", "fire_seq", "n_events", "sum_value"])
 
-    return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
 
 
 def over_rows_bounded(events: DataFrame, frame: int = 5,
@@ -400,28 +363,23 @@ def over_rows_bounded(events: DataFrame, frame: int = 5,
                   "frame_sum double, frame_n bigint")
     state_schema = "recent array<bigint>"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         recent = list(state.get[0]) if state.exists else []  # last cents, oldest first
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for eid, ts_us, val in zip(_i64(pdf, "event_id"), _ts_us(pdf),
-                                       pdf["value"].astype("float64").tolist()):
-                recent.append(int(round(val * 100)))
-                if len(recent) > frame:
-                    recent.pop(0)
-                out.append((key_[0], eid, ts_us,
-                            sum(recent) / 100.0, len(recent)))
+        for eid, ts_us, val in zip(i64_list(pdf, "event_id"), ts_us_list(pdf),
+                                   pdf["value"].astype("float64").tolist()):
+            recent.append(int(round(val * 100)))
+            if len(recent) > frame:
+                recent.pop(0)
+            out.append((key_[0], eid, ts_us,
+                        sum(recent) / 100.0, len(recent)))
         state.update((recent,))
         if out:
-            df = pd.DataFrame(out, columns=[
-                "user_id", "event_id", "ts", "frame_sum", "frame_n"])
-            df["ts"] = pd.to_datetime(df["ts"], unit="us")
-            yield df
+            yield _frame(out, ["user_id", "event_id", "ts", "frame_sum",
+                               "frame_n"])
 
-    return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
 
 
 def updatable_topn(events: DataFrame, n: int = 3,
@@ -443,24 +401,18 @@ def updatable_topn(events: DataFrame, n: int = 3,
     state_schema = ("ids array<bigint>, cents array<bigint>, "
                     "top_ids array<bigint>, top_cents array<bigint>, seq bigint")
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             ids, cents, top_ids, top_cents, seq = state.get
             cur = dict(zip(list(ids), list(cents)))
             old_top = dict(zip(list(top_ids), list(top_cents)))
         else:
             cur, old_top, seq = {}, {}, 0
-        changed = False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for uid, val in zip(_i64(pdf, id_col),
-                                pdf["value"].astype("float64").tolist()):
-                cur[uid] = int(round(val * 100))
-                changed = True
-        if not changed:
+        if not len(pdf):
             return
+        for uid, val in zip(i64_list(pdf, id_col),
+                            pdf["value"].astype("float64").tolist()):
+            cur[uid] = int(round(val * 100))
         ranked = sorted(cur.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
         new_top = dict(ranked)
         rows = []
@@ -480,9 +432,9 @@ def updatable_topn(events: DataFrame, n: int = 3,
         if rows:
             yield pd.DataFrame(rows, columns=["op", key, id_col, "val", "seq"])
 
-    return (_prune(events, [key, id_col, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=[id_col, "ts", "event_id", "value"],
+                       order=_EVENT_ORDER)
 
 
 def over_range_bounded(events: DataFrame, preceding_minutes: float = 5,
@@ -504,44 +456,36 @@ def over_range_bounded(events: DataFrame, preceding_minutes: float = 5,
     state_schema = "buf_us array<bigint>, buf_cents array<bigint>"
     prec_us = int(preceding_minutes * 60_000_000)
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             us, cents = state.get
             buf = list(zip(list(us), list(cents)))  # (ts_us, cents) asc
         else:
             buf = []
         out = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            tss, ids = _ts_us(pdf), _i64(pdf, "event_id")
-            vals = pdf["value"].astype("float64").tolist()
-            # walk equal-timestamp runs (RANGE peers fire together)
-            i = 0
-            while i < len(tss):
-                j = i
-                while j < len(tss) and tss[j] == tss[i]:
-                    j += 1
-                ts_us = tss[i]
-                for k in range(i, j):
-                    buf.append((ts_us, int(round(vals[k] * 100))))
-                buf = [(u, c) for (u, c) in buf if ts_us - u <= prec_us]
-                s = sum(c for (_, c) in buf)
-                n = len(buf)
-                for k in range(i, j):
-                    out.append((key_[0], ids[k], ts_us, s / 100.0, n))
-                i = j
+        tss, ids = ts_us_list(pdf), i64_list(pdf, "event_id")
+        vals = pdf["value"].astype("float64").tolist()
+        # walk equal-timestamp runs (RANGE peers fire together)
+        i = 0
+        while i < len(tss):
+            j = i
+            while j < len(tss) and tss[j] == tss[i]:
+                j += 1
+            ts_us = tss[i]
+            for k in range(i, j):
+                buf.append((ts_us, int(round(vals[k] * 100))))
+            buf = [(u, c) for (u, c) in buf if ts_us - u <= prec_us]
+            s = sum(c for (_, c) in buf)
+            n = len(buf)
+            for k in range(i, j):
+                out.append((key_[0], ids[k], ts_us, s / 100.0, n))
+            i = j
         state.update(([u for (u, _) in buf], [c for (_, c) in buf]))
         if out:
-            df = pd.DataFrame(out, columns=[
-                key, "event_id", "ts", "range_sum", "range_n"])
-            df["ts"] = pd.to_datetime(df["ts"], unit="us")
-            yield df
+            yield _frame(out, [key, "event_id", "ts", "range_sum", "range_n"])
 
-    return (_prune(events, [key, "ts", "event_id", "value"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
 
 
 def late_data_split(events: DataFrame, delay_minutes: float,
@@ -568,31 +512,26 @@ def late_data_split(events: DataFrame, delay_minutes: float,
     delay_us = int(delay_minutes * 60_000_000)
     late_us = int(allowed_lateness_minutes * 60_000_000)
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
+        if not len(pdf):
+            return
         max_us = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(arrival_col)
-            # force microsecond resolution regardless of the pandas
-            # datetime unit the Arrow batch arrived with
-            ts_us = pd.Series(
-                pdf["ts"].values.astype("datetime64[us]").astype("int64"),
-                index=pdf.index)
-            prev_max = ts_us.cummax().shift(1)
-            if max_us is not None:
-                prev_max = prev_max.fillna(max_us).clip(lower=max_us)
-            late = ts_us < prev_max - delay_us - late_us
-            max_us = int(ts_us.max()) if max_us is None \
-                else max(max_us, int(ts_us.max()))
-            yield pd.DataFrame({
-                key: pdf[key].astype("int64"),
-                "event_id": pdf["event_id"].astype("int64"),
-                "ts": pdf["ts"],
-                "is_late": late.fillna(False).astype(bool)})
+        # force microsecond resolution regardless of the pandas
+        # datetime unit the Arrow batch arrived with
+        ts_us = pd.Series(ts_us_list(pdf), index=pdf.index)
+        prev_max = ts_us.cummax().shift(1)
         if max_us is not None:
-            state.update((max_us,))
+            prev_max = prev_max.fillna(max_us).clip(lower=max_us)
+        late = ts_us < prev_max - delay_us - late_us
+        max_us = int(ts_us.max()) if max_us is None \
+            else max(max_us, int(ts_us.max()))
+        state.update((max_us,))
+        yield pd.DataFrame({
+            key: pdf[key].astype("int64"),
+            "event_id": pdf["event_id"].astype("int64"),
+            "ts": pdf["ts"],
+            "is_late": late.fillna(False).astype(bool)})
 
-    return (_prune(events, [key, arrival_col, "ts", "event_id"]).groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=[arrival_col, "ts", "event_id"],
+                       order=[arrival_col])

@@ -11,7 +11,8 @@ had emitted while the row was unmatched
 Spark-first shape: Spark has no two-input keyed stateful operator, so
 the two streams are tagged and UNIONed (the same trick the repo's
 connect()/CoProcess uses), grouped by the join key, and run through ONE
-``applyInPandasWithState`` operator whose state holds both sides.  The
+keyed-state operator (``keyed.keyed_state``) whose state holds both
+sides.  The
 output is an explicit changelog (``op`` = ``+I`` insert / ``-D``
 retract, like the reference's INSERT/DELETE row kinds) plus a per-key
 ``seq`` for deterministic folding.
@@ -20,9 +21,10 @@ Scale notes (100 TB): state is hash-distributed by join key — the same
 layout the reference uses; a skewed key concentrates on one task in
 BOTH engines (salt upstream if needed).  State grows with the inputs;
 ``ttl_minutes`` prunes rows older than the window (the analog of
-``table.exec.state.ttl``).  Events are processed in (event-time, id)
-order per key, so the changelog is deterministic given event-time
-ordered arrival — the same guarantee an event-time Flink pipeline has
+``table.exec.state.ttl``).  Each call's events are processed in
+(event-time, id) order per key whatever the Arrow chunking, so the
+changelog is deterministic given event-time ordered arrival across
+micro-batches — the same guarantee an event-time Flink pipeline has
 after a sorting/watermark stage.
 
 Input narrowing (documented): inputs are append-only streams; consuming
@@ -40,7 +42,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
+
+from flink_release_1_10_0_spark.streaming.keyed import (
+    i64_list, keyed_state, ts_us_list)
 
 INNER = "inner"
 LEFT_OUTER = "left_outer"
@@ -163,7 +168,7 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
 
     I64, F64 = np.int64, np.float64
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         if state.exists:
             (l_ids, l_us, l_vals, l_n, r_ids, r_us, r_vals, seq) = state.get
             lb = _Buf([np.asarray(l_ids, I64), np.asarray(l_us, I64),
@@ -189,52 +194,46 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
         zero1, true1, false1 = (np.zeros(1, I64), np.ones(1, bool),
                                 np.zeros(1, bool))
 
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["__ts", "__id"])
-            sides = pdf["__side"].astype("int64").tolist()
-            ids = pdf["__id"].astype("int64").tolist()
-            tss = pdf["__ts"].values.astype("datetime64[us]").astype("int64").tolist()
-            vals = pdf["__v"].astype("float64").tolist()
-            for s, i, ts_us, v in zip(sides, ids, tss, vals):
-                if ttl_us is not None:
-                    lb.expire(ts_us - ttl_us)
-                    rb.expire(ts_us - ttl_us)
-                if s == 0:
-                    m = rb.n - rb.lo
-                    if m > 0:
-                        mf = np.zeros(m, bool)
-                        chunks.append(("+I",
-                                       np.full(m, i, I64), mf, np.full(m, v),
-                                       rb.live(0).copy(), mf,
-                                       rb.live(2).astype(F64)))
-                    elif how == LEFT_OUTER:
-                        chunks.append(("+I", np.full(1, i, I64), false1,
-                                       np.full(1, v), zero1, true1, nan1))
-                    lb.append(i, ts_us, v, m)
-                else:
-                    m = lb.n - lb.lo
-                    if m > 0:
-                        lid = lb.live(0).copy()
-                        lv = lb.live(2).astype(F64)
-                        zero = lb.live(3) == 0
-                        if how == LEFT_OUTER and zero.any():
-                            # retract the null-padded rows of the
-                            # first-time-matched lefts (batched before
-                            # the inserts: -D/+I of DIFFERENT rows
-                            # commute, so the folded table is identical)
-                            nz = int(zero.sum())
-                            chunks.append(("-D", lid[zero],
-                                           np.zeros(nz, bool), lv[zero],
-                                           np.zeros(nz, I64),
-                                           np.ones(nz, bool),
-                                           np.full(nz, np.nan)))
-                        mf = np.zeros(m, bool)
-                        chunks.append(("+I", lid, mf, lv,
-                                       np.full(m, i, I64), mf, np.full(m, v)))
-                        lb.cols[3][lb.lo:lb.n] += 1
-                    rb.append(i, ts_us, v)
+        for s, i, ts_us, v in zip(i64_list(pdf, "__side"), i64_list(pdf, "__id"),
+                                  ts_us_list(pdf, "__ts"),
+                                  pdf["__v"].astype("float64").tolist()):
+            if ttl_us is not None:
+                lb.expire(ts_us - ttl_us)
+                rb.expire(ts_us - ttl_us)
+            if s == 0:
+                m = rb.n - rb.lo
+                if m > 0:
+                    mf = np.zeros(m, bool)
+                    chunks.append(("+I",
+                                   np.full(m, i, I64), mf, np.full(m, v),
+                                   rb.live(0).copy(), mf,
+                                   rb.live(2).astype(F64)))
+                elif how == LEFT_OUTER:
+                    chunks.append(("+I", np.full(1, i, I64), false1,
+                                   np.full(1, v), zero1, true1, nan1))
+                lb.append(i, ts_us, v, m)
+            else:
+                m = lb.n - lb.lo
+                if m > 0:
+                    lid = lb.live(0).copy()
+                    lv = lb.live(2).astype(F64)
+                    zero = lb.live(3) == 0
+                    if how == LEFT_OUTER and zero.any():
+                        # retract the null-padded rows of the
+                        # first-time-matched lefts (batched before
+                        # the inserts: -D/+I of DIFFERENT rows
+                        # commute, so the folded table is identical)
+                        nz = int(zero.sum())
+                        chunks.append(("-D", lid[zero],
+                                       np.zeros(nz, bool), lv[zero],
+                                       np.zeros(nz, I64),
+                                       np.ones(nz, bool),
+                                       np.full(nz, np.nan)))
+                    mf = np.zeros(m, bool)
+                    chunks.append(("+I", lid, mf, lv,
+                                   np.full(m, i, I64), mf, np.full(m, v)))
+                    lb.cols[3][lb.lo:lb.n] += 1
+                rb.append(i, ts_us, v)
         state.update((lb.live(0).tolist(), lb.live(1).tolist(),
                       lb.live(2).tolist(), lb.live(3).tolist(),
                       rb.live(0).tolist(), rb.live(1).tolist(),
@@ -259,9 +258,8 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
                 "r_value": pd.Series(rv).astype("Float64"),
                 "seq": np.arange(seq + 1, seq + total + 1, dtype=I64)})
 
-    return (unioned.groupBy("__k")
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(unioned, "__k", fn, out_schema, state_schema,
+                       order=("__ts", "__id"))
 
 
 def fold_join_changelog(changelog: DataFrame, key: str) -> DataFrame:

@@ -33,9 +33,10 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
+from flink_release_1_10_0_spark.streaming.keyed import i64_list, keyed_state
 
 _counter = itertools.count()
 
@@ -108,39 +109,33 @@ def delta_trigger_firings(events: DataFrame, threshold: float,
     Delta function: ``abs(value - baseline.value)``.  Emits one row per
     firing: (key, event_id, ts, value, delta).
 
-    Scale: keyed stateful op (applyInPandasWithState) with O(1) state
+    Scale: keyed stateful op (``keyed.keyed_state``) with O(1) state
     per key (the baseline value) — the same footprint the reference's
-    ValueState<T> holds; per-batch work walks plain lists, no pandas
+    ValueState<T> holds; per-call work walks plain lists, no pandas
     row boxing."""
     out_schema = (f"{key} bigint, event_id bigint, ts timestamp, "
                   "value double, delta double")
     state_schema = "baseline double"
 
-    def fn(key_: Any, pdfs: Iterator[pd.DataFrame],
+    def fn(key_: Any, pdf: pd.DataFrame,
            state: GroupState) -> Iterator[pd.DataFrame]:
         baseline = state.get[0] if state.exists else None
         ids_o: list[int] = []
         ts_o: list = []
         val_o: list[float] = []
         d_o: list[float] = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
+        for i, ts, v in zip(i64_list(pdf, "event_id"), list(pdf["ts"]),
+                            pdf["value"].astype("float64").tolist()):
+            if baseline is None:
+                baseline = v
                 continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            ids = pdf["event_id"].astype("int64").tolist()
-            tss = list(pdf["ts"])
-            vals = pdf["value"].astype("float64").tolist()
-            for i, ts, v in zip(ids, tss, vals):
-                if baseline is None:
-                    baseline = v
-                    continue
-                d = abs(v - baseline)
-                if d > threshold:
-                    ids_o.append(i)
-                    ts_o.append(ts)
-                    val_o.append(v)
-                    d_o.append(round(d, 6))
-                    baseline = v
+            d = abs(v - baseline)
+            if d > threshold:
+                ids_o.append(i)
+                ts_o.append(ts)
+                val_o.append(v)
+                d_o.append(round(d, 6))
+                baseline = v
         if baseline is not None:
             state.update((baseline,))
         if ids_o:
@@ -148,10 +143,9 @@ def delta_trigger_firings(events: DataFrame, threshold: float,
                 key: [key_[0]] * len(ids_o), "event_id": ids_o,
                 "ts": ts_o, "value": val_o, "delta": d_o})
 
-    pruned = events.select(key, "ts", "event_id", "value")
-    return (pruned.groupBy(key)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "append", GroupStateTimeout.NoTimeout))
+    return keyed_state(events, key, fn, out_schema, state_schema,
+                       cols=["ts", "event_id", "value"],
+                       order=("ts", "event_id"))
 
 
 def purging_count_trigger_firings(events: DataFrame, n: int,

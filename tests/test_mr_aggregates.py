@@ -177,7 +177,7 @@ def test_aggregate_state_survives_microbatches(spark):
     keeps its running average."""
     from flink_release_1_10_0_spark.sql_match import (
         execute_match_recognize_sql)
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
+    from tests.conftest import with_eos_sentinels
 
     rows1 = [(1, "2024-01-01 10:00:00", 1, "t", 12.0),
              (2, "2024-01-01 10:00:01", 1, "t", 17.0)]

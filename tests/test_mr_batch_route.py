@@ -21,7 +21,8 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from flink_release_1_10_0_spark.streaming.core import run_to_completion
 from flink_release_1_10_0_spark.streaming.nfa import (
-    SKIP_PAST_LAST, SKIP_TO_NEXT, NfaStage, match_nfa, with_eos_sentinels)
+    SKIP_PAST_LAST, SKIP_TO_NEXT, NfaStage, match_nfa)
+from tests.conftest import with_eos_sentinels
 
 _SCHEMA = ("event_id bigint, ts string, user_id bigint, "
            "event_type string, value double")

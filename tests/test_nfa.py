@@ -700,7 +700,7 @@ def test_eos_sentinel_flushes_trailing_greedy(spark):
     replay ends emits via the end-of-stream sentinel (the bounded job's
     final +inf watermark) — previously silently dropped.  Partials flush
     to the timeout output when emit_timeouts is on."""
-    from flink_release_1_10_0_spark.streaming.nfa import with_eos_sentinels
+    from tests.conftest import with_eos_sentinels
 
     rows = [_ev(1, 0, "a"), _ev(2, 1, "b"), _ev(3, 2, "b")]
     df = (spark.createDataFrame(rows, _SCHEMA)
@@ -962,14 +962,14 @@ def test_group_loop_window_expiry(spark):
 
 
 # ---------------------------------------------------------------------------
-# _sort_permutation: the hot-loop lexsort fast path must order chunks
-# exactly like the pandas sort_values it replaced (r10 optimization)
+# keyed._sort_permutation: the lexsort fast path must order rows
+# exactly like the pandas sort_values it replaced
 # ---------------------------------------------------------------------------
 
 def _assert_perm_matches_pandas(pdf, sort_cols, asc):
     import numpy as np
 
-    from flink_release_1_10_0_spark.streaming.nfa import _sort_permutation
+    from flink_release_1_10_0_spark.streaming.keyed import _sort_permutation
     order = _sort_permutation(pdf, sort_cols, asc)
     assert order is not None
     got = pdf.iloc[np.asarray(order)].reset_index(drop=True)
@@ -1002,7 +1002,7 @@ def test_sort_permutation_matches_pandas_numeric_and_datetime():
 def test_sort_permutation_falls_back_on_object_and_nat():
     import pandas as pd
 
-    from flink_release_1_10_0_spark.streaming.nfa import _sort_permutation
+    from flink_release_1_10_0_spark.streaming.keyed import _sort_permutation
     # string key needs object comparison -> pandas fallback
     pdf = pd.DataFrame({
         "ts": pd.to_datetime([1, 2], unit="s"),
@@ -1057,7 +1057,7 @@ def test_sort_permutation_falls_back_on_int64_extremes():
     import numpy as np
     import pandas as pd
 
-    from flink_release_1_10_0_spark.streaming.nfa import _sort_permutation
+    from flink_release_1_10_0_spark.streaming.keyed import _sort_permutation
     pdf = pd.DataFrame({
         "ts": pd.to_datetime([1, 2, 3], unit="s"),
         "k": np.array([1, 2 ** 63 + 5, 7], dtype=np.uint64),

@@ -136,12 +136,14 @@ def test_triangle_wedge_join_not_cartesian(spark):
 
 def test_stateful_ops_prune_payload_before_shuffle(spark):
     """Catalyst cannot prune columns through a Python state function, so
-    the stateful operators and the CEP NFA project explicitly: the
+    keyed_state projects every keyed operator explicitly: the
     executed micro-batch plan (and its parquet ReadSchema) must not
     carry the wide `props` payload into the keyed exchange."""
     from flink_release_1_10_0_spark.streaming.cep import Pattern
     from flink_release_1_10_0_spark.streaming.core import read_stream_table
     from flink_release_1_10_0_spark.streaming.stateful import topn_per_key
+    from flink_release_1_10_0_spark.streaming.triggers import (
+        delta_trigger_firings)
 
     import tempfile
 
@@ -154,6 +156,9 @@ def test_stateful_ops_prune_payload_before_shuffle(spark):
         (Pattern.begin("error").followed_by("purchase").within(30)
          .match_stream(ev), "append",
          [f"struct<event_id:bigint,ts:{t},user_id:bigint,event_type:string>"
+          for t in ("bigint", "timestamp_ntz")]),
+        (delta_trigger_firings(ev, threshold=50.0), "append",
+         [f"struct<event_id:bigint,ts:{t},user_id:bigint,value:double>"
           for t in ("bigint", "timestamp_ntz")]),
     ]
     for i, (out, mode, schemas) in enumerate(cases):

@@ -2,20 +2,27 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet tables,
 compare row count + column names + order-insensitive values.
 
-Usage: python tools/compare.py [sf_dir] [query_name | @cep | @dbapi ...]
+Usage: python tools/compare.py [sf_dir] [query_name | @cep | @stream | @dbapi ...]
 
 ``@cep`` names the CEP family: every head registered in
 ``queries/cep_nfa.py`` plus the CEP and MATCH_RECOGNIZE heads of
 ``queries/streaming.py`` (the gate for any NFA change).
+``@stream`` names the keyed-state family: every head whose operator
+runs through ``streaming/keyed.py`` (the gate for any change there or
+to a keyed operator; it contains ``@cep``).
 ``@dbapi`` names the heads that read or write through
 ``sources/dbapi.py`` (the gate for any connector change).
 """
 
 from __future__ import annotations
 
+import importlib
+import inspect
 import math
 import os
+import pkgutil
 import sys
+import types
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -94,6 +101,46 @@ def cep_family(qs) -> set[str]:
                 and ("_cep_" in name or "match_recognize" in name))}
 
 
+def _names(code: types.CodeType) -> set[str]:
+    """Every global or attribute name a code object (or a nested
+    function, lambda or comprehension in it) refers to."""
+    out = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            out |= _names(c)
+    return out
+
+
+def stream_family(qs) -> set[str]:
+    """Heads of the keyed-state family (see the module docstring).
+
+    Static and conservative: a package function reaches
+    ``keyed.keyed_state`` when it names it or a function that reaches
+    it (matched by name, to a fixpoint); a head is in the family when
+    it names any reaching function.  A dispatcher that only sometimes
+    routes to a keyed operator (``TableEnvironment.sql_query``) counts
+    as reaching, so its heads are checked too."""
+    import flink_release_1_10_0_spark as pkg
+    for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        importlib.import_module(m.name)
+    funcs = []
+    for mname, mod in list(sys.modules.items()):
+        if not mname.startswith(pkg.__name__ + "."):
+            continue
+        for obj in vars(mod).values():
+            if getattr(obj, "__module__", None) != mname:
+                continue
+            if inspect.isclass(obj):
+                funcs += [f for f in vars(obj).values() if inspect.isfunction(f)]
+            elif inspect.isfunction(obj):
+                funcs.append(obj)
+    calls = [(f.__name__, _names(f.__code__)) for f in funcs]
+    reach = {"keyed_state"}
+    while new := {n for n, ns in calls if ns & reach} - reach:
+        reach |= new
+    return {name for name, fn in qs.items() if _names(fn.__code__) & reach}
+
+
 DBAPI_HEADS = frozenset({
     "source_dbapi_roundtrip", "queryable_state_snapshot",
     "async_table_lookup_join", "state_processor_read_keyed",
@@ -108,6 +155,10 @@ def main():
         if arg == "@cep":
             family = cep_family(qs)
             print(f"@cep: {len(family)} heads")
+            only |= family
+        elif arg == "@stream":
+            family = stream_family(qs)
+            print(f"@stream: {len(family)} heads")
             only |= family
         elif arg == "@dbapi":
             print(f"@dbapi: {len(DBAPI_HEADS)} heads")
