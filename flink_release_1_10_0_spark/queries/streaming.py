@@ -1,8 +1,10 @@
 """Structured-Streaming queries run to completion over bounded input
-(SURVEY.md §2.5 / §2.9).  Each runs a REAL streaming query (readStream ->
+(SURVEY.md §2.5 / §2.9).  Most run a REAL streaming query (readStream ->
 transform -> memory sink, availableNow trigger); the oracle states the
 equivalent batch semantics, which is exact because the bounded run
-processes every record.
+processes every record.  A timer-free keyed head whose answer is the
+one-trigger answer runs its operator on the batch table instead (FLIP-134
+BATCH mode: ``keyed_state``'s batch route, no streaming query).
 """
 
 from __future__ import annotations
@@ -119,8 +121,7 @@ WHERE rn <= 3
 
 @register("stream_topn_per_key", _STREAM_TOPN_ORACLE)
 def stream_topn_per_key(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(stateful.topn_per_key(ev, n=3), "update")
+    return stateful.topn_per_key(t(spark, sf_dir, "events"), n=3)
 
 
 # --------------------------------------------------------------------------
@@ -327,8 +328,7 @@ HAVING COUNT(*) = 10
 
 @register("stream_count_window_10", _STREAM_COUNT_WINDOW_ORACLE)
 def stream_count_window_10(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(stateful.count_tumble_window(ev, n=10), "append")
+    return stateful.count_tumble_window(t(spark, sf_dir, "events"), n=10)
 
 
 # --------------------------------------------------------------------------
@@ -344,15 +344,10 @@ SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type
 
 @register("stream_changelog_agg", _STREAM_CHANGELOG_ORACLE)
 def stream_changelog_agg(spark, sf_dir):
-    from pyspark.sql import Window
+    from flink_release_1_10_0_spark.streaming.changelog import materialize
 
-    ev = read_stream_table(spark, sf_dir, "events")
-    clog = run_to_completion(stateful.changelog_count(ev), "append")
-    w = Window.partitionBy("event_type").orderBy(F.desc("seq"))
-    return (clog.filter(F.col("op") != "-U")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "cnt"))
+    clog = stateful.changelog_count(t(spark, sf_dir, "events"))
+    return materialize(clog, ["event_type"], ["cnt"])
 
 
 # --------------------------------------------------------------------------
@@ -457,8 +452,7 @@ FROM events
 
 @register("stream_over_running_agg", _STREAM_OVER_ORACLE)
 def stream_over_running_agg(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(stateful.over_running_agg(ev), "append")
+    return stateful.over_running_agg(t(spark, sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -476,8 +470,7 @@ FROM events GROUP BY event_type
 def stream_changelog_sum(spark, sf_dir):
     from flink_release_1_10_0_spark.streaming.changelog import changelog_sum, materialize
 
-    ev = read_stream_table(spark, sf_dir, "events")
-    clog = run_to_completion(changelog_sum(ev), "append")
+    clog = changelog_sum(t(spark, sf_dir, "events"))
     return materialize(clog, ["event_type"], ["total"])
 
 
@@ -558,8 +551,7 @@ FROM events
 
 @register("stream_over_rows_bounded", _STREAM_OVER_BOUNDED_ORACLE)
 def stream_over_rows_bounded(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(stateful.over_rows_bounded(ev, frame=5), "append")
+    return stateful.over_rows_bounded(t(spark, sf_dir, "events"), frame=5)
 
 
 # --------------------------------------------------------------------------
@@ -606,9 +598,8 @@ FROM q WHERE rn % 2 = 0
 
 @register("stream_count_sliding_window", _STREAM_COUNT_SLIDE_ORACLE)
 def stream_count_sliding_window(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
-        stateful.count_sliding_window(ev, size=5, slide=2), "append")
+    return stateful.count_sliding_window(t(spark, sf_dir, "events"),
+                                         size=5, slide=2)
 
 
 # --------------------------------------------------------------------------
@@ -902,8 +893,7 @@ FROM ranked WHERE rnk <= 3
 def stream_updatable_topn(spark, sf_dir):
     from pyspark.sql import Window
 
-    ev = read_stream_table(spark, sf_dir, "events")
-    clog = run_to_completion(stateful.updatable_topn(ev, n=3), "append")
+    clog = stateful.updatable_topn(t(spark, sf_dir, "events"), n=3)
     w = Window.partitionBy("event_type", "user_id").orderBy(F.desc("seq"))
     return (clog.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & (F.col("op") != "-D"))
@@ -932,9 +922,8 @@ FROM events e1
 
 @register("stream_over_range_bounded", _STREAM_OVER_RANGE_ORACLE)
 def stream_over_range_bounded(spark, sf_dir):
-    ev = read_stream_table(spark, sf_dir, "events")
-    return run_to_completion(
-        stateful.over_range_bounded(ev, preceding_minutes=5), "append")
+    return stateful.over_range_bounded(t(spark, sf_dir, "events"),
+                                       preceding_minutes=5)
 
 
 # --------------------------------------------------------------------------

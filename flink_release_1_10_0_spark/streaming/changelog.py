@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
-from flink_release_1_10_0_spark.streaming.keyed import keyed_state
+from flink_release_1_10_0_spark.streaming.keyed import key_field, keyed_state
 
 
 def changelog_sum(events: DataFrame, key: str = "event_type",
@@ -32,7 +32,7 @@ def changelog_sum(events: DataFrame, key: str = "event_type",
     the previous sum and ``+U`` for the new one (``+I`` the first time).
     Money accumulates as integer cents in state — exact under any
     partitioning."""
-    out_schema = f"op string, {key} string, total double, seq bigint"
+    out_schema = f"op string, {key_field(events, key)}, total double, seq bigint"
     state_schema = "cents bigint, seq bigint"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:

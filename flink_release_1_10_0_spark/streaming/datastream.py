@@ -282,7 +282,7 @@ class KeyedStream:
                               F.session_window(F.col(ts_col), gap))
 
     def count_window(self, n: int) -> DataFrame:
-        """Count tumbling window — stateful op (streaming input only)."""
+        """Count tumbling window — a keyed state function (stream or batch)."""
         from flink_release_1_10_0_spark.streaming.stateful import count_tumble_window
         assert len(self._keys) == 1
         return count_tumble_window(self._df, n=n, key=self._keys[0])

@@ -86,6 +86,11 @@ def keyed_state(df: DataFrame, key: str | list[str], fn: StateFn,
                                     output_mode, timeout))
 
 
+def key_field(df: DataFrame, key: str) -> str:
+    """The output-schema field ``"<key> <type>"`` typed as ``df[key]``."""
+    return f"{key} {df.schema[key].dataType.simpleString()}"
+
+
 def sort_rows(pdf: pd.DataFrame, order: Sequence[str],
               desc: Collection[str] = ()) -> pd.DataFrame:
     """``pdf`` stably sorted by ``order`` (``desc`` columns descending):

@@ -14,7 +14,9 @@ the arrival column for ``late_data_split``, or none when order-free
 (top-N, the changelog counter, the self-sorting temporal sort) — and
 ``keyed_state`` hands the state function a key's rows of a call as one
 frame in that order, whatever the Arrow chunking; it also owns the
-pre-shuffle projection and the streaming/batch route.
+pre-shuffle projection and the streaming/batch route (a batch frame: one
+call per key group, the one-trigger answer).  The output key column is
+named and typed after the input's (``keyed.key_field``).
 
 State is a compact per-key summary (the current winner set, a running
 total, a version table), never the full history — the same bounded-state
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
 from flink_release_1_10_0_spark.streaming.keyed import (
-    i64_list, keyed_state, ts_us_list)
+    i64_list, key_field, keyed_state, ts_us_list)
 
 _EVENT_ORDER = ("ts", "event_id")
 
@@ -48,10 +50,12 @@ def _frame(rows: list[tuple], columns: list[str],
 
 
 def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
-    """Latest event per key by (ts, event_id).  Emits the current winner
-    every batch (update semantics)."""
-    out_schema = "user_id bigint, event_id bigint, event_type string, value double, ts timestamp"
-    state_schema = "event_id bigint, event_type string, value double, ts timestamp"
+    """Latest event per key by (ts, event_id): the key, then the row's
+    other columns; a stream re-emits the winner every batch (update mode)."""
+    fields = ["event_id bigint", "event_type string", "value double", "ts timestamp"]
+    state_schema = ", ".join(fields)
+    out_schema = ", ".join([key_field(events, key)] + [
+        f for f in fields if f.split()[0] != key])
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
         best = state.get if state.exists else None  # (event_id, type, value, ts_us)
@@ -63,8 +67,9 @@ def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
                 best = cand
         if best is not None:
             state.update(best)
+            # a key that is a row column keeps its first position
             yield pd.DataFrame({
-                "user_id": [key_[0]], "event_id": [best[0]],
+                key: [key_[0]], "event_id": [best[0]],
                 "event_type": [best[1]], "value": [best[2]], "ts": [best[3]]})
 
     return keyed_state(events, key, fn, out_schema, state_schema,
@@ -73,9 +78,9 @@ def dedup_keep_last(events: DataFrame, key: str = "user_id") -> DataFrame:
 
 
 def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFrame:
-    """Streaming top-N per key ordered by (value desc, event_id asc);
-    emits the full current top-N set each batch."""
-    out_schema = "user_id bigint, event_id bigint, value double, rn bigint"
+    """Top-N per key ordered by (value desc, event_id asc): the full
+    current set each micro-batch of a stream, or once per key of a batch."""
+    out_schema = f"{key_field(events, key)}, event_id bigint, value double, rn bigint"
     state_schema = "ids array<bigint>, vals array<double>"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
@@ -94,7 +99,7 @@ def topn_per_key(events: DataFrame, n: int = 3, key: str = "user_id") -> DataFra
             entries = entries[:n]
             state.update(([e[0] for e in entries], [e[1] for e in entries]))
             yield pd.DataFrame({
-                "user_id": [key_[0]] * len(entries),
+                key: [key_[0]] * len(entries),
                 "event_id": [e[0] for e in entries],
                 "value": [e[1] for e in entries],
                 "rn": list(range(1, len(entries) + 1))})
@@ -113,7 +118,8 @@ def count_tumble_window(events: DataFrame, n: int = 10,
     Rows are ordered by (ts, event_id) within each micro-batch; money is
     accumulated as integer cents so the running sum is exact.
     """
-    out_schema = "user_id bigint, w_id bigint, n_events bigint, sum_value double"
+    out_schema = (f"{key_field(events, key)}, w_id bigint, n_events bigint, "
+                  "sum_value double")
     state_schema = "next_w bigint, part_n bigint, part_cents bigint"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
@@ -128,7 +134,7 @@ def count_tumble_window(events: DataFrame, n: int = 10,
                 part_n = part_cents = 0
         state.update((next_w, part_n, part_cents))
         if out:
-            yield pd.DataFrame(out, columns=["user_id", "w_id", "n_events", "sum_value"])
+            yield pd.DataFrame(out, columns=[key, "w_id", "n_events", "sum_value"])
 
     return keyed_state(events, key, fn, out_schema, state_schema,
                        cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
@@ -147,7 +153,7 @@ def changelog_count(events: DataFrame, key: str = "event_type") -> DataFrame:
     sequence so a downstream materializer can fold the log back into a
     table (latest non-retract row per key wins).
     """
-    out_schema = f"op string, {key} string, cnt bigint, seq bigint"
+    out_schema = f"op string, {key_field(events, key)}, cnt bigint, seq bigint"
     state_schema = "cnt bigint, seq bigint"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
@@ -189,7 +195,7 @@ def temporal_join(events: DataFrame, build_type: str, probe_type: str,
     in-order probes the emitted results are identical, and per-key state
     is bounded by the retention window.
     """
-    out_schema = ("user_id bigint, probe_id bigint, probe_ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, probe_id bigint, probe_ts timestamp, "
                   "version_id bigint, version_ts timestamp, version_value double")
     state_schema = "vids array<bigint>, vus array<bigint>, vvals array<double>"
 
@@ -228,7 +234,7 @@ def temporal_join(events: DataFrame, build_type: str, probe_type: str,
         state.update(([v[1] for v in versions], [v[0] for v in versions],
                       [v[2] for v in versions]))
         if out:
-            yield _frame(out, ["user_id", "probe_id", "probe_ts", "version_id",
+            yield _frame(out, [key, "probe_id", "probe_ts", "version_id",
                                "version_ts", "version_value"],
                          us_cols=("probe_ts", "version_ts"))
 
@@ -246,7 +252,7 @@ def over_running_agg(events: DataFrame, key: str = "user_id") -> DataFrame:
     SUM(value)/COUNT(*) over all rows of its key so far, in event-time
     order.  Money accumulates as integer cents — exact at any rescale.
     """
-    out_schema = ("user_id bigint, event_id bigint, ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, event_id bigint, ts timestamp, "
                   "running_sum double, running_n bigint")
     state_schema = "cents bigint, n bigint"
 
@@ -260,7 +266,7 @@ def over_running_agg(events: DataFrame, key: str = "user_id") -> DataFrame:
             out.append((key_[0], eid, ts_us, cents / 100.0, n))
         state.update((cents, n))
         if out:
-            yield _frame(out, ["user_id", "event_id", "ts", "running_sum",
+            yield _frame(out, [key, "event_id", "ts", "running_sum",
                                "running_n"])
 
     return keyed_state(events, key, fn, out_schema, state_schema,
@@ -282,7 +288,7 @@ def temporal_sort(events: DataFrame, key: str = "user_id",
     scales horizontally; the reference's *global* temporal sort is
     parallelism-1 by construction and maps to a single key here.
     """
-    out_schema = "user_id bigint, event_id bigint, ts timestamp, seq bigint"
+    out_schema = f"{key_field(events, key)}, event_id bigint, ts timestamp, seq bigint"
     state_schema = "emitted bigint, bids array<bigint>, bus array<bigint>"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
@@ -310,7 +316,7 @@ def temporal_sort(events: DataFrame, key: str = "user_id",
             deadline = max(-(-buf[0][0] // 1000) - 1, wm_ms + 1)
             state.setTimeoutTimestamp(deadline)
         if out:
-            yield _frame(out, ["user_id", "event_id", "ts", "seq"])
+            yield _frame(out, [key, "event_id", "ts", "seq"])
 
     return keyed_state(events, key, fn, out_schema, state_schema,
                        cols=["ts", "event_id"],
@@ -326,7 +332,8 @@ def count_sliding_window(events: DataFrame, size: int = 5, slide: int = 2,
     the last ``size`` cent values — bounded regardless of stream length,
     the same contract as the reference's CountEvictor(size) +
     CountTrigger(slide) pair."""
-    out_schema = "user_id bigint, fire_seq bigint, n_events bigint, sum_value double"
+    out_schema = (f"{key_field(events, key)}, fire_seq bigint, "
+                  "n_events bigint, sum_value double")
     state_schema = "n bigint, recent array<bigint>"
 
     def fn(key_: Any, pdf: pd.DataFrame, state: GroupState) -> Iterator[pd.DataFrame]:
@@ -345,7 +352,7 @@ def count_sliding_window(events: DataFrame, size: int = 5, slide: int = 2,
         state.update((n, recent))
         if out:
             yield pd.DataFrame(out, columns=[
-                "user_id", "fire_seq", "n_events", "sum_value"])
+                key, "fire_seq", "n_events", "sum_value"])
 
     return keyed_state(events, key, fn, out_schema, state_schema,
                        cols=["ts", "event_id", "value"], order=_EVENT_ORDER)
@@ -359,7 +366,7 @@ def over_rows_bounded(events: DataFrame, frame: int = 5,
     event-time order.  State = a ring buffer of the last ``frame-1``
     cent values, the exact bounded-state contract of the reference
     operator."""
-    out_schema = ("user_id bigint, event_id bigint, ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, event_id bigint, ts timestamp, "
                   "frame_sum double, frame_n bigint")
     state_schema = "recent array<bigint>"
 
@@ -375,7 +382,7 @@ def over_rows_bounded(events: DataFrame, frame: int = 5,
                         sum(recent) / 100.0, len(recent)))
         state.update((recent,))
         if out:
-            yield _frame(out, ["user_id", "event_id", "ts", "frame_sum",
+            yield _frame(out, [key, "event_id", "ts", "frame_sum",
                                "frame_n"])
 
     return keyed_state(events, key, fn, out_schema, state_schema,
@@ -397,7 +404,8 @@ def updatable_topn(events: DataFrame, n: int = 3,
     quiet key emits nothing.  Values accumulate as integer cents --
     exact and order-independent.
     """
-    out_schema = f"op string, {key} string, {id_col} bigint, val double, seq bigint"
+    out_schema = (f"op string, {key_field(events, key)}, {id_col} bigint, "
+                  "val double, seq bigint")
     state_schema = ("ids array<bigint>, cents array<bigint>, "
                     "top_ids array<bigint>, top_cents array<bigint>, seq bigint")
 
@@ -451,7 +459,7 @@ def over_range_bounded(events: DataFrame, preceding_minutes: float = 5,
     emission, so it is bounded by the frame width, never the history.
     Money accumulates as integer cents (exact at any parallelism).
     """
-    out_schema = (f"{key} bigint, event_id bigint, ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, event_id bigint, ts timestamp, "
                   "range_sum double, range_n bigint")
     state_schema = "buf_us array<bigint>, buf_cents array<bigint>"
     prec_us = int(preceding_minutes * 60_000_000)
@@ -506,7 +514,7 @@ def late_data_split(events: DataFrame, delay_minutes: float,
     per key; the batch is processed with vectorized cummax, no Python
     row loop.
     """
-    out_schema = (f"{key} bigint, event_id bigint, ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, event_id bigint, ts timestamp, "
                   "is_late boolean")
     state_schema = "max_us bigint"
     delay_us = int(delay_minutes * 60_000_000)
@@ -527,7 +535,7 @@ def late_data_split(events: DataFrame, delay_minutes: float,
             else max(max_us, int(ts_us.max()))
         state.update((max_us,))
         yield pd.DataFrame({
-            key: pdf[key].astype("int64"),
+            key: pdf[key],
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "is_late": late.fillna(False).astype(bool)})

@@ -36,7 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
 from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
-from flink_release_1_10_0_spark.streaming.keyed import i64_list, keyed_state
+from flink_release_1_10_0_spark.streaming.keyed import (
+    i64_list, key_field, keyed_state)
 
 _counter = itertools.count()
 
@@ -113,7 +114,7 @@ def delta_trigger_firings(events: DataFrame, threshold: float,
     per key (the baseline value) — the same footprint the reference's
     ValueState<T> holds; per-call work walks plain lists, no pandas
     row boxing."""
-    out_schema = (f"{key} bigint, event_id bigint, ts timestamp, "
+    out_schema = (f"{key_field(events, key)}, event_id bigint, ts timestamp, "
                   "value double, delta double")
     state_schema = "baseline double"
 

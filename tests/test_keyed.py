@@ -22,6 +22,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_release_1_10_0_spark.streaming import stateful
+from flink_release_1_10_0_spark.streaming.changelog import changelog_sum
 from flink_release_1_10_0_spark.streaming.core import run_to_completion
 from flink_release_1_10_0_spark.streaming.keyed import sort_rows
 from flink_release_1_10_0_spark.streaming.nfa import (
@@ -133,20 +134,78 @@ def test_answer_does_not_depend_on_arrow_chunking(spark, build, mode,
     assert _run(spark, stream, build, mode, chunk) == want
 
 
-def test_batch_route_equals_one_trigger_stream(spark):
+# every operator a bounded head runs on the batch route -> (build,
+# output mode of its one-trigger streaming replay)
+_BATCH_ROUTE = {
+    **{name: _CASES["stateful"][name] for name in (
+        "topn_per_key", "count_tumble_window",
+        "changelog_count", "over_running_agg",
+        "count_sliding_window", "over_rows_bounded", "updatable_topn",
+        "over_range_bounded")},
+    "changelog_sum": (changelog_sum, "append"),
+    **_CASES["delta_trigger"],
+}
+
+
+@given(seed=st.integers(0, 2 ** 16))
+@settings(max_examples=2, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_batch_route_equals_one_trigger_stream(spark, seed):
     """A batch input takes keyed_state's bounded route (one
-    ``applyInPandas`` call per key group): the answer equals the
-    one-micro-batch streaming answer."""
-    df = _events(spark, 7)
+    ``applyInPandas`` call per key group): for every operator a bounded
+    head runs that way, the answer equals the one-micro-batch streaming
+    answer."""
+    df = _events(spark, seed)
     src = tempfile.mkdtemp(prefix="keyed_batch_src_")
     df.coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    for build in (lambda ev: stateful.over_rows_bounded(ev, frame=3),
-                  lambda ev: delta_trigger_firings(ev, threshold=30.0)):
+    for name, (build, mode) in _BATCH_ROUTE.items():
         batch = build(df)
         assert not batch.isStreaming
-        assert _canon(batch.collect()) == _canon(
-            run_to_completion(build(stream), "append").collect())
+        want = _canon(run_to_completion(build(stream), mode).collect())
+        assert want, name
+        assert _canon(batch.collect()) == want, name
+
+
+# operator -> build(events, key); temporal_sort arms event-time timers,
+# which the batch route refuses, so it runs on a one-file stream
+_BY_KEY = {
+    "dedup_keep_last": lambda ev, k: stateful.dedup_keep_last(ev, key=k),
+    "topn_per_key": lambda ev, k: stateful.topn_per_key(ev, n=2, key=k),
+    "count_tumble_window":
+        lambda ev, k: stateful.count_tumble_window(ev, n=3, key=k),
+    "temporal_join": lambda ev, k: stateful.temporal_join(ev, "a", "b", key=k),
+    "over_running_agg": lambda ev, k: stateful.over_running_agg(ev, key=k),
+    "temporal_sort": lambda ev, k: stateful.temporal_sort(ev, key=k),
+    "count_sliding_window":
+        lambda ev, k: stateful.count_sliding_window(ev, 4, 2, key=k),
+    "over_rows_bounded":
+        lambda ev, k: stateful.over_rows_bounded(ev, frame=3, key=k),
+    "over_range_bounded":
+        lambda ev, k: stateful.over_range_bounded(ev, 10, key=k),
+    "late_data_split":
+        lambda ev, k: stateful.late_data_split(ev, 5, 5, "arrival", key=k),
+    "updatable_topn": lambda ev, k: stateful.updatable_topn(ev, n=2, key=k),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BY_KEY))
+def test_output_key_column_follows_the_input_key(spark, name):
+    """An operator keyed on a string column echoes that column, with its
+    name and type, as the output key.  The temporal join splits its
+    sides by ``event_type``, so it keys on a string copy of the user."""
+    key = "user" if name == "temporal_join" else "event_type"
+    df = _events(spark, 5).withColumn("user", F.col("user_id").cast("string"))
+    if name == "temporal_sort":
+        src = tempfile.mkdtemp(prefix="keyed_key_src_")
+        df.coalesce(1).write.mode("append").parquet(src)
+        stream = spark.readStream.schema(df.schema).parquet(src)
+        out = run_to_completion(_BY_KEY[name](stream, key), "append")
+    else:
+        out = _BY_KEY[name](df, key)
+    assert out.schema[key].dataType == df.schema[key].dataType
+    got = {r[key] for r in out.collect()}
+    assert got and got <= {r[key] for r in df.select(key).collect()}
 
 
 def test_process_sees_rows_in_arrival_order(spark):

@@ -456,7 +456,7 @@ def test_run_to_completion_leaves_no_sink_views(spark):
     def tables():
         return sorted(t.name for t in spark.catalog.listTables())
 
-    head = all_queries()["stream_topn_per_key"]
+    head = all_queries()["stream_temporal_sort"]
     before = tables()
     first = None
     for _ in range(3):
@@ -467,6 +467,35 @@ def test_run_to_completion_leaves_no_sink_views(spark):
         assert df.limit(2).count() == min(2, len(rows))
     assert first
     assert tables() == before
+
+
+# bounded keyed heads whose answer is the one-trigger answer: they run
+# their operator on the batch table (keyed_state's batch route)
+BATCH_ROUTE = [
+    "stream_topn_per_key", "stream_count_window_10", "stream_over_running_agg", "stream_over_rows_bounded",
+    "stream_over_range_bounded", "stream_count_sliding_window",
+    "stream_changelog_agg", "stream_changelog_sum", "stream_updatable_topn",
+]
+
+
+def test_batch_route_heads_start_no_streaming_query(spark, monkeypatch):
+    """Building and collecting a bounded keyed head starts no streaming
+    query: ``DataStreamWriter.start`` refuses, and every head still
+    returns rows."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from flink_release_1_10_0_spark.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("a bounded keyed head started a streaming query")
+
+    monkeypatch.setattr(DataStreamWriter, "start", refuse)
+    queries = all_queries()
+    for name in BATCH_ROUTE:
+        df = queries[name](spark, SF_DIR)
+        assert not df.isStreaming, name
+        assert df.collect(), name
 
 
 @pytest.mark.parametrize("name", ["stream_window_early_fire",
