@@ -3,16 +3,11 @@ together (``DataSet.java:1009`` coGroup, ``CoGroupedStreams.java``).
 
 Spark-first mapping: for the common aggregate-both-sides shapes, compile
 to two independent aggregations + a full outer join — pure Catalyst,
-shuffle on the key once per side, no Python.  The generic form uses
-``groupBy().cogroup().applyInPandas`` (Arrow-batched) for arbitrary
-pair-of-groups logic.
+shuffle on the key once per side, no Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,17 +25,6 @@ def cogroup_counts(left: DataFrame, left_key: str,
             .select(out_key,
                     F.coalesce("n_left", F.lit(0)).alias("n_left"),
                     F.coalesce("n_right", F.lit(0)).alias("n_right")))
-
-
-def cogroup_apply(left: DataFrame, left_keys: list[str],
-                  right: DataFrame, right_keys: list[str],
-                  fn: Callable[[tuple, pd.DataFrame, pd.DataFrame], pd.DataFrame],
-                  schema: str) -> DataFrame:
-    """Generic coGroup: ``fn(key, left_group_pdf, right_group_pdf)`` over
-    Arrow-batched pandas groups."""
-    return (left.groupBy(*left_keys)
-            .cogroup(right.groupBy(*right_keys))
-            .applyInPandas(fn, schema))
 
 
 def windowed_cogroup(left: DataFrame, right: DataFrame, key: str,

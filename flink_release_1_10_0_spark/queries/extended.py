@@ -14,6 +14,7 @@ from flink_release_1_10_0_spark.functions.udf import AggregateFunction, TableFun
 from flink_release_1_10_0_spark.operators.cogroup import cogroup_counts
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import dsum, t
+from flink_release_1_10_0_spark.session import scratch_dir
 
 # --------------------------------------------------------------------------
 # AggregateFunction (UDAF): quantity-weighted average price per returnflag
@@ -1181,11 +1182,9 @@ FROM customer GROUP BY c_mktsegment
 @register("source_csv_roundtrip", _CSV_RT_ORACLE)
 def source_csv_roundtrip(spark, sf_dir):
     """CsvRowDeserializationSchema.java round-trip analog."""
-    import tempfile
-
     from flink_release_1_10_0_spark.sources import formats as FMT
     cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    out = tempfile.mkdtemp(prefix="csv_rt_") + "/customer_csv"
+    out = scratch_dir(spark, "csv_rt") + "/customer_csv"
     FMT.write_csv(cust, out)
     back = FMT.read_csv(spark, out,
                         schema="c_custkey bigint, c_mktsegment string")
@@ -1204,12 +1203,10 @@ FROM orders GROUP BY o_orderstatus, o_orderpriority
 @register("source_json_roundtrip", _JSON_RT_ORACLE)
 def source_json_roundtrip(spark, sf_dir):
     """JsonRowDeserializationSchema.java:77 round-trip analog."""
-    import tempfile
-
     from flink_release_1_10_0_spark.sources import formats as FMT
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority")
-    out = tempfile.mkdtemp(prefix="json_rt_") + "/orders_json"
+    out = scratch_dir(spark, "json_rt") + "/orders_json"
     FMT.write_json(orders, out)
     back = FMT.read_json(
         spark, out,
@@ -1231,11 +1228,9 @@ FROM lineitem GROUP BY l_returnflag, l_linestatus
 def source_orc_roundtrip(spark, sf_dir):
     """OrcColumnarRowSplitReader.java round-trip analog — full typed rows
     including timestamps and doubles through the ORC vectorized path."""
-    import tempfile
-
     from flink_release_1_10_0_spark.queries.helpers import money
     li = t(spark, sf_dir, "lineitem")
-    out = tempfile.mkdtemp(prefix="orc_rt_") + "/lineitem_orc"
+    out = scratch_dir(spark, "orc_rt") + "/lineitem_orc"
     li.write.mode("overwrite").orc(out)
     from flink_release_1_10_0_spark.sources import formats as FMT
     back = FMT.read_orc(spark, out)
@@ -1262,11 +1257,9 @@ GROUP BY o_orderstatus
 @register("ddl_filesystem_pipeline", _DDL_PIPELINE_ORACLE)
 def ddl_filesystem_pipeline(spark, sf_dir):
     """SqlCreateTable.java + TableEnvironmentImpl.sqlUpdate:483 analog."""
-    import tempfile
-
     from flink_release_1_10_0_spark.environment import TableEnvironment
     env = TableEnvironment(spark)
-    base = tempfile.mkdtemp(prefix="ddl_pipeline_")
+    base = scratch_dir(spark, "ddl_pipeline")
     t(spark, sf_dir, "orders").createOrReplaceTempView("_ddl_orders_src")
     env.sql_update(f"""
         CREATE TABLE orders_ddl (
@@ -1303,11 +1296,9 @@ FROM customer GROUP BY c_mktsegment
 def source_text_roundtrip(spark, sf_dir):
     """StreamExecutionEnvironment.java:1072 readTextFile analog: lines
     are opaque strings; parsing is an explicit downstream map."""
-    import tempfile
-
     from flink_release_1_10_0_spark.sources import formats as FMT
     cust = t(spark, sf_dir, "customer")
-    out = tempfile.mkdtemp(prefix="text_rt_") + "/customer_txt"
+    out = scratch_dir(spark, "text_rt") + "/customer_txt"
     (cust.select(F.concat_ws("|", F.col("c_custkey"), F.col("c_mktsegment"))
          .alias("value"))
      .write.mode("overwrite").text(out))
@@ -1442,12 +1433,10 @@ FROM orders GROUP BY o_orderstatus
 @register("source_avro_roundtrip", _AVRO_RT_ORACLE)
 def source_avro_roundtrip(spark, sf_dir):
     """AvroRowDeserializationSchema.java:79 round-trip analog."""
-    import tempfile
-
     from flink_release_1_10_0_spark.sources import formats as FMT
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
-    out = tempfile.mkdtemp(prefix="avro_rt_") + "/orders_avro"
+    out = scratch_dir(spark, "avro_rt") + "/orders_avro"
     FMT.write_avro(orders, out)
     back = FMT.read_avro(
         spark, out,
@@ -1478,11 +1467,9 @@ GROUP BY o_orderstatus
 
 @register("sink_partition_overwrite_roundtrip", _SINK_OVERWRITE_ORACLE)
 def sink_partition_overwrite_roundtrip(spark, sf_dir):
-    import tempfile
-
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus")
-    out = tempfile.mkdtemp(prefix="sink_ovw_") + "/orders_part"
+    out = scratch_dir(spark, "sink_ovw") + "/orders_part"
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     replacement = orders.filter(
         "o_orderstatus = 'F' AND o_totalprice > 100000")
@@ -1531,11 +1518,9 @@ FROM orders GROUP BY o_orderstatus
 def source_dbapi_roundtrip(spark, sf_dir):
     """JDBC-family connector analog: executor-side DB-API cursors, one
     Arrow stage per write and per read (sources/dbapi.py)."""
-    import tempfile
-
     from flink_release_1_10_0_spark.sources import dbapi
 
-    url = tempfile.mkdtemp(prefix="dbapi_rt_") + "/orders.db"
+    url = scratch_dir(spark, "dbapi_rt") + "/orders.db"
     dbapi.create_table(url, "CREATE TABLE IF NOT EXISTS orders_t ("
                             "o_orderkey BIGINT PRIMARY KEY, "
                             "o_orderstatus TEXT, o_totalprice DOUBLE)")
@@ -1581,15 +1566,13 @@ GROUP BY o_orderpriority
 
 @register("join_bucketed_colocated", _BUCKETED_JOIN_ORACLE)
 def join_bucketed_colocated(spark, sf_dir):
-    import tempfile
-
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority")
     # external-location bucketed tables: a fresh temp path per run, and
     # an explicit drop so a stale catalog entry (or a previous session's
     # warehouse dir) never collides
-    base = tempfile.mkdtemp(prefix="bucketed_join_")
+    base = scratch_dir(spark, "bucketed_join")
     spark.sql("DROP TABLE IF EXISTS _bj_lineitem")
     spark.sql("DROP TABLE IF EXISTS _bj_orders")
     (li.write.mode("overwrite").bucketBy(8, "l_orderkey")
@@ -1651,14 +1634,12 @@ def source_sequence_file_roundtrip(spark, sf_dir):
     """SequenceFileWriterFactory.java round-trip analog: orders written
     as (key, JSON Text) SequenceFile records, read back with an explicit
     schema, aggregated — the whole write/read chain value-hashed."""
-    import tempfile
-
     from flink_release_1_10_0_spark.queries.helpers import money
     from flink_release_1_10_0_spark.sources import formats as FMT
 
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice")
-    out = tempfile.mkdtemp(prefix="seq_rt_") + "/orders_seq"
+    out = scratch_dir(spark, "seq_rt") + "/orders_seq"
     FMT.write_sequence_file(orders, out, key_col="o_orderkey",
                             value_cols=["o_orderstatus", "o_totalprice"])
     back = FMT.read_sequence_file(

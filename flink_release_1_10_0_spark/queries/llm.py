@@ -15,6 +15,7 @@ from flink_release_1_10_0_spark.llm.multimodal import extract_fake_metadata, wit
 from flink_release_1_10_0_spark.llm.text import language_id_expr, with_text_stats
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import t
+from flink_release_1_10_0_spark.session import scratch_dir
 
 # DuckDB-side shared fragments (tokenizer + 60-bit md5 hash)
 _DWORDS = ("list_filter(string_split_regex(regexp_replace(lower(text), "
@@ -709,10 +710,8 @@ ORDER BY cosine DESC, vec_id LIMIT 5
 
 @register("similarity_ivf_topk_pruned", _IVF_TOPK_PRUNED_ORACLE)
 def similarity_ivf_topk_pruned(spark, sf_dir):
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
-    index_path = tempfile.mkdtemp(prefix="ivf_index_")
+    index_path = scratch_dir(spark, "ivf_index")
     S.ivf_build_index(emb, index_path)
     return S.ivf_topk_indexed(spark, index_path,
                               emb.filter(F.col("vec_id") == 1), k=5)
@@ -753,10 +752,8 @@ ORDER BY cosine DESC, vec_id LIMIT 5
 
 @register("similarity_ivf_topk_nprobe2", _IVF_NPROBE_ORACLE)
 def similarity_ivf_topk_nprobe2(spark, sf_dir):
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
-    index_path = tempfile.mkdtemp(prefix="ivf_index_np_")
+    index_path = scratch_dir(spark, "ivf_index_np")
     S.ivf_build_index(emb, index_path)
     return S.ivf_topk_indexed(spark, index_path,
                               emb.filter(F.col("vec_id") == 1), k=5, nprobe=2)
@@ -1590,19 +1587,12 @@ def dedup_semantic_incremental(spark, sf_dir):
 # (bucketed rows + centroid sidecar read back, values identical).
 @register("dedup_semantic_index_roundtrip", _SEMANTIC_INCR_ORACLE)
 def dedup_semantic_index_roundtrip(spark, sf_dir):
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
     old = emb.filter("vec_id % 17 <> 0")
     new = emb.filter("vec_id % 17 = 0")
     rows, cents = D.semantic_index(old, k=8, iterations=2)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"sem_index_q_{os.getpid()}")
+    path = scratch_dir(spark, "sem_index_q")
     name = D.write_semantic_index(rows, cents, path, table="semidx_q")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     stored, pcents = D.read_semantic_index(spark, path, name)
     return D.semantic_incremental_pairs(stored, pcents, new,
                                         threshold=0.35)

@@ -18,6 +18,7 @@ from flink_release_1_10_0_spark.llm import similarity as S
 from flink_release_1_10_0_spark.llm import text as T
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import t
+from flink_release_1_10_0_spark.session import scratch_dir
 
 # --------------------------------------------------------------------------
 # Next-fit sequence packing (document-boundary-respecting): the Spark
@@ -658,22 +659,11 @@ def pipeline_curation_pack_v2(spark, sf_dir):
 # exactly the claim).
 @register("similarity_pq_index_topk", _IVFPQ_ORACLE)
 def similarity_pq_index_topk(spark, sf_dir):
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
     cb = S.pq_train(emb, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS)
     codes = S.pq_encode(emb, cb, m=_PQ_M)
-    # stable per-process path + overwrite-mode write: repeated runs in
-    # one process reuse the directory instead of leaking one per run;
-    # the result frame scans it lazily (the caller collects AFTER we
-    # return), so removal must wait for process exit
-    path = os.path.join(tempfile.gettempdir(),
-                        f"pq_index_q_{os.getpid()}")
+    path = scratch_dir(spark, "pq_index_q")
     S.write_pq_index(emb, codes, cb, path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     q = emb.filter("vec_id = 1").select(F.col("vec_id").alias("q_id"),
                                         "embedding")
     return S.ivfpq_topk_indexed(spark, path, q, k=5, m=_PQ_M)

@@ -18,6 +18,7 @@ from flink_release_1_10_0_spark.llm import ir as IR
 from flink_release_1_10_0_spark.llm import packing as P
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import t
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.queries.llm import _DWORDS
 
 # --------------------------------------------------------------------------
@@ -361,23 +362,13 @@ WHERE rn <= 5
 
 @register("similarity_pq_index_append", _PQ_APPEND_ORACLE)
 def similarity_pq_index_append(spark, sf_dir):
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
     old = emb.filter("vec_id % 17 <> 0")
     new = emb.filter("vec_id % 17 = 0")
     cb = S.pq_train(old, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS)
     codes = S.pq_encode(old, cb, m=_PQ_M)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"pq_index_append_q_{os.getpid()}")
-    if os.path.exists(path):
-        shutil.rmtree(path)  # append-mode write: a stale dir would
-        # double-append across repeated runs in one process
+    path = scratch_dir(spark, "pq_index_append_q")
     S.write_pq_index(old, codes, cb, path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     S.pq_append_to_index(spark, path, new, m=_PQ_M)
     q = emb.filter("vec_id = 1").select(F.col("vec_id").alias("q_id"),
                                         "embedding")
@@ -413,18 +404,11 @@ WHERE rn <= 5
 
 @register("similarity_pq_index_nprobe2", _IVFPQ_NPROBE2_ORACLE)
 def similarity_pq_index_nprobe2(spark, sf_dir):
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     emb = t(spark, sf_dir, "embeddings")
     cb = S.pq_train(emb, m=_PQ_M, k=_PQ_K, iterations=_PQ_ITERS)
     codes = S.pq_encode(emb, cb, m=_PQ_M)
-    path = os.path.join(tempfile.gettempdir(),
-                        f"pq_index_np2_q_{os.getpid()}")
+    path = scratch_dir(spark, "pq_index_np2_q")
     S.write_pq_index(emb, codes, cb, path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     q = emb.filter("vec_id = 1").select(F.col("vec_id").alias("q_id"),
                                         "embedding")
     return S.ivfpq_topk_indexed(spark, path, q, k=5, m=_PQ_M, nprobe=2)

@@ -22,6 +22,7 @@ from flink_release_1_10_0_spark.llm import similarity as S
 from flink_release_1_10_0_spark.llm import text as T
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import t
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.queries.llm import (_DWORDS, _band_selects,
                                                     _sig_cols_duck)
 
@@ -435,20 +436,10 @@ def text_bpe_vocab(spark, sf_dir):
 # transparency is exactly the claim (the llm3 PQ-index pattern).
 @register("text_bpe_model_roundtrip", _BPE_ENCODE_ORACLE)
 def text_bpe_model_roundtrip(spark, sf_dir):
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     docs = t(spark, sf_dir, "documents")
     merges = B.bpe_train(docs, n_merges=_BPE_MERGES)
-    # stable per-process path + overwrite write: repeated runs reuse
-    # the directory; the result frame reads it lazily, so removal
-    # waits for process exit
-    path = os.path.join(tempfile.gettempdir(),
-                        f"bpe_model_q_{os.getpid()}")
+    path = scratch_dir(spark, "bpe_model_q")
     B.write_bpe_model(merges, path)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
     stored = B.read_bpe_model(spark, path)
     return B.bpe_encode_stats(docs, stored)
 

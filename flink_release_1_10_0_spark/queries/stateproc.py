@@ -10,12 +10,11 @@ merges are order-independent and bit-exact against the DuckDB oracles.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import MONEY, t
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.streaming.core import read_stream_table
 
 _STATE_AGG_ORACLE = """
@@ -48,7 +47,7 @@ def state_processor_read_keyed(spark, sf_dir):
     ev = read_stream_table(spark, sf_dir, "events")
     handle = as_queryable_state(_keyed_state(ev), "sp_read_keyed",
                                 ["user_id"], backend="dbapi")
-    path = tempfile.mkdtemp(prefix="savepoint_read_")
+    path = scratch_dir(spark, "savepoint_read")
     (create_savepoint(spark, max_parallelism=128)
      .with_keyed_operator("agg", handle.snapshot(), ["user_id"])
      .write(path))
@@ -71,7 +70,7 @@ def state_processor_bootstrap_resume(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
 
-    path = tempfile.mkdtemp(prefix="savepoint_boot_")
+    path = scratch_dir(spark, "savepoint_boot")
     (create_savepoint(spark, max_parallelism=128)
      .with_keyed_operator(
          "agg", _keyed_state(ev.filter(F.col("event_id") <= mid)),
@@ -110,8 +109,8 @@ def state_processor_rescale_roundtrip(spark, sf_dir):
     state = _keyed_state(
         t(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("purchase", "error")))
-    src = tempfile.mkdtemp(prefix="savepoint_src_")
-    dest = tempfile.mkdtemp(prefix="savepoint_rescaled_")
+    src = scratch_dir(spark, "savepoint_src")
+    dest = scratch_dir(spark, "savepoint_rescaled")
     (create_savepoint(spark, max_parallelism=128)
      .with_keyed_operator("agg", state, ["user_id"])
      .write(src))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from flink_release_1_10_0_spark.queries import register
 from flink_release_1_10_0_spark.queries.helpers import MONEY, t
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.streaming.core import read_stream_table, run_to_completion
 from flink_release_1_10_0_spark.streaming import stateful
 from flink_release_1_10_0_spark.streaming.cep import Pattern
@@ -1134,14 +1135,13 @@ def stream_window_early_fire(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from flink_release_1_10_0_spark.streaming.triggers import run_with_early_firings
 
     ev = t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="early_fire_split_")
-    src = tempfile.mkdtemp(prefix="early_fire_src_")
+    tmp = scratch_dir(spark, "early_fire_split")
+    src = scratch_dir(spark, "early_fire_src")
     # two time-interleaved chunks, one file each; mtimes force
     # FileStreamSource to process chunk 0 before chunk 1
     base = time.time() - 600
@@ -1281,15 +1281,13 @@ FROM events WHERE value > 50 GROUP BY event_type
 
 @register("sink_file_streaming_roundtrip", _FILE_SINK_ORACLE)
 def sink_file_streaming_roundtrip(spark, sf_dir):
-    import tempfile
-
     from flink_release_1_10_0_spark.sources.streams import file_sink
 
     sdf = (read_stream_table(spark, sf_dir, "events")
            .filter("value > 50")
            .select("event_id", "event_type", "value"))
-    out = tempfile.mkdtemp(prefix="file_sink_rt_out_")
-    ckpt = tempfile.mkdtemp(prefix="file_sink_rt_ckpt_")
+    out = scratch_dir(spark, "file_sink_rt_out")
+    ckpt = scratch_dir(spark, "file_sink_rt_ckpt")
     q = file_sink(sdf, out, ckpt, partition_by=["event_type"],
                   available_now=True)
     q.awaitTermination()
@@ -1363,12 +1361,10 @@ FROM events GROUP BY event_type
 
 @register("stream_checkpoint_resume_roundtrip", _CKPT_RESUME_ORACLE)
 def stream_checkpoint_resume_roundtrip(spark, sf_dir):
-    import tempfile
-
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    src = tempfile.mkdtemp(prefix="ckpt_rt_src_")
-    out = tempfile.mkdtemp(prefix="ckpt_rt_out_")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_rt_ckpt_")
+    src = scratch_dir(spark, "resume_rt_src")
+    out = scratch_dir(spark, "resume_rt_out")
+    ckpt = scratch_dir(spark, "resume_rt_ckpt")
     mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).first()[0]
 
     def run_wave():
@@ -1627,15 +1623,13 @@ def async_table_lookup_join(spark, sf_dir):
     """streaming/async_io.py:async_table_enrich — bounded in-flight async
     fetches per Arrow batch, 1-to-N lateral expansion, executor-side
     DB connections (no driver round trip)."""
-    import tempfile
-
     from pyspark.sql.types import DoubleType, LongType
 
     from flink_release_1_10_0_spark.sources import dbapi
     from flink_release_1_10_0_spark.streaming.async_io import (
         async_table_enrich)
 
-    url = tempfile.mkdtemp(prefix="async_tbl_") + "/orders.db"
+    url = scratch_dir(spark, "async_tbl") + "/orders.db"
     dbapi.create_table(url, "CREATE TABLE orders_t ("
                             "o_orderkey BIGINT, o_custkey BIGINT, "
                             "o_totalprice DOUBLE)")

@@ -18,7 +18,10 @@ static number.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark import SparkConf
 from pyspark.sql import SparkSession
@@ -49,6 +52,31 @@ def session_memo(spark: SparkSession, name: str) -> dict | None:
             del _SESSION_MEMOS[next(iter(_SESSION_MEMOS))]
         memos = _SESSION_MEMOS[sid] = {}
     return memos.setdefault(name, {})
+
+
+# Scratch roots made by this process, one per session, removed at exit.
+_SCRATCH_ROOTS: list[str] = []
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    for root in _SCRATCH_ROOTS:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """A new empty dir ``name_*`` under ``spark``'s session root: where
+    the package puts every file a call writes for itself (indexes,
+    round-trip copies, checkpoints).  A returned lazy frame may read it
+    at any time, so only a scoped checkpoint removes its own dir while
+    the process lives; the root (made lazily in
+    ``tempfile.gettempdir()``) goes at exit, and a killed process leaves
+    one root behind."""
+    memo = session_memo(spark, "session.scratch")
+    if "root" not in memo:
+        memo["root"] = tempfile.mkdtemp(prefix="spark_graft_session_")
+        _SCRATCH_ROOTS.append(memo["root"])
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=memo["root"])
 
 
 def _executor_pythonpath() -> str:

@@ -138,7 +138,7 @@ def run_sequence_stream_to_end(spark, end: int, rows_per_batch: int,
            .option("end", str(end))
            .option("rowsPerBatch", str(rows_per_batch)).load())
     qname = f"_seq_sink_{next(_run_counter)}"
-    with scoped_checkpoint("seq_stream_ckpt_") as ckpt:
+    with scoped_checkpoint(spark) as ckpt:
         q = (sdf.writeStream.format("memory").queryName(qname)
              .option("checkpointLocation", ckpt)
              .trigger(processingTime="0 seconds").start())

@@ -35,14 +35,3 @@ def broadcast_rules_apply(events: DataFrame, rules: DataFrame,
     """
     joined = events.join(F.broadcast(rules), on, "inner")
     return joined.filter(condition).select(*out_cols)
-
-
-def broadcast_rules_tag(events: DataFrame, rules: DataFrame,
-                        on: str | Column, tag: Column,
-                        *out_cols: str | Column) -> DataFrame:
-    """Non-filtering variant: left-join the broadcast rules and attach a
-    computed ``tag`` column (rule verdict) to every event — the
-    enrich-don't-drop shape of BroadcastProcessFunction.processElement.
-    """
-    joined = events.join(F.broadcast(rules), on, "left")
-    return joined.select(*out_cols, tag)

@@ -18,21 +18,22 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scratch_dir
+
 _counter = itertools.count()
 
 
 @contextmanager
-def scoped_checkpoint(prefix: str = "spark_graft_ckpt_") -> Iterator[str]:
-    """A temp checkpoint dir for one bounded streaming run, removed on
+def scoped_checkpoint(spark: SparkSession) -> Iterator[str]:
+    """A scratch checkpoint dir for one bounded streaming run, removed on
     exit: once the query has terminated its result lives in the sink,
     and a finished bounded run is never resumed."""
-    ckpt = tempfile.mkdtemp(prefix=prefix)
+    ckpt = scratch_dir(spark, "ckpt")
     try:
         yield ckpt
     finally:
@@ -72,7 +73,7 @@ def run_to_completion(result: DataFrame, output_mode: str = "append") -> DataFra
     itself, so it keeps working, and the session catalog stays flat."""
     spark = result.sparkSession
     qname = f"_stream_sink_{next(_counter)}"
-    with scoped_checkpoint() as ckpt:
+    with scoped_checkpoint(spark) as ckpt:
         q = (result.writeStream
              .format("memory")
              .queryName(qname)

@@ -35,11 +35,11 @@ analog — a plain DB-API lookup, no SparkSession required.
 from __future__ import annotations
 
 import itertools
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
 
 _counter = itertools.count()
@@ -134,7 +134,7 @@ def as_queryable_state(state_df: DataFrame, name: str,
                 f.name in key_cols and len(key_cols) == 1) else ""
             ddl_cols.append(f"{f.name} {st}{pk}")
         if url is None:
-            url = tempfile.mkdtemp(prefix="qstate_db_") + f"/{name}.db"
+            url = scratch_dir(spark, "qstate_db") + f"/{name}.db"
         table = f"qstate_{name}_{next(_counter)}"
         constraint = (f", PRIMARY KEY ({', '.join(key_cols)})"
                       if len(key_cols) > 1 else "")
@@ -153,12 +153,12 @@ def as_queryable_state(state_df: DataFrame, name: str,
         raise ValueError(f"unknown queryable-state backend: {backend}")
 
     if bounded:
-        with scoped_checkpoint("spark_graft_qstate_") as ckpt:
+        with scoped_checkpoint(spark) as ckpt:
             handle.query = (writer.option("checkpointLocation", ckpt)
                             .trigger(availableNow=True).start())
             handle.query.awaitTermination()
     else:
-        ckpt = tempfile.mkdtemp(prefix="spark_graft_qstate_")
+        ckpt = scratch_dir(spark, "qstate_ckpt")
         handle.query = writer.option("checkpointLocation", ckpt).start()
     return handle
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
 from flink_release_1_10_0_spark.streaming.keyed import (
-    i64_list, keyed_state, ts_us_list)
+    i64_list, key_field, keyed_state, ts_us_list)
 
 INNER = "inner"
 LEFT_OUTER = "left_outer"
@@ -156,8 +156,8 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
 
     unioned = side(left, 0).unionByName(side(right, 1))
 
-    out_schema = (f"op string, {key} bigint, l_id bigint, l_value double, "
-                  "r_id bigint, r_value double, seq bigint")
+    out_schema = (f"op string, {key_field(left, key)}, l_id bigint, "
+                  "l_value double, r_id bigint, r_value double, seq bigint")
     # typed columns, not a JSON blob: the state store holds packed Arrow
     # arrays and skips json.dumps/loads per key per micro-batch — at
     # 100 TB state volume ser/deser dominates (r2 verdict #5)
@@ -249,7 +249,7 @@ def stream_stream_join(left: DataFrame, right: DataFrame, key: str,
             rv = np.concatenate([c[6] for c in chunks])
             yield pd.DataFrame({
                 "op": op,
-                key: np.full(total, k, I64),
+                key: np.full(total, k),
                 # IntegerArray(values, mask) keeps ids exact at any
                 # magnitude (no float64 round-trip)
                 "l_id": pd.arrays.IntegerArray(lid, lmask.copy()),

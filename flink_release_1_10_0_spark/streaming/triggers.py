@@ -25,8 +25,6 @@ callers can label firings early/final after the run.
 
 from __future__ import annotations
 
-import itertools
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -35,11 +33,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState
 
+from flink_release_1_10_0_spark.session import scratch_dir
 from flink_release_1_10_0_spark.streaming.core import scoped_checkpoint
 from flink_release_1_10_0_spark.streaming.keyed import (
     i64_list, key_field, keyed_state)
-
-_counter = itertools.count()
 
 
 def run_with_early_firings(agg: DataFrame,
@@ -60,7 +57,7 @@ def run_with_early_firings(agg: DataFrame,
     """
     spark = agg.sparkSession
     # the firing log outlives the run: the returned frame reads it lazily
-    out_dir = tempfile.mkdtemp(prefix=f"early_fire_out_{next(_counter)}_")
+    out_dir = scratch_dir(spark, "early_fire_out")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         # update-mode: batch_df holds only the keys updated this batch
@@ -75,7 +72,7 @@ def run_with_early_firings(agg: DataFrame,
              .withColumn("batch_id", F.lit(None).cast("bigint")))
     empty.write.mode("append").parquet(out_dir)
 
-    with scoped_checkpoint("early_fire_ckpt_") as ckpt:
+    with scoped_checkpoint(spark) as ckpt:
         q = (agg.writeStream
              .outputMode("update")
              .foreachBatch(sink)

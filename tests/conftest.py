@@ -11,7 +11,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_release_1_10_0_spark.catalog import TABLES
-from flink_release_1_10_0_spark.session import get_spark
+from flink_release_1_10_0_spark.session import get_spark, scratch_dir
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -32,6 +32,12 @@ def private_tempdir():
     finally:
         tempfile.tempdir = saved
         shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_root(spark) -> str:
+    """``spark``'s session scratch root, the parent of every dir
+    ``session.scratch_dir`` makes (checkpoints included)."""
+    return os.path.dirname(scratch_dir(spark, "probe"))
 
 
 @pytest.fixture(scope="session")

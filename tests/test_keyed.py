@@ -186,15 +186,17 @@ _BY_KEY = {
     "late_data_split":
         lambda ev, k: stateful.late_data_split(ev, 5, 5, "arrival", key=k),
     "updatable_topn": lambda ev, k: stateful.updatable_topn(ev, n=2, key=k),
+    "stream_stream_join": lambda ev, k: stream_stream_join(
+        ev.filter("event_type = 'a'"), ev.filter("event_type = 'b'"), k),
 }
 
 
 @pytest.mark.parametrize("name", sorted(_BY_KEY))
 def test_output_key_column_follows_the_input_key(spark, name):
     """An operator keyed on a string column echoes that column, with its
-    name and type, as the output key.  The temporal join splits its
-    sides by ``event_type``, so it keys on a string copy of the user."""
-    key = "user" if name == "temporal_join" else "event_type"
+    name and type, as the output key.  The two joins split their sides
+    by ``event_type``, so they key on a string copy of the user."""
+    key = "user" if name.endswith("join") else "event_type"
     df = _events(spark, 5).withColumn("user", F.col("user_id").cast("string"))
     if name == "temporal_sort":
         src = tempfile.mkdtemp(prefix="keyed_key_src_")

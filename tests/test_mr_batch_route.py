@@ -22,7 +22,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 from flink_release_1_10_0_spark.streaming.core import run_to_completion
 from flink_release_1_10_0_spark.streaming.nfa import (
     SKIP_PAST_LAST, SKIP_TO_NEXT, NfaStage, match_nfa)
-from tests.conftest import with_eos_sentinels
+from tests.conftest import scratch_root, with_eos_sentinels
 
 _SCHEMA = ("event_id bigint, ts string, user_id bigint, "
            "event_type string, value double")
@@ -155,6 +155,8 @@ def test_mr_sql_on_batch_starts_no_streaming_query(spark, tmp_path,
             _ev(4, 3, "a", user=2), _ev(5, 4, "c", user=2)]
     df = _events(spark, rows)
     stream = _as_stream(spark, df, tmp_path_factory.getbasetemp())
+    root = scratch_root(spark)
+    made = sorted(os.listdir(root))
     listener = _Starts()
     spark.streams.addListener(listener)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -164,6 +166,7 @@ def test_mr_sql_on_batch_starts_no_streaming_query(spark, tmp_path,
         assert listener.started == 0
         assert spark.streams.active == []
         assert os.listdir(tmp_path) == []
+        assert sorted(os.listdir(root)) == made
         assert [(r.user_id, r.a_id, r.c_id) for r in got] == [(1, 1, 3)]
 
         via_stream = execute_match_recognize_sql(
@@ -176,13 +179,14 @@ def test_mr_sql_on_batch_starts_no_streaming_query(spark, tmp_path,
 
 def test_run_to_completion_leaves_no_checkpoint_dirs(spark, tmp_path):
     """run_to_completion removes its checkpoint dir once the query has
-    terminated: N runs leave the count of spark_graft_ckpt_* dirs flat."""
+    terminated: N runs leave the count of ckpt_* dirs in the session's
+    scratch root flat."""
     rows = [_ev(1, 0, "a"), _ev(2, 1, "b"), _ev(3, 2, "c")]
     stream = _as_stream(spark, _events(spark, rows), tmp_path)
-    tmp = tempfile.gettempdir()
+    root = scratch_root(spark)
 
     def n_ckpt():
-        return sum(p.startswith("spark_graft_ckpt_") for p in os.listdir(tmp))
+        return sum(p.startswith("ckpt_") for p in os.listdir(root))
 
     before = n_ckpt()
     for _ in range(3):
@@ -202,6 +206,8 @@ def test_bounded_pattern_match_stream_is_one_batch_query(spark, tmp_path,
     from flink_release_1_10_0_spark.streaming.cep import Pattern
     from tests.conftest import SF_DIR
 
+    root = scratch_root(spark)
+    made = sorted(os.listdir(root))
     listener = _Starts()
     spark.streams.addListener(listener)
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -214,6 +220,7 @@ def test_bounded_pattern_match_stream_is_one_batch_query(spark, tmp_path,
         assert listener.started == 0
         assert spark.streams.active == []
         assert os.listdir(tmp_path) == []
+        assert sorted(os.listdir(root)) == made
 
         head = all_queries()["stream_cep_error_then_purchase"](spark, SF_DIR)
         assert listener.started == 1

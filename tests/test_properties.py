@@ -128,15 +128,23 @@ def test_no_driver_side_collect_in_package():
 def test_sessions_built_only_by_get_spark():
     """Guard: in the package, tools/ and bench.py only session.get_spark
     builds a SparkSession, so no hand-copied builder drops a conf every
-    session needs (the worker daemon and its PYTHONPATH)."""
+    session needs (the worker daemon and its PYTHONPATH).  In the
+    package only session.py makes temp dirs, so every file a call writes
+    lives under its session's scratch root (``session.scratch_dir``)."""
     import pathlib
+    import re
 
     root = pathlib.Path(__file__).resolve().parents[1]
-    files = [*(root / "flink_release_1_10_0_spark").rglob("*.py"),
-             *(root / "tools").rglob("*.py"), root / "bench.py"]
-    offenders = [str(p.relative_to(root)) for p in files
-                 if "SparkSession.builder" in p.read_text()]
-    assert offenders == ["flink_release_1_10_0_spark/session.py"]
+    package = list((root / "flink_release_1_10_0_spark").rglob("*.py"))
+    checks = [
+        (r"SparkSession\.builder",
+         [*package, *(root / "tools").rglob("*.py"), root / "bench.py"]),
+        (r"\b(mkdtemp|gettempdir|TemporaryDirectory)\b", package),
+    ]
+    for pattern, files in checks:
+        offenders = [str(p.relative_to(root)) for p in files
+                     if re.search(pattern, p.read_text())]
+        assert offenders == ["flink_release_1_10_0_spark/session.py"], pattern
 
 
 @given(vals=st.lists(st.integers(min_value=0, max_value=9),

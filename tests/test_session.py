@@ -1,14 +1,19 @@
 """Sessions from ``session.get_spark``: session-scoped driver memos (a
 session built after ``stop()`` starts from empty memos and never gets a
-frame planned on the stopped session) and the Python worker daemon
-(``pyworker.py``: its zip-archive guard, that workers run on it, and that
-it imports from any cwd)."""
+frame planned on the stopped session), the session scratch root
+(``session.scratch_dir``: a new dir per call, one root per session,
+removed at exit) and the Python worker daemon (``pyworker.py``: its
+zip-archive guard, that workers run on it, and that it imports from any
+cwd)."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -46,6 +51,59 @@ def test_stop_then_get_or_create_gets_fresh_memos():
                        timeout=600)
     assert r.returncode == 0, r.stderr[-3000:]
     assert r.stdout.split()[-1] == "25"
+
+
+# Another scale factor: its index differs from SF_DIR's.
+_OTHER_SF = os.path.join(os.path.dirname(SF_DIR),
+                         "sf0.001" if SF_DIR.endswith("sf0.01") else "sf0.01")
+
+
+@pytest.mark.parametrize("name", ["similarity_pq_index_topk",
+                                  "similarity_pq_index_nprobe2",
+                                  "dedup_semantic_index_roundtrip"])
+def test_rebuilt_index_leaves_a_held_frame_intact(spark, name):
+    """A head that writes an index and returns a frame reading it lazily
+    gets a new scratch dir per call: building it again on another tier
+    does not touch the files of a frame still held."""
+    from flink_release_1_10_0_spark.queries import all_queries
+
+    head = all_queries()[name]
+    alone = sorted(map(tuple, head(spark, SF_DIR).collect()))
+    held = head(spark, SF_DIR)
+    head(spark, _OTHER_SF)
+    assert sorted(map(tuple, held.collect())) == alone
+
+
+# Runs in its own interpreter with its own TMPDIR: what the heads leave
+# there shows only after the interpreter exits.
+_SCRATCH = """
+import json, os, sys, tempfile
+from flink_release_1_10_0_spark.queries import all_queries
+from flink_release_1_10_0_spark.session import get_spark
+
+spark = get_spark("scratch_root", cpus=2)
+for name in sys.argv[2:]:
+    assert all_queries()[name](spark, sys.argv[1]).count() > 0, name
+print(json.dumps(os.listdir(tempfile.gettempdir())))
+"""
+
+
+def test_session_scratch_is_one_root_removed_at_exit(tmp_path):
+    """Two heads that write files leave one entry in the temp dir while
+    the process runs (its session's scratch root), and none once it has
+    exited."""
+    env = dict(os.environ, TMPDIR=str(tmp_path),
+               SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   [_ROOT, os.environ.get("PYTHONPATH", "")]))
+    r = subprocess.run([sys.executable, "-c", _SCRATCH, SF_DIR,
+                        "source_csv_roundtrip", "queryable_state_snapshot"],
+                       env=env, cwd=_ROOT, capture_output=True, text=True,
+                       timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    live = json.loads(r.stdout.strip().splitlines()[-1])
+    assert len(live) == 1 and live[0].startswith("spark_graft_session_")
+    assert os.listdir(tmp_path) == []
 
 
 # Runs in its own interpreter: the guard must not be installed in the

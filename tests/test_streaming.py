@@ -426,18 +426,16 @@ def test_queryable_state_dbapi_rejects_unsupported_column_type(spark):
 def test_queryable_state_snapshot_leaves_no_checkpoint_dirs(spark):
     """A bounded as_queryable_state removes its checkpoint dir once the
     availableNow query has terminated: three runs of the head keep the
-    count of spark_graft_qstate_* dirs flat."""
+    count of ckpt_* dirs in the session's scratch root flat."""
     import os
-    import tempfile
 
     from flink_release_1_10_0_spark.queries import all_queries
-    from tests.conftest import SF_DIR
+    from tests.conftest import SF_DIR, scratch_root
 
-    tmp = tempfile.gettempdir()
+    root = scratch_root(spark)
 
     def n_ckpt():
-        return sum(p.startswith("spark_graft_qstate_")
-                   for p in os.listdir(tmp))
+        return sum(p.startswith("ckpt_") for p in os.listdir(root))
 
     head = all_queries()["queryable_state_snapshot"]
     before = n_ckpt()
@@ -500,24 +498,21 @@ def test_batch_route_heads_start_no_streaming_query(spark, monkeypatch):
 
 @pytest.mark.parametrize("name", ["stream_window_early_fire",
                                   "source_custom_fn_stream"])
-def test_bounded_runs_leave_no_checkpoints_or_views(spark, name, tmp_path,
-                                                   monkeypatch):
+def test_bounded_runs_leave_no_checkpoints_or_views(spark, name):
     """The early-firing and sequence-source harnesses scope their
     checkpoint dirs to the run, and the sequence harness drops its sink
-    view: three runs keep the checkpoint-dir count and the catalog flat,
-    and each returned frame still collects to the first run's rows."""
+    view: three runs keep the checkpoint-dir count in the session's
+    scratch root and the catalog flat, and each returned frame still
+    collects to the first run's rows."""
     import os
-    import tempfile
 
     from flink_release_1_10_0_spark.queries import all_queries
-    from tests.conftest import SF_DIR
+    from tests.conftest import SF_DIR, scratch_root
 
-    # a private temp dir: other processes' runs cannot move the count
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = scratch_root(spark)
 
     def state():
-        return (sum(p.startswith(("early_fire_ckpt_", "seq_stream_ckpt_"))
-                    for p in os.listdir(tmp_path)),
+        return (sum(p.startswith("ckpt_") for p in os.listdir(root)),
                 sorted(t.name for t in spark.catalog.listTables()))
 
     before = state()
