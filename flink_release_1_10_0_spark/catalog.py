@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_release_1_10_0_spark.session import session_memo
+from flink_release_1_10_0_spark.session import session_cached
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -72,7 +72,7 @@ def register_tables(spark: SparkSession, sf_dir: str,
 # of pure driver gap per call; a bench run makes ~170 such calls).  The
 # memoized value is an analyzed scan PLAN, not data: every action against
 # it still reads the parquet inputs through the normal scan path.  The
-# memo is per session (``session.session_memo``), so a new session never
+# memo is per session (``session.session_cached``), so a new session never
 # sees a stale entry.
 
 
@@ -84,19 +84,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microsecond
     timestamps — matching DuckDB's nanos->micros truncation.
     """
-    memo = session_memo(spark, "catalog.load")
-    key = (os.path.realpath(sf_dir), name)
-    df = memo.get(key) if memo is not None else None
-    if df is not None:
-        return df
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
+    def read() -> DataFrame:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if name != "events":
+            return spark.read.parquet(path)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_time(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    if memo is not None:
-        if len(memo) > 256:         # bound driver memory
-            memo.clear()
-        memo[key] = df
-    return df
+        return normalize_event_time(spark.read.parquet(path))
+
+    return session_cached(spark, "catalog.load",
+                          (os.path.realpath(sf_dir), name), read)

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_release_1_10_0_spark.session import session_memo
+from flink_release_1_10_0_spark.session import session_cached
 
 #: canonical tokenizer (Spark SQL expression over a column name)
 def words_expr(col: str = "text") -> str:
@@ -52,7 +52,7 @@ def hash128_expr(s: str, method: str = "md5") -> str:
 
 
 # planned-partition-count memo for ensure_min_parallelism, per session
-# (``session.session_memo``) and keyed on the canonicalized plan's
+# (``session.session_cached``) and keyed on the canonicalized plan's
 # semantic hash.  The count is a PLAN PROPERTY (like Catalyst's own
 # file-listing cache), not a query result:
 # every bench/oracle run still computes from the parquet inputs.  It
@@ -81,20 +81,13 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     nested entries plan the same frame once."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    memo = session_memo(df.sparkSession, "llm.min_parallelism")
-    key = None
-    if memo is not None:
-        try:
-            key = (target, df._jdf.queryExecution().logical().semanticHash())
-        except Exception:
-            pass    # non-JVM frame shape: fall through, no memo
-    n = memo.get(key) if key is not None else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(memo) > 4096:          # bound driver memory
-                memo.clear()
-            memo[key] = n
+    try:
+        key = (target, df._jdf.queryExecution().logical().semanticHash())
+    except Exception:
+        key = None    # non-JVM frame shape: no memo
+    n = (df.rdd.getNumPartitions() if key is None else
+         session_cached(df.sparkSession, "llm.min_parallelism", key,
+                        lambda: df.rdd.getNumPartitions(), limit=4096))
     if n < target:
         return df.repartition(target)
     return df

@@ -54,6 +54,21 @@ def session_memo(spark: SparkSession, name: str) -> dict | None:
     return memos.setdefault(name, {})
 
 
+def session_cached(spark: SparkSession, name: str, key, build,
+                   limit: int = 256):
+    """``build()``, kept under ``key`` in ``spark``'s memo ``name``
+    (cleared past ``limit`` entries to bound driver memory; not kept
+    when the session has no JVM handle)."""
+    memo = session_memo(spark, name)
+    if memo is None:
+        return build()
+    if key not in memo:
+        if len(memo) > limit:
+            memo.clear()
+        memo[key] = build()
+    return memo[key]
+
+
 # Scratch roots made by this process, one per session, removed at exit.
 _SCRATCH_ROOTS: list[str] = []
 
@@ -91,15 +106,14 @@ def _executor_pythonpath() -> str:
 
 
 def get_spark(app_name: str = "flink_release_1_10_0_spark",
-              cpus: int | None = None, ui: bool = False) -> SparkSession:
+              cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a session tuned for local testing, cluster-safe.
 
     Every conf here is also correct on a 1000-executor cluster except
     ``master``/``shuffle.partitions``, which a cluster deployment overrides
     via spark-submit; AQE coalescing makes the static shuffle-partition
-    number mostly irrelevant at scale.  ``ui=True`` turns the Spark UI
-    (and its REST API) on, for profiling tools; every other conf is the
-    same, so they profile the plans and workers that everything else runs.
+    number mostly irrelevant at scale.  The Spark UI is off: run reports
+    come from ``metrics.measure``, which reads the status stores directly.
     """
     n = cpus or DEFAULT_CPUS
     builder = (
@@ -130,7 +144,7 @@ def get_spark(app_name: str = "flink_release_1_10_0_spark",
         # but region/nation/part subsets stay broadcastable)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", str(ui).lower())
+        .config("spark.ui.enabled", "false")
         # Python workers fork from the package's daemon (pyworker.py).
         # Under the stock daemon every task re-reads the directories of
         # pyspark.zip, the py4j zip and the spark-core jar (~26.7k

@@ -45,7 +45,6 @@ import time
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -194,8 +193,9 @@ def write(df: DataFrame, url: str, table: str, mode: str = "append",
     """JDBCAppendTableSink / JDBCUpsertTableSink analog: each task
     writes its partition over its own connection; ``mode="upsert"`` uses
     INSERT OR REPLACE keyed on the table's primary key.  Returns the
-    number of rows written: the per-partition counts, summed in one
-    single-partition aggregate (a scalar reaches the driver, no rows)."""
+    number of rows written: one count per partition reaches the driver
+    (no data rows), summed there, so the write is one stage with no
+    exchange."""
     if mode not in ("append", "upsert"):
         raise ValueError(f"dbapi.write mode must be append|upsert: {mode}")
     verb = "INSERT OR REPLACE" if mode == "upsert" else "INSERT"
@@ -207,7 +207,7 @@ def write(df: DataFrame, url: str, table: str, mode: str = "append",
         yield pa.RecordBatch.from_pydict({"rows": pa.array([n], pa.int64())})
 
     counts = df.mapInArrow(write_partition, "rows bigint")
-    return counts.agg(F.sum("rows")).first()[0] or 0
+    return sum(r.rows for r in counts.collect())
 
 
 def create_table(url: str, ddl: str) -> None:

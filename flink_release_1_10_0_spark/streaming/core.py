@@ -23,7 +23,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import scratch_dir
+from ..session import scratch_dir, session_cached
 
 _counter = itertools.count()
 
@@ -49,7 +49,10 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    # the file schema, once per session: reading it runs a schema job
+    schema = session_cached(spark, "core.read_stream_table",
+                            os.path.realpath(path),
+                            lambda: spark.read.parquet(path).schema)
     if os.path.isdir(path):
         # table stored as a directory of part files (e.g. the scale
         # sweep's synthesized tiers): stream the directory itself

@@ -140,10 +140,6 @@ def _tokenize(s: str) -> list[tuple[str, object]]:
     return out
 
 
-def _is_null(v) -> bool:
-    return v is None
-
-
 _CMP_OPS = {"=": operator.eq, "<>": operator.ne, "!=": operator.ne,
             "<": operator.lt, "<=": operator.le,
             ">": operator.gt, ">=": operator.ge}

@@ -118,7 +118,10 @@ def test_no_driver_side_collect_in_package():
     # n_merges-row model table to fold into a map-side expression —
     # chaining these lazily instead would duplicate the aggregation
     # subtree per iteration (plans are trees), an exponential blowup.
-    allow = {"streaming/queryable.py", "llm/bpe.py"}
+    # sources/dbapi.py's write collects one row count per partition
+    # (never data rows) and sums them on the driver: a distributed sum
+    # would add an exchange and a stage to every write.
+    allow = {"streaming/queryable.py", "llm/bpe.py", "sources/dbapi.py"}
     offenders = [str(p) for p in root.rglob("*.py")
                  if pat.search(p.read_text())
                  and str(p.relative_to(root)) not in allow]
@@ -145,6 +148,25 @@ def test_sessions_built_only_by_get_spark():
         offenders = [str(p.relative_to(root)) for p in files
                      if re.search(pattern, p.read_text())]
         assert offenders == ["flink_release_1_10_0_spark/session.py"], pattern
+
+
+def test_no_spark_ui_reads():
+    """Guard: run reports come from ``metrics.measure`` (status stores
+    read through py4j), so no package or tools/ module reads the Spark
+    UI or its REST API, and ``get_spark`` has no switch to turn it on."""
+    import inspect
+    import pathlib
+    import re
+
+    from flink_release_1_10_0_spark.session import get_spark
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [*(root / "flink_release_1_10_0_spark").rglob("*.py"),
+             *(root / "tools").rglob("*.py")]
+    offenders = [str(p.relative_to(root)) for p in files
+                 if re.search(r"uiWebUrl|/api/v1/", p.read_text())]
+    assert offenders == []
+    assert "ui" not in inspect.signature(get_spark).parameters
 
 
 @given(vals=st.lists(st.integers(min_value=0, max_value=9),

@@ -527,13 +527,13 @@ def test_bounded_runs_leave_no_checkpoints_or_views(spark, name):
 
 
 def test_latency_tracker_captures_trigger_histogram(spark):
-    """LatencyMarker analog (streaming/metrics.py): per-trigger latency
+    """LatencyMarker analog (metrics.py): per-trigger latency
     metrics captured via StreamingQueryListener during a bounded run."""
     import time
 
     from flink_release_1_10_0_spark.streaming.core import (
         read_stream_table, run_to_completion)
-    from flink_release_1_10_0_spark.streaming.metrics import LatencyTracker
+    from flink_release_1_10_0_spark.metrics import LatencyTracker
 
     tracker = LatencyTracker().attach(spark)
     try:

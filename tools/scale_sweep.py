@@ -27,12 +27,12 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from flink_release_1_10_0_spark.metrics import measure
 from flink_release_1_10_0_spark.queries import all_queries
 from flink_release_1_10_0_spark.session import get_spark
 
@@ -319,7 +319,8 @@ def build_sf1(spark, base: str) -> str:
     return out
 
 
-def time_cc(spark, tier_dir: str, replicate: bool) -> float:
+def time_cc(spark, tier_dir: str, replicate: bool, tier: str,
+            name: str) -> float:
     """graph_connected_components at each tier.  CC is pointer-doubling:
     O(E) work per round, O(log diameter) rounds.  The sf1 tier
     replicates the sf0.1 edge set 10x with per-copy vertex offsets —
@@ -338,23 +339,16 @@ def time_cc(spark, tier_dir: str, replicate: bool) -> float:
                  .select((F.col("src") + F.col("copy") * 1_000_000).alias("src"),
                          (F.col("dst") + F.col("copy") * 1_000_000).alias("dst")))
     edges = edges.localCheckpoint()   # time the operator, not the edge build
-
-    def run():
-        connected_components(edges).write.format("noop") \
-            .mode("overwrite").save()
-    run()  # warm
-    t0 = time.perf_counter()
-    run()
-    return round(time.perf_counter() - t0, 3)
+    return warm_wall(spark, lambda: connected_components(edges), tier, name)
 
 
-def time_head(spark, qs, name, sf_dir) -> float:
-    def run():
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    run()  # warm
-    t0 = time.perf_counter()
-    run()
-    return round(time.perf_counter() - t0, 3)
+def warm_wall(spark, build, tier: str, name: str) -> float:
+    """Wall seconds of the second (warmed) run of the frame ``build``
+    returns, through the noop sink (``metrics.measure``); printed too."""
+    measure(spark, build)
+    secs = round(measure(spark, build)["wall_s"], 3)
+    print(f"{tier:12s} {name:34s} {secs:8.3f}s", flush=True)
+    return secs
 
 
 def main():
@@ -373,9 +367,8 @@ def main():
         for name, _bound in HEADS:
             if name not in qs:
                 continue
-            secs = time_head(spark, qs, name, tier_dir)
-            results[name][tier_name] = secs
-            print(f"{tier_name:12s} {name:34s} {secs:8.3f}s", flush=True)
+            results[name][tier_name] = warm_wall(
+                spark, lambda: qs[name](spark, tier_dir), tier_name, name)
 
     print("building sf10 (100x) tier for the risky heads...", flush=True)
     sf10 = build_sf10(spark, base)
@@ -383,17 +376,15 @@ def main():
     for name in HEADS_100X:
         if name not in qs:
             continue
-        secs = time_head(spark, qs, name, sf10)
-        results_100[name] = secs
-        print(f"{'sf10 (synth)':12s} {name:34s} {secs:8.3f}s", flush=True)
+        results_100[name] = warm_wall(
+            spark, lambda: qs[name](spark, sf10), "sf10 (synth)", name)
 
     cc_name = "graph_connected_components (operator)"
     bounds[cc_name] = "n·log(diameter); diameter fixed -> linear"
     results[cc_name] = {}
     for tier_name, tier_dir in tiers:
-        secs = time_cc(spark, tier_dir, replicate=tier_name.startswith("sf1"))
-        results[cc_name][tier_name] = secs
-        print(f"{tier_name:12s} {cc_name:34s} {secs:8.3f}s", flush=True)
+        results[cc_name][tier_name] = time_cc(
+            spark, tier_dir, tier_name.startswith("sf1"), tier_name, cc_name)
 
     # SRP embedding dedup: candidates scale as n^2 / 2^planes per band,
     # so the documented contract is planes_per_band ~ log2(n) — the
@@ -408,17 +399,10 @@ def main():
     for tier_name, tier_dir, planes in [("sf0.1", SRC, 4),
                                         ("sf1 (synth)", sf1, 8)]:
         emb = spark.read.parquet(f"{tier_dir}/embeddings.parquet")
-
-        def run():
-            embedding_srp_pairs(emb, planes_per_band=planes, n_bands=4,
-                                threshold=0.35) \
-                .write.format("noop").mode("overwrite").save()
-        run()  # warm
-        t0 = time.perf_counter()
-        run()
-        results[srp_name][tier_name] = round(time.perf_counter() - t0, 3)
-        print(f"{tier_name:12s} {srp_name:34s} "
-              f"{results[srp_name][tier_name]:8.3f}s", flush=True)
+        results[srp_name][tier_name] = warm_wall(
+            spark, lambda: embedding_srp_pairs(
+                emb, planes_per_band=planes, n_bands=4, threshold=0.35),
+            tier_name, srp_name)
 
     # SemDeDup with the production lever: k derived from a fixed target
     # cluster size, so the within-cluster pair space stays ~n*target/2
@@ -432,17 +416,10 @@ def main():
     from flink_release_1_10_0_spark.llm.dedup import semantic_dedup_pairs
     for tier_name, tier_dir in [("sf0.1", SRC), ("sf1 (synth)", sf1)]:
         emb2 = spark.read.parquet(f"{tier_dir}/embeddings.parquet")
-
-        def run_sem():
-            semantic_dedup_pairs(emb2, k=None, target_cluster_size=250,
-                                 threshold=0.35) \
-                .write.format("noop").mode("overwrite").save()
-        run_sem()  # warm
-        t0 = time.perf_counter()
-        run_sem()
-        results[sem_name][tier_name] = round(time.perf_counter() - t0, 3)
-        print(f"{tier_name:12s} {sem_name:34s} "
-              f"{results[sem_name][tier_name]:8.3f}s", flush=True)
+        results[sem_name][tier_name] = warm_wall(
+            spark, lambda: semantic_dedup_pairs(
+                emb2, k=None, target_cluster_size=250, threshold=0.35),
+            tier_name, sem_name)
 
     # SemDeDup SURVIVORS with the production lever (round-9 verdict ask
     # #5: the survivors head had no sweep row): pairs + CC + keep-min +
@@ -466,14 +443,9 @@ def main():
             losers = (clusters
                       .filter(F.col("doc_id") != F.col("cluster_id"))
                       .select(F.col("doc_id").alias("vec_id")))
-            emb3.join(losers, "vec_id", "left_anti").select("vec_id") \
-                .write.format("noop").mode("overwrite").save()
-        run_surv()  # warm
-        t0 = time.perf_counter()
-        run_surv()
-        results[surv_name][tier_name] = round(time.perf_counter() - t0, 3)
-        print(f"{tier_name:12s} {surv_name:34s} "
-              f"{results[surv_name][tier_name]:8.3f}s", flush=True)
+            return emb3.join(losers, "vec_id", "left_anti").select("vec_id")
+        results[surv_name][tier_name] = warm_wall(
+            spark, run_surv, tier_name, surv_name)
 
     # SemDeDup INCREMENTAL (round-9 verdict ask #4's sweep row): corpus
     # index 10x (geometry-scaled k), batch = the %17 slice of the same
@@ -495,16 +467,10 @@ def main():
         rows4 = rows4.localCheckpoint()   # the persisted-index standin:
         cents4 = cents4.localCheckpoint()  # time the INGEST, not the build
 
-        def run_inc():
-            semantic_incremental_pairs(rows4, cents4, new4,
-                                       threshold=0.35) \
-                .write.format("noop").mode("overwrite").save()
-        run_inc()  # warm
-        t0 = time.perf_counter()
-        run_inc()
-        results[inc_name][tier_name] = round(time.perf_counter() - t0, 3)
-        print(f"{tier_name:12s} {inc_name:34s} "
-              f"{results[inc_name][tier_name]:8.3f}s", flush=True)
+        results[inc_name][tier_name] = warm_wall(
+            spark, lambda: semantic_incremental_pairs(
+                rows4, cents4, new4, threshold=0.35),
+            tier_name, inc_name)
 
     lines = [
         "# Scale sweep",
